@@ -135,22 +135,22 @@ def inspect(args) -> None:
     (reference reader.py:164-198), no Spark session."""
     from .scbf.reader_api import SCBFReader
 
-    r = SCBFReader(args.file_path)
-    print(f"rows: {r.num_rows}")
-    for name, tp in r.schema().items():
-        print(f"  {name}: {tp}")
-    if args.head:
-        if args.cols:
-            data = r.read_columns(args.cols)
-            for k, v in data.items():
-                print(f"--- Column: {k} ({len(v)} rows) ---")
-                print(v[: args.head])
-        else:
-            names, rows = r.read_all()
-            print("Columns:", names)
-            print(f"First {args.head} rows:")
-            for row in rows[: args.head]:
-                print(row)
+    with SCBFReader(args.file_path) as r:
+        print(f"rows: {r.num_rows}")
+        for name, tp in r.schema().items():
+            print(f"  {name}: {tp}")
+        if args.head:
+            if args.cols:
+                data = r.read_columns(args.cols)
+                for k, v in data.items():
+                    print(f"--- Column: {k} ({len(v)} rows) ---")
+                    print(v[: args.head])
+            else:
+                names, rows = r.read_all()
+                print("Columns:", names)
+                print(f"First {args.head} rows:")
+                for row in rows[: args.head]:
+                    print(row)
 
 
 def compact_cmd(args) -> None:

@@ -97,7 +97,11 @@ def connected_components(
     ids (Python and Spark order strings differently); above the cap — the
     100 TB regime for from-scratch corpus closures — the distributed loop
     runs unchanged, and the collect is bounded by the cap."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    # a NULL endpoint is no edge: drop it before either path (the driver-side
+    # union-find cannot order None against ids)
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
+        F.col("a").isNotNull() & F.col("b").isNotNull()
+    )
     # symmetrize once; both directions feed every round. ONE pass over the
     # edge pipeline (r11, guide §2.4): explode [(a,b),(b,a)] — identical
     # rows to union(e, reversed), but the upstream edge computation (often

@@ -28,7 +28,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.scbf_datasource import _file_version
+from ..scbf.reader_api import SCBFReader
 from . import vacuum as _vacuum
 from ._staging import is_scratch_component, staging_path
 
@@ -82,7 +82,10 @@ def compact(
         files = sorted(glob.glob(os.path.join(d, "*.scbf")))
         if not files:
             continue
-        version = str(max(_file_version(p) for p in files))
+        version = 1
+        for p in files:
+            with SCBFReader(p) as h:
+                version = max(version, h.version)
         df: DataFrame = spark.read.format("scbf").load(d)
         if rows_per_file is not None:
             n = df.count()
@@ -104,9 +107,9 @@ def compact(
             df = df.coalesce(n_out) if n_out < len(files) else df.repartition(n_out)
 
         staging = staging_path(d, ".compact-tmp")
-        w = df.write.format("scbf").option("version", version).mode("overwrite")
+        w = df.write.format("scbf").option("version", str(version)).mode("overwrite")
         if rows_per_group:
-            if version != "2":
+            if version != 2:
                 raise ValueError("rows_per_group requires a v2 dataset")
             w = w.option("rows_per_group", str(rows_per_group))
         w.save(staging)

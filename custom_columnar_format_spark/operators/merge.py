@@ -8,8 +8,9 @@ mutable table format ships.
 
 Scale design (what Delta/Iceberg/Hudi do, expressed over SCBF v2):
 - The source's / deletion set's key bounds are checked against every target
-  file's footer min/max stats (``codec_v2.file_may_match`` — the same check
-  the DataSource's filter pushdown uses). Files that PROVABLY contain no
+  file's footer min/max stats (``SCBFReader.may_match`` — the same check
+  the DataSource's filter pushdown uses; v1 files have no stats and are
+  always touched). Files that PROVABLY contain no
   matching key are **carried over without being read or rewritten** — at
   100 TB with a narrow change set, that's almost all of them.
 - Only the possibly-touched files are read, anti-joined against the keys
@@ -37,12 +38,22 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..scbf import codec_v2
+from ..scbf.reader_api import SCBFReader
 from . import vacuum as _vacuum
 from ._staging import staging_path
 
 
 def _target_files(path: str) -> list[str]:
     return sorted(glob.glob(os.path.join(path, "*.scbf")))
+
+
+def _rows(files: Sequence[str]) -> int:
+    """Total row count from footers/headers alone — no data blocks read."""
+    total = 0
+    for p in files:
+        with SCBFReader(p) as h:
+            total += h.num_rows
+    return total
 
 
 def split_touched_files(
@@ -55,12 +66,8 @@ def split_touched_files(
     probe = [GreaterThanOrEqual((key,), key_min), LessThanOrEqual((key,), key_max)]
     touched, untouched = [], []
     for p in files:
-        try:
-            meta = codec_v2.read_meta(p)
-        except Exception:
-            touched.append(p)  # unknown/v1 file: rewrite conservatively
-            continue
-        (touched if codec_v2.file_may_match(meta, probe) else untouched).append(p)
+        with SCBFReader(p) as h:
+            (touched if h.may_match(probe) else untouched).append(p)
     return touched, untouched
 
 
@@ -90,14 +97,14 @@ def _cow_rewrite(
     n_files: int,
     rows_per_group: Optional[int],
     broadcast_keys: Optional[bool],
-) -> Optional[int]:
+) -> int:
     """Shared copy-on-write rewrite used by merge_into and delete_keys:
     stage the touched files, LEFT ANTI-join them against the key set,
     optionally union ``extra_rows`` (MERGE's source), write staged, carry
     untouched files over byte-identical, swap last when in-place.
 
-    Returns the number of rows written to the rewritten files when that is
-    known from footers alone (all staged files are v2), else None.
+    Returns the number of rows written to the rewritten files (from their
+    footers alone).
     """
     final_dest = out_path or target_path
     # hidden-sibling scratch (operators/_staging.py): invisible to the
@@ -130,7 +137,7 @@ def _cow_rewrite(
     shutil.rmtree(link_dir, ignore_errors=True)
 
     schema = spark.read.format("scbf").load(target_path).schema
-    rows_written: Optional[int] = None
+    rows_written = 0
     if touched or extra_rows is not None:
         if touched:
             # The DataSource reads directories — stage the touched files as
@@ -164,13 +171,7 @@ def _cow_rewrite(
             w = w.option("rows_per_group", str(rows_per_group))
         w.save(staging)
         shutil.rmtree(link_dir, ignore_errors=True)
-        try:  # footer-only row count of what was just written (all v2)
-            rows_written = sum(
-                codec_v2.read_meta(p)["rows"]
-                for p in glob.glob(os.path.join(staging, "*.scbf"))
-            )
-        except Exception:
-            rows_written = None
+        rows_written = _rows(glob.glob(os.path.join(staging, "*.scbf")))
 
     for p in untouched:
         shutil.copy2(p, os.path.join(staging, os.path.basename(p)))
@@ -263,8 +264,8 @@ def delete_keys(
       empty deletion set still materializes ``out_path`` (a full copy) when
       one is given — the output dataset always exists.
 
-    ``rows_deleted`` comes from footer row counts alone when every touched
-    file is v2 (no extra Spark job); mixed v1 datasets pay one count pass.
+    ``rows_deleted`` comes from footer/header row counts alone (no extra
+    Spark job).
 
     Returns {files_total, files_rewritten, files_carried_over,
     rows_deleted}."""
@@ -279,23 +280,7 @@ def delete_keys(
     else:
         touched, untouched = split_touched_files(files, key, b.mn, b.mx)
 
-    # rows in the touched set, from footers when possible (v2), else one scan
-    rows_before = 0
-    need_count = False
-    for p in touched:
-        try:
-            rows_before += codec_v2.read_meta(p)["rows"]
-        except Exception:
-            need_count = True
-            break
-    if need_count:
-        rel = ",".join(os.path.basename(p) for p in touched)
-        rows_before = (
-            spark.read.format("scbf").option("files", rel).load(target_path).count()
-            if touched
-            else 0
-        )
-
+    rows_before = _rows(touched)
     rows_written = _cow_rewrite(
         spark,
         target_path,
@@ -309,20 +294,6 @@ def delete_keys(
         rows_per_group,
         broadcast_keys,
     )
-    if touched and rows_written is None:  # staged footers unreadable: count
-        read_path = out_path or target_path
-        carried = {os.path.basename(p) for p in untouched}
-        staged = [
-            p
-            for p in _target_files(read_path)
-            if os.path.basename(p) not in carried
-        ]
-        rel = ",".join(os.path.basename(p) for p in staged)
-        rows_written = (
-            spark.read.format("scbf").option("files", rel).load(read_path).count()
-            if staged
-            else 0
-        )
     rows_deleted = (rows_before - rows_written) if touched else 0
 
     return {

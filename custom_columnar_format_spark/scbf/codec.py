@@ -26,6 +26,7 @@ This module has NO Spark dependency — it is shared by the Spark DataSource V2
 
 from __future__ import annotations
 
+import contextlib
 import json
 import struct
 import zlib
@@ -294,6 +295,15 @@ def write_table_path(
 # ---------------------------------------------------------------------------
 
 
+def _opened(src):
+    """Context manager over a readable binary file: ``src`` is a path (opened
+    here, closed on exit) or an already-open file (left open for its owner,
+    so one file handle serves a footer parse and every block read)."""
+    if hasattr(src, "read"):
+        return contextlib.nullcontext(src)
+    return open(src, "rb")
+
+
 def read_file_info(f: BinaryIO) -> ScbfFileInfo:
     """Parse header + full metadata table (SPEC.md:28-80)."""
     f.seek(0)
@@ -359,7 +369,7 @@ def read_columns(path: str, columns: Sequence[str]) -> Dict[str, Any]:
     unknown name, as the reference does. With duplicate column names, the
     last duplicate wins (reference reader.py:120 dict collapse).
     """
-    with open(path, "rb") as f:
+    with _opened(path) as f:
         info = read_file_info(f)
         meta_map = info.column_map()
         out: Dict[str, Any] = {}
@@ -376,7 +386,7 @@ def read_columns(path: str, columns: Sequence[str]) -> Dict[str, Any]:
 
 def read_all(path: str) -> Tuple[List[str], List[List[Any]]]:
     """Full read, pivoted to rows — parity with reference reader.py:135-161."""
-    with open(path, "rb") as f:
+    with _opened(path) as f:
         info = read_file_info(f)
         names = [m.name for m in info.columns]
         cols: List[List[Any]] = []
@@ -389,18 +399,22 @@ def read_all(path: str) -> Tuple[List[str], List[List[Any]]]:
         return names, rows
 
 
-def read_arrow_table(path: str, columns: Optional[Sequence[str]] = None):
+def read_arrow_table(
+    path, columns: Optional[Sequence[str]] = None, info: Optional[ScbfFileInfo] = None
+):
     """Read an SCBF file into a ``pyarrow.Table``, pruning to ``columns``.
 
     SCBF's utf8 layout (u32 prefix-sum offsets + blob) is identical to Arrow's
     StringArray buffers, so string columns are constructed without re-copying
     per value; numeric columns come from zero-copy ``frombuffer`` views.
-    This is the fast path used by the Spark DataSource.
+    This is the fast path used by the Spark DataSource. ``path`` may be an
+    open binary file, and ``info`` its already-parsed header.
     """
     import pyarrow as pa
 
-    with open(path, "rb") as f:
-        info = read_file_info(f)
+    with _opened(path) as f:
+        if info is None:
+            info = read_file_info(f)
         meta_map = info.column_map()
         if columns is None:
             selected = [m.name for m in info.columns]

@@ -48,6 +48,8 @@ from typing import Any, BinaryIO, Dict, List, Optional, Sequence
 
 import numpy as np
 
+from .codec import _opened
+
 MAGIC_V2 = b"SCBFv2\x00\x00"
 
 V2_TYPES = ("int32", "int64", "float64", "bool", "utf8")
@@ -219,14 +221,20 @@ def _bloom_of(values, type_name: str) -> Optional[dict]:
 
 
 def bloom_contains(bloom: dict, value, type_name: str) -> bool:
-    """May-contain test against a stored filter (False = provably absent)."""
+    """May-contain test against a stored filter (False = provably absent).
+
+    The decoded bit array is memoized on ``bloom`` itself (key ``_bits``), so
+    a footer parsed once decodes each filter at most once however many
+    values and filters probe it."""
     import base64
 
     m, k = bloom["m"], bloom["k"]
-    bits = np.unpackbits(
-        np.frombuffer(zlib.decompress(base64.b64decode(bloom["bits"])), dtype=np.uint8),
-        bitorder="little",
-    )
+    bits = bloom.get("_bits")
+    if bits is None:
+        bits = bloom["_bits"] = np.unpackbits(
+            np.frombuffer(zlib.decompress(base64.b64decode(bloom["bits"])), dtype=np.uint8),
+            bitorder="little",
+        )
     return all(bits[pos] for pos in _bloom_hashes(_bloom_value_bytes(value, type_name), k, m))
 
 
@@ -438,9 +446,10 @@ def write_arrow_table(
         f.write(MAGIC_V2)
 
 
-def read_meta(path: str) -> dict:
-    """Footer metadata of a v2 file (EOF-ranged read, no data blocks touched)."""
-    with open(path, "rb") as f:
+def read_meta(path) -> dict:
+    """Footer metadata of a v2 file (EOF-ranged read, no data blocks touched).
+    ``path`` may be an open binary file, which stays open."""
+    with _opened(path) as f:
         f.seek(0)
         if f.read(8) != MAGIC_V2:
             raise ScbfV2Error("bad magic: not an SCBF v2 file")
@@ -467,11 +476,12 @@ _PA_TYPES = {"int32": "int32", "int64": "int64", "float64": "float64", "bool": "
 
 
 def read_arrow_table(
-    path: str,
+    path,
     columns: Optional[Sequence[str]] = None,
     verify_crc: bool = True,
     filters: Optional[Sequence[Any]] = None,
     group_indices: Optional[Sequence[int]] = None,
+    meta: Optional[dict] = None,
 ):
     """Pruned Arrow read of a v2 file. Validity bitmaps and string buffers go
     to Arrow as raw buffers (the on-disk layout IS Arrow's layout).
@@ -487,28 +497,33 @@ def read_arrow_table(
     ``group_indices`` restricts the read to those groups of a grouped file —
     the SPLIT primitive: the DataSource plans one input partition per group
     so executors scan a single large compacted file in parallel (Parquet's
-    row-group split model). Composes with ``filters`` (intersection)."""
+    row-group split model). Composes with ``filters`` (intersection). An
+    ungrouped file is the single group 0.
+
+    ``path`` may be an open binary file, and ``meta`` its already-parsed
+    footer (``read_meta``), so a caller holding both reads no footer again."""
     import pyarrow as pa
 
-    meta = read_meta(path)
+    if meta is None:
+        meta = read_meta(path)
     codec = meta.get("codec", "zlib")  # absent in pre-codec files
     if codec not in BLOCK_CODECS:
         raise ScbfV2Error(f"file uses unknown codec {codec!r}; have {sorted(BLOCK_CODECS)}")
     selected = list(columns) if columns is not None else [c["name"] for c in meta["columns"]]
+    # per-group nullability can differ (one group has nulls, another
+    # doesn't); concat needs one schema, so force the file-level flags
+    nullable = {c["name"]: bool(c["nullable"]) for c in meta["columns"]}
 
     groups = meta.get("row_groups")
-    with open(path, "rb") as f:
-        if groups is None:
-            if group_indices is not None and list(group_indices) != [0]:
-                raise ScbfV2Error(
-                    f"group_indices {list(group_indices)!r} on an ungrouped file "
-                    "(only [0] is valid)"
-                )
-            return _read_group(f, codec, meta["columns"], meta["rows"], selected, verify_crc)
-        # per-group nullability can differ (one group has nulls, another
-        # doesn't); concat needs one schema, so force the file-level flags
-        nullable = {c["name"]: bool(c["nullable"]) for c in meta["columns"]}
-        want = range(len(groups)) if group_indices is None else group_indices
+    if groups is None:
+        if group_indices is not None and any(i != 0 for i in group_indices):
+            raise ScbfV2Error(
+                f"group_indices {list(group_indices)!r} on an ungrouped file "
+                "(only [0] is valid)"
+            )
+        groups, filters = [meta], None
+    want = range(len(groups)) if group_indices is None else group_indices
+    with _opened(path) as f:
         tables = [
             _read_group(
                 f, codec, groups[i]["columns"], groups[i]["rows"], selected, verify_crc, nullable
@@ -610,13 +625,15 @@ def file_may_match(meta: dict, filters: Sequence[Any]) -> bool:
 
 def _stats_may_match(columns_meta: Sequence[dict], rows: int, filters: Sequence[Any]) -> bool:
     """``file_may_match`` core over one block set's column metadata — used
-    per file (ungrouped) and per row group (grouped)."""
+    per file (ungrouped), per row group (grouped), and per hive partition
+    directory (its values as constant stats: min = max = value, no nulls)."""
     from pyspark.sql.datasource import (
         EqualTo,
         GreaterThan,
         GreaterThanOrEqual,
         In,
         IsNotNull,
+        IsNull,
         LessThan,
         LessThanOrEqual,
     )
@@ -632,7 +649,7 @@ def _stats_may_match(columns_meta: Sequence[dict], rows: int, filters: Sequence[
             bloom_by_col[c["name"]] = (c["bloom"], c["type"])
         if c.get("dvs") is not None:
             dvs_by_col[c["name"]] = set(c["dvs"])
-        nulls_by_col[c["name"]] = c.get("null_count", 0)
+        nulls_by_col[c["name"]] = c.get("null_count")
 
     for flt in filters:
         col = flt.attribute[0] if getattr(flt, "attribute", None) else None
@@ -640,7 +657,12 @@ def _stats_may_match(columns_meta: Sequence[dict], rows: int, filters: Sequence[
             continue
         st = stats_by_col.get(col)
         if isinstance(flt, IsNotNull):
-            if rows and nulls_by_col.get(col, 0) == rows:
+            if rows and nulls_by_col.get(col) == rows:
+                return False
+            continue
+        if isinstance(flt, IsNull):
+            # a column this block set lacks (schema evolution) reads as nulls
+            if col in nulls_by_col and nulls_by_col[col] == 0:
                 return False
             continue
         # Distinct-value-set check first: EXACT membership proof for = / IN

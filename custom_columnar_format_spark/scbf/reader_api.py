@@ -4,75 +4,133 @@ ships (reference README.md:67-89 documents an ``SCBFReader`` with
 exposes module functions — verified in SURVEY.md §3/EP3). This provides that
 exact API, plus Spark interop.
 
-Single-file operations go straight through the pure-Python codec (no JVM
-startup for a metadata peek); ``to_spark``/``SCBFDataset`` route through the
-DataSource V2 for distributed work on file directories."""
+``SCBFReader`` is also the engine's one handle on an SCBF file: the Spark
+DataSource plans and reads every file through it, so per-file work (open,
+footer parse, Bloom decode) happens once and no read path outside this
+class branches on the file version. Single-file operations go straight through the
+pure-Python codec (no JVM startup for a metadata peek);
+``to_spark``/``SCBFDataset`` route through the DataSource V2 for distributed
+work on file directories."""
 
 from __future__ import annotations
 
-from typing import Dict, List, Sequence, Tuple
+from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 from . import codec, codec_v2
 
 
 class SCBFReader:
-    """Reader for a single SCBF file — v1 or v2, auto-detected from the
-    magic, same surface for both (the reference defines only v1; v2 files
-    come back with their richer types and nulls as ``None``).
+    """The one handle on a single SCBF file, v1 or v2 — the Spark DataSource,
+    the MERGE/DELETE and compaction operators and the CLI all read through it.
 
-    >>> r = SCBFReader("examples/sample.scbf")
-    >>> r.list_columns()
+    Opening reads the magic and the footer (v2) or header (v1) once and keeps
+    the file open for block reads; v1 column info is normalized into the v2
+    footer shape (``meta``), so the schema, the row count and the ``groups``
+    view are the same for both versions (v2 files come back with their richer
+    types and nulls as ``None``). Use it as a context manager, or ``close()``.
+
+    >>> with SCBFReader("examples/sample.scbf") as r:
+    ...     r.list_columns()
     ['id', 'name', 'score']
-    >>> cols = r.read_columns(["id", "score"])
     """
 
     def __init__(self, path: str):
         self.path = path
-        with open(path, "rb") as f:
-            magic = f.read(8)
-        if magic == codec_v2.MAGIC_V2:
-            self.version = 2
-            self._meta = codec_v2.read_meta(path)
-        else:
-            self.version = 1
-            with open(path, "rb") as f:
-                self._info = codec.read_file_info(f)
+        self._f = open(path, "rb")
+        try:
+            magic = self._f.read(8)
+            if magic == codec_v2.MAGIC_V2:
+                self.version = 2
+                self.meta = codec_v2.read_meta(self._f)
+            elif magic == codec.MAGIC:
+                self.version = 1
+                self._info = codec.read_file_info(self._f)
+                self.meta = {
+                    "rows": self._info.total_rows,
+                    "columns": [
+                        {"name": m.name, "type": m.type_name, "nullable": False,
+                         "null_count": 0, "stats": None}
+                        for m in self._info.columns
+                    ],
+                }
+            else:
+                raise codec.ScbfError(f"{path}: not an SCBF file")
+        except BaseException:
+            self._f.close()
+            raise
+
+    def close(self) -> None:
+        self._f.close()
+
+    def __enter__(self) -> "SCBFReader":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
     # -- reference-README surface ------------------------------------------
     def list_columns(self) -> List[str]:
-        if self.version == 2:
-            return [c["name"] for c in self._meta["columns"]]
-        return [m.name for m in self._info.columns]
+        return [c["name"] for c in self.meta["columns"]]
 
     def schema(self) -> Dict[str, str]:
-        if self.version == 2:
-            return {c["name"]: c["type"] for c in self._meta["columns"]}
-        return {m.name: m.type_name for m in self._info.columns}
+        return {c["name"]: c["type"] for c in self.meta["columns"]}
 
     @property
     def num_rows(self) -> int:
-        return self._meta["rows"] if self.version == 2 else self._info.total_rows
+        return self.meta["rows"]
 
     def read_all(self) -> Tuple[List[str], List[List]]:
-        if self.version == 2:
-            t = codec_v2.read_arrow_table(self.path)
-            cols = [t.column(n).to_pylist() for n in t.column_names]
-            rows = [list(r) for r in zip(*cols)] if cols and t.num_rows else []
-            return list(t.column_names), rows
-        return codec.read_all(self.path)
+        if self.version == 1:
+            return codec.read_all(self._f)
+        t = self.to_arrow()
+        cols = [t.column(n).to_pylist() for n in t.column_names]
+        rows = [list(r) for r in zip(*cols)] if cols and t.num_rows else []
+        return list(t.column_names), rows
 
     def read_columns(self, columns: Sequence[str]) -> Dict[str, list]:
-        if self.version == 2:
-            t = codec_v2.read_arrow_table(self.path, list(columns))
-            # duplicate request names collapse dict-style, like the reference
-            return {n: t.column(n).to_pylist() for n in t.column_names}
-        return {k: list(v) for k, v in codec.read_columns(self.path, columns).items()}
+        if self.version == 1:
+            return {k: list(v) for k, v in codec.read_columns(self._f, columns).items()}
+        t = self.to_arrow(list(columns))
+        # duplicate request names collapse dict-style, like the reference
+        return {n: t.column(n).to_pylist() for n in t.column_names}
 
     # -- engine extensions --------------------------------------------------
-    def to_arrow(self, columns: Sequence[str] | None = None):
-        if self.version == 2:
-            return codec_v2.read_arrow_table(self.path, columns)
-        return codec.read_arrow_table(self.path, columns)
+    @property
+    def groups(self) -> List[dict]:
+        """Row groups as ``{"rows", "columns"}`` block sets; an ungrouped v2
+        file and every v1 file are the single group 0."""
+        return self.meta.get("row_groups") or [self.meta]
+
+    def may_match(self, filters: Sequence[Any], group: Optional[int] = None) -> bool:
+        """False only when the footer stats prove that no row of the file (or
+        of row group ``group``) matches the pushed ``filters``
+        (pyspark.sql.datasource Filters). Always True for v1, which stores no
+        stats. Bloom filters decode lazily, once per (group, column)."""
+        if self.version == 1 or not filters:
+            return True
+        if group is None:
+            return codec_v2.file_may_match(self.meta, filters)
+        g = self.groups[group]
+        return codec_v2._stats_may_match(g["columns"], g["rows"], filters)
+
+    def to_arrow(
+        self,
+        columns: Sequence[str] | None = None,
+        groups: Sequence[int] | None = None,
+        filters: Sequence[Any] | None = None,
+        verify_crc: bool = True,
+    ):
+        """Read ``columns`` (all by default) of row groups ``groups`` (all by
+        default) as a ``pyarrow.Table``, skipping every group ``filters``
+        prove cannot match. The result is a superset of the matching rows."""
+        if self.version == 1:
+            return codec.read_arrow_table(self._f, columns, info=self._info)
+        if filters:
+            want = range(len(self.groups)) if groups is None else groups
+            groups = [i for i in want if self.may_match(filters, i)]
+        return codec_v2.read_arrow_table(
+            self._f, columns, verify_crc=verify_crc, group_indices=groups, meta=self.meta
+        )
 
     def to_pandas(self, columns: Sequence[str] | None = None):
         return self.to_arrow(columns).to_pandas()

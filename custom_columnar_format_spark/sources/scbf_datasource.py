@@ -10,7 +10,8 @@ Registers format ``"scbf"`` so the full DataFrame API works against SCBF data:
 Design (Spark-first, NOT a translation of the reference's single-file engine):
 
 - **Dataset = directory of SCBF files** (or one file for reference compat).
-  A 100 TB dataset is many files; each file is one input partition, so a
+  A 100 TB dataset is many files; each file is one input partition (a
+  grouped file of at least ``split_bytes`` is one per row group), so a
   1000-executor cluster reads them fully in parallel. The reference's
   single-file, absolute-offset layout (reference SPEC.md:18-26) cannot be
   appended to concurrently, so parallel writes emit one ``part-*.scbf`` per
@@ -20,6 +21,11 @@ Design (Spark-first, NOT a translation of the reference's single-file engine):
   the schema Spark hands to ``DataSource.reader(schema)``. Whether Catalyst
   prunes that schema or not, the ``columns`` read option always prunes
   explicitly, and the codec never touches unrequested blocks.
+- **One file handle** — planning and reading go through
+  ``scbf.reader_api.SCBFReader``, which opens each file once, parses its
+  footer (v2) or header (v1) once and prunes with the one stats rule
+  (``codec_v2._stats_may_match``); this module never branches on the file
+  format, and hive directories prune under the same rule as constant stats.
 - **Arrow exchange** — ``read()`` yields ``pyarrow.RecordBatch`` (SCBF's utf8
   layout is Arrow's StringArray layout, so strings transfer without per-value
   copying); the writer is a ``DataSourceArrowWriter``.
@@ -57,30 +63,16 @@ from pyspark.sql.types import (
 )
 
 from ..scbf import codec, codec_v2
+from ..scbf.reader_api import SCBFReader
 
-SPARK_TYPE_FOR_CODE = {
-    codec.TYPE_INT32: IntegerType(),
-    codec.TYPE_FLOAT64: DoubleType(),
-    codec.TYPE_UTF8: StringType(),
-}
-
-SPARK_TYPE_FOR_V2 = {
+#: Spark type per SCBF column type name (v1's three types share v2's names)
+SPARK_TYPES = {
     "int32": IntegerType(),
     "int64": LongType(),
     "float64": DoubleType(),
     "bool": BooleanType(),
     "utf8": StringType(),
 }
-
-
-def _file_version(path: str) -> int:
-    with open(path, "rb") as f:
-        magic = f.read(8)
-    if magic == codec_v2.MAGIC_V2:
-        return 2
-    if magic == codec.MAGIC:
-        return 1
-    raise codec.ScbfError(f"{path}: not an SCBF file")
 
 
 def _under_scratch(root: str, file_path: str) -> bool:
@@ -220,95 +212,41 @@ def _dataset_layout(path: str, snapshot: Optional[str] = None, files_opt: Option
     return files, keys, key_types, dict(zip(files, typed))
 
 
-def _partition_may_match(values: dict, filters) -> bool:
-    """Partition pruning: False only when a pushed filter on a partition
-    column PROVES this file's directory can't match. Unknown filter shapes
-    are ignored (may-match); Spark re-applies every filter above the scan
-    anyway, so this is purely an I/O optimization."""
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        In,
-        IsNull,
-        LessThan,
-        LessThanOrEqual,
-    )
-
-    for flt in filters:
-        col = flt.attribute[0] if getattr(flt, "attribute", None) else None
-        if col is None or col not in values:
-            continue
-        v = values[col]
-        try:
-            if isinstance(flt, IsNull):
-                return False  # directory-encoded partition values are never null
-            if isinstance(flt, EqualTo) and v != flt.value:
-                return False
-            if isinstance(flt, GreaterThan) and not (v > flt.value):
-                return False
-            if isinstance(flt, GreaterThanOrEqual) and not (v >= flt.value):
-                return False
-            if isinstance(flt, LessThan) and not (v < flt.value):
-                return False
-            if isinstance(flt, LessThanOrEqual) and not (v <= flt.value):
-                return False
-            if isinstance(flt, In) and v not in flt.value:
-                return False
-        except TypeError:
-            continue
-    return True
+def _dir_stats(values: dict) -> list:
+    """A file's hive directory values as constant column stats (min = max =
+    value, no nulls), so the footer pruning rule (``codec_v2._stats_may_match``)
+    also prunes whole directories, without any file I/O."""
+    return [{"name": k, "null_count": 0, "stats": {"min": v, "max": v}} for k, v in values.items()]
 
 
-def _schema_of_file(path: str) -> StructType:
-    if _file_version(path) == 2:
-        # Dataset-level nullability must be True even when the sampled file
-        # happens to contain no nulls: a sibling partition file may carry
-        # nulls in the same column, and a nullable=False schema would make
-        # Spark's Arrow accessors crash on them. This mirrors Spark's own
-        # Parquet behavior (dataset schemas are always nullable).
-        meta = codec_v2.read_meta(path)
-        return StructType(
-            [
-                StructField(c["name"], SPARK_TYPE_FOR_V2[c["type"]], nullable=True)
-                for c in meta["columns"]
-            ]
-        )
-    with open(path, "rb") as f:
-        info = codec.read_file_info(f)
-    return StructType(
-        [
-            StructField(m.name, SPARK_TYPE_FOR_CODE[m.type_code], nullable=False)
-            for m in info.columns
-        ]
-    )
+def _file_fields(path: str) -> List[StructField]:
+    """A file's columns as Spark fields. Every field is nullable, even when
+    this file has no nulls: a sibling file may carry nulls in the same column,
+    and a nullable=False schema would make Spark's Arrow accessors crash on
+    them. This mirrors Spark's own Parquet behavior (dataset schemas are
+    always nullable)."""
+    with SCBFReader(path) as h:
+        return [StructField(c["name"], SPARK_TYPES[c["type"]], True) for c in h.meta["columns"]]
 
 
 class ScbfFilePartition(InputPartition):
-    def __init__(
-        self,
-        file_path: str,
-        part_values: dict | None = None,
-        groups: list | None = None,
-        n_rows: int | None = None,
-    ):
+    def __init__(self, file_path: str, part_values: dict | None = None, groups: list | None = None):
         self.file_path = file_path
         self.part_values = part_values or {}
-        # groups: row-group indices this split covers (None = whole file);
-        # n_rows: their row count, so column-less projections need no re-read
-        self.groups = groups
-        self.n_rows = n_rows
+        self.groups = groups  # row-group indices this split covers (None = whole file)
 
 
 class ScbfReader(DataSourceReader):
-    """One input partition per SCBF file; pruned Arrow-batch reads.
+    """Pruned Arrow-batch reads, one input partition per SCBF file — or one
+    per row group for a grouped file of at least ``split_bytes``.
 
-    v2 files additionally support **filter-pushdown file skipping**:
-    ``pushFilters`` records Spark's pushed predicates, and ``partitions()``
-    drops every file whose footer min/max stats prove it cannot match — the
-    DataSource-level analog of Parquet row-group pruning. All filters are
-    returned to Spark (we skip whole files, Spark still filters rows), so
-    semantics never depend on the stats."""
+    **Filter-pushdown skipping**: ``pushFilters`` records Spark's pushed
+    predicates, and ``partitions()`` drops every hive directory, file and
+    split row group that the one pruning rule (``codec_v2._stats_may_match``,
+    via ``SCBFReader.may_match``) proves cannot match; ``read()`` skips row
+    groups the same way. Files without stats (v1) are never skipped. All
+    filters are returned to Spark (we skip whole files and groups, Spark
+    still filters rows), so semantics never depend on the stats."""
 
     def __init__(self, schema: StructType, options):
         self.schema = schema
@@ -348,57 +286,47 @@ class ScbfReader(DataSourceReader):
         filters = self._filters if self.file_skipping else []
         files, _keys, _types, specs = _dataset_layout(self.path, self.snapshot, self.files_opt)
         # Partition pruning first (cheapest: no file I/O at all).
-        candidates = [
-            p
-            for p in files
-            if not (filters and specs[p] and not _partition_may_match(specs[p], filters))
-        ]
-        # Footer reads (one ranged read per v2 file needing stats pruning or
+        candidates = [p for p in files if codec_v2._stats_may_match(_dir_stats(specs[p]), 1, filters)]
+
+        def _split(p: str) -> list:
+            # Row-group SPLITTING: a big grouped file becomes one input
+            # partition per surviving group, so a single file scans in
+            # parallel across executors (Parquet's split model). Gated on
+            # file size so planning a many-small-files dataset stays one
+            # stat() per file with no footer reads when unfiltered.
+            big = os.path.getsize(p) >= self.split_bytes
+            if not (filters or big):
+                return [ScbfFilePartition(p, specs[p])]
+            with SCBFReader(p) as h:
+                if big and len(h.groups) > 1:
+                    return [
+                        ScbfFilePartition(p, specs[p], groups=[i])
+                        for i in range(len(h.groups))
+                        if h.may_match(filters, i)
+                    ]
+                return [ScbfFilePartition(p, specs[p])] if h.may_match(filters) else []
+
+        # Footer reads (one ranged read per file needing stats pruning or
         # split planning) are I/O-bound and independent — fetch them with a
         # thread pool, the way Parquet parallelizes driver-side footer reads.
         # Serial, a filtered plan over 100k files is tens of seconds of
         # planning; threaded it's bounded by storage round-trips / 16.
-        def _meta_of(p: str):
-            if (filters or os.path.getsize(p) >= self.split_bytes) and _file_version(p) == 2:
-                return codec_v2.read_meta(p)
-            return None
-
         if len(candidates) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=min(16, len(candidates))) as pool:
-                metas = list(pool.map(_meta_of, candidates))
+                per_file = list(pool.map(_split, candidates))
         else:
-            metas = [_meta_of(p) for p in candidates]
-
-        parts = []
-        for p, meta in zip(candidates, metas):
-            spec = specs[p]
-            if filters and meta is not None and not codec_v2.file_may_match(meta, filters):
-                continue
-            # Row-group SPLITTING: a big compacted file becomes one input
-            # partition per surviving group, so a single file scans in
-            # parallel across executors (Parquet's split model). Gated on
-            # file size so planning a many-small-files dataset stays one
-            # stat() per file with no footer reads.
-            groups = None if meta is None else meta.get("row_groups")
-            if groups and len(groups) > 1 and os.path.getsize(p) >= self.split_bytes:
-                for i, g in enumerate(groups):
-                    if filters and not codec_v2._stats_may_match(
-                        g["columns"], g["rows"], filters
-                    ):
-                        continue
-                    parts.append(ScbfFilePartition(p, spec, groups=[i], n_rows=g["rows"]))
-            else:
-                parts.append(ScbfFilePartition(p, spec))
+            per_file = [_split(p) for p in candidates]
+        parts = [part for ps in per_file for part in ps]
         # An all-files-skipped scan still needs one (empty) partition so the
         # negotiated schema flows through.
         return parts or [ScbfFilePartition("")]
 
     def read(self, partition: ScbfFilePartition):
         # Same filters that pruned whole files also prune row GROUPS inside
-        # each surviving v2 file (codec_v2.read_arrow_table skips groups
-        # whose stats/blooms prove no match — Parquet row-group pruning).
+        # each surviving file (SCBFReader.to_arrow skips groups whose
+        # stats/blooms prove no match — Parquet row-group pruning).
         yield from _read_file_partition(
             partition,
             self.schema,
@@ -413,7 +341,7 @@ def _merged_schema(files: Sequence[str]) -> StructType:
     fields must agree on type — widening casts are the caller's job."""
     fields: dict[str, StructField] = {}
     for p in files:
-        for f in _schema_of_file(p).fields:
+        for f in _file_fields(p):
             prev = fields.get(f.name)
             if prev is None:
                 fields[f.name] = StructField(f.name, f.dataType, nullable=True)
@@ -425,39 +353,6 @@ def _merged_schema(files: Sequence[str]) -> StructType:
     return StructType(list(fields.values()))
 
 
-def _file_column_info(path: str) -> tuple[set, int]:
-    """(column names, row count) from a file's footer/header — no data I/O."""
-    if _file_version(path) == 2:
-        meta = codec_v2.read_meta(path)
-        return {c["name"] for c in meta["columns"]}, meta["rows"]
-    with open(path, "rb") as f:
-        info = codec.read_file_info(f)
-    return {m.name for m in info.columns}, info.total_rows
-
-
-def _pa_type_for_spark(dt):
-    import pyarrow as pa
-
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StringType,
-    )
-
-    for spark_t, pa_t in (
-        (IntegerType, pa.int32()),
-        (LongType, pa.int64()),
-        (DoubleType, pa.float64()),
-        (BooleanType, pa.bool_()),
-        (StringType, pa.string()),
-    ):
-        if isinstance(dt, spark_t):
-            return pa_t
-    raise ValueError(f"no arrow type for spark type {dt}")
-
-
 def _read_file_partition(
     partition: ScbfFilePartition, schema: StructType, verify_crc: bool, filters=()
 ):
@@ -466,48 +361,38 @@ def _read_file_partition(
     columns the file predates (schema evolution under merge_schemas). Shared
     by the batch and streaming readers."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
     if not partition.file_path:
         return
-    columns = [f.name for f in schema.fields]
-    spark_types = {f.name: f.dataType for f in schema.fields}
+    columns = schema.fieldNames()
     part_values = partition.part_values
-    file_cols = [c for c in columns if c not in part_values]
-    avail, n = _file_column_info(partition.file_path)
-    present = [c for c in file_cols if c in avail]
-    missing = [c for c in file_cols if c not in avail]
-    is_v2 = _file_version(partition.file_path) == 2
-    if present:
-        if is_v2:
-            table = codec_v2.read_arrow_table(
-                partition.file_path, present, verify_crc=verify_crc,
-                filters=list(filters) or None,
-                group_indices=partition.groups,
-            )
+    with SCBFReader(partition.file_path) as h:
+        avail = set(h.list_columns())
+        present = [c for c in columns if c in avail and c not in part_values]
+        if present:
+            table = h.to_arrow(present, partition.groups, filters, verify_crc)
+            n = table.num_rows
         else:
-            table = codec.read_arrow_table(partition.file_path, present)
-        n = table.num_rows
-    else:
-        # No data blocks needed (partition-only / all-evolved projection):
-        # just the row count — the split's own count for a row-group
-        # partition, the footer total (already in hand) otherwise.
-        table = None
-        if partition.groups is not None:
-            n = partition.n_rows
-    if part_values or missing:
+            # No data blocks needed (partition-only / all-evolved projection):
+            # just the split's row count from the footer already in hand.
+            groups = range(len(h.groups)) if partition.groups is None else partition.groups
+            n = sum(h.groups[i]["rows"] for i in groups)
+    if present != columns:
         # Assemble in negotiated column order: file data, constant partition
         # values, and typed nulls for evolved columns this file predates.
         arrays = []
-        for c in columns:
+        for f in schema.fields:
+            c = f.name
             if c in part_values:
                 v = part_values[c]
                 typ = pa.int64() if isinstance(v, int) else pa.string()
                 # constant column without an n-element Python list round-trip
                 arrays.append(pa.repeat(pa.scalar(v, type=typ), n))
-            elif c in missing:
-                arrays.append(pa.nulls(n, _pa_type_for_spark(spark_types[c])))
-            else:
+            elif c in avail:
                 arrays.append(table.column(c))
+            else:
+                arrays.append(pa.nulls(n, to_arrow_type(f.dataType)))
         table = pa.table(dict(zip(columns, arrays)))
     for batch in table.to_batches(max_chunksize=1 << 16):
         yield batch
@@ -802,7 +687,13 @@ class ScbfDataSource(DataSource):
 
     Read options: ``columns`` (comma-separated explicit projection),
     ``verify_crc`` (v2, default true), ``snapshot`` (id or tag — time-travel
-    read pinned to a manifest from ``operators/snapshot.py``).
+    read pinned to a manifest from ``operators/snapshot.py``), ``files``
+    (comma-separated paths relative to the root — pin the file set; not with
+    ``snapshot``), ``merge_schemas`` (default false: true reads the union of
+    every file's schema, back-filling nulls for columns a file predates),
+    ``file_skipping`` (default true: false ignores pushed filters, so no
+    directory, file or row group is skipped), ``split_bytes`` (default 32 MiB:
+    grouped files at least this big plan one input partition per row group).
     Write options: ``compression_level`` (zlib 0-9, default 6), ``version``
     (1 or 2), ``partition_by`` (comma-separated columns → hive ``k=v``
     directory layout; readers reconstruct the columns from the path and
@@ -834,7 +725,7 @@ class ScbfDataSource(DataSource):
             # because it reads every footer at planning time.
             full = _merged_schema(files)
         else:
-            full = _schema_of_file(files[0])
+            full = StructType(_file_fields(files[0]))
         if keys:
             # Hive-partitioned dataset: directory-encoded columns come after
             # the file columns, like Spark's parquet source.

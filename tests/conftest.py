@@ -21,6 +21,10 @@ def spark():
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # keep every job in the status store: tests that count jobs through
+        # the status tracker would otherwise race its batched eviction of old
+        # jobs (default cap 1000) once the session has run that many
+        .config("spark.ui.retainedJobs", "1000000")
         .appName("scbf-tests")
         .getOrCreate()
     )

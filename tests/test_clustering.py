@@ -208,6 +208,20 @@ def test_reliable_checkpoint_matches_local(spark, tmp_path):
     assert rel_inc == base_inc
 
 
+def test_cc_null_endpoint_local_vs_distributed(spark):
+    """An edge with a NULL endpoint is no edge: the driver-side union-find
+    and the distributed loop (forced by local_max_edges=0) agree."""
+    df = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (3, 4)], "id_a: long, id_b: long"
+    )
+    local = {(r.node, r.component) for r in clustering.connected_components(df).collect()}
+    dist = {
+        (r.node, r.component)
+        for r in clustering.connected_components(df, local_max_edges=0).collect()
+    }
+    assert local == dist == {(1, 1), (2, 1), (3, 3), (4, 3)}
+
+
 def test_cc_local_vs_distributed(spark):
     """The driver-side union-find fast path (local_max_edges gate) must
     produce exactly the distributed loop's labels — random graph, both

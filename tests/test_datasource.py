@@ -117,6 +117,17 @@ def test_partition_pruning_skips_directories(spark, tmp_path):
     assert {r.bucket for r in load().filter(F.col("bucket").isin(0, 3)).select("bucket").distinct().collect()} == {0, 3}
     # partition-column-only projection still counts rows correctly
     assert load().select("bucket").count() == 80
+    # directory values are never null: IsNull on the partition column plans
+    # no data partition at all (only the empty schema carrier)
+    from pyspark.sql.datasource import IsNull
+
+    from custom_columnar_format_spark.sources.scbf_datasource import ScbfDataSource
+
+    ds = ScbfDataSource({"path": out})
+    reader = ds.reader(ds.schema())
+    reader.pushFilters([IsNull(("bucket",))])
+    assert [p.file_path for p in reader.partitions()] == [""]
+    assert load().filter(F.col("bucket").isNull()).count() == 0
 
 
 def test_partitioned_v2_with_stats_pruning(spark, tmp_path):

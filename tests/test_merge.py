@@ -18,16 +18,21 @@ def _register_scbf(spark):
     register(spark)
 
 
-def _write_target(spark, sf_small, path):
-    """orders range-partitioned by key into 8 v2 files → tight key envelopes."""
+def _write_target(spark, sf_small, path, version="2"):
+    """orders range-partitioned by key into 8 files → tight key envelopes
+    (v2 footers carry them; v1 has no stats)."""
     o = spark.read.parquet(f"{sf_small}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )  # no timestamp: SCBF v2 types are int/float/bool/utf8
+    if version == "1":  # v1 integers are int32
+        o = o.withColumn("o_orderkey", F.col("o_orderkey").cast("int")).withColumn(
+            "o_custkey", F.col("o_custkey").cast("int")
+        )
     (
         o.repartitionByRange(8, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
         .write.format("scbf")
-        .option("version", "2")
+        .option("version", version)
         .mode("overwrite")
         .save(path)
     )
@@ -262,6 +267,15 @@ def test_delete_keys_semantics_and_cow(spark, sf_small, tmp_path):
     assert len(carried) == stats["files_carried_over"]
     for name in carried:
         assert before[name] == after[name]
+
+    # a v1-written target has no footer stats: every file stays touched, and
+    # rows_deleted still comes from header row counts
+    v1 = str(tmp_path / "orders_del_v1")
+    _write_target(spark, sf_small, v1, version="1")
+    stats = merge.delete_keys(spark, v1, doomed, "o_orderkey")
+    assert stats["files_rewritten"] == stats["files_total"]
+    assert stats["rows_deleted"] == n_doomed
+    assert spark.read.format("scbf").load(v1).count() == n0 - n_doomed
 
 
 def test_delete_keys_empty_set_is_noop(spark, sf_small, tmp_path):

@@ -2,10 +2,16 @@
 a column reads as the union schema with typed nulls back-filled; type
 conflicts fail loudly; default (no option) keeps first-file behavior."""
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import IsNull
 
 from custom_columnar_format_spark.scbf import codec
+from custom_columnar_format_spark.scbf.reader_api import SCBFReader
+from custom_columnar_format_spark.sources.scbf_datasource import ScbfDataSource
 
 
 @pytest.fixture(autouse=True)
@@ -28,6 +34,14 @@ def _write_evolved_dataset(spark, path):
     new.coalesce(1).write.format("scbf").option("version", "2").mode("append").save(path)
 
 
+def _planned_files(path, filters):
+    """Files the merged-schema planner keeps under pushed ``filters``."""
+    ds = ScbfDataSource({"path": path, "merge_schemas": "true"})
+    reader = ds.reader(ds.schema())
+    reader.pushFilters(filters)
+    return sorted(p.file_path for p in reader.partitions())
+
+
 def test_merge_schemas_backfills_nulls(spark, tmp_path):
     path = str(tmp_path / "evolved")
     _write_evolved_dataset(spark, path)
@@ -39,6 +53,19 @@ def test_merge_schemas_backfills_nulls(spark, tmp_path):
     assert got == "tag_120"
     # aggregate across both vintages works (null-skipping count)
     assert df.agg(F.count("label")).collect()[0][0] == 50
+    # IsNull prunes a file whose footer counts no nulls in that column, but
+    # keeps the old file that predates `label` (its rows back-fill nulls)
+    files = sorted(glob.glob(os.path.join(path, "*.scbf")))
+    old = []
+    for p in files:
+        with SCBFReader(p) as h:
+            if "label" not in h.list_columns():
+                old.append(p)
+    assert len(old) == 1
+    assert _planned_files(path, [IsNull(("label",))]) == old
+    assert _planned_files(path, [IsNull(("v",))]) == [""]
+    load = lambda: spark.read.format("scbf").option("merge_schemas", "true").load(path)  # noqa: E731
+    assert load().filter(F.col("v").isNull()).count() == 0
 
 
 def test_merge_schemas_projection_still_prunes(spark, tmp_path):
