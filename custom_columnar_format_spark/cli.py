@@ -7,7 +7,8 @@ plus engine extensions the reference lacks. Conversion runs on Spark
 (distributed CSV parse, Catalyst projection) with ``--single-file`` output
 parity: the result is one plain ``.scbf`` file byte-readable by the
 reference's reader. ``--local`` bypasses the JVM entirely and uses the pure
-codec — handy for small files and air-gapped metadata peeks.
+codec (its export reads v1 and v2 files) — handy for small files and
+air-gapped metadata peeks.
 
 Schema inference follows Spark semantics (all-rows sampling) by default;
 ``--compat-inference`` reproduces the reference's first-non-empty-value rule
@@ -93,14 +94,15 @@ def csv_to_custom(args) -> None:
 
 def custom_to_csv(args) -> None:
     if args.local:
-        from .scbf import codec
+        from .scbf.reader_api import SCBFReader
 
-        if args.cols:
-            data = codec.read_columns(args.file_path, args.cols)
-            names = list(data.keys())
-            rows = zip(*[data[n] for n in names])
-        else:
-            names, rows = codec.read_all(args.file_path)
+        with SCBFReader(args.file_path) as r:
+            if args.cols:
+                data = r.read_columns(args.cols)
+                names = list(data)
+                rows = zip(*data.values())
+            else:
+                names, rows = r.read_all()
         with open(args.out_path, "w", newline="", encoding="utf-8") as f:
             w = _csv.writer(f)
             w.writerow(names)

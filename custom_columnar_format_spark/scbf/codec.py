@@ -6,6 +6,15 @@ metadata table, and per-column zlib-compressed data blocks. Three physical
 types: int32 (code 1), float64 (code 2), utf8 (code 3, prefix-sum u32 offsets
 + concatenated blob — layout-identical to Arrow's variable-length binary).
 
+Write entry points:
+
+- ``write_arrow_table(path, table)``: a ``pyarrow.Table`` (the Spark writer);
+- ``write_table_path(path, names, type_codes, columns)``: Python value lists,
+  the reference's list API (``cli csv_to_custom --local``), turned into Arrow
+  arrays so both go through the one Arrow → raw-block encoder;
+- ``write_table_raw(out, ...)``: the layout emitter behind both, for
+  already-packed raw blocks and any binary sink.
+
 Differences from the reference implementation (all deliberate, behavior-compatible):
 
 - **Single forward pass**: block offsets are computed up-front from known
@@ -31,7 +40,7 @@ import json
 import struct
 import zlib
 from dataclasses import dataclass, field
-from typing import Any, BinaryIO, Dict, Iterable, List, Optional, Sequence, Tuple
+from typing import Any, BinaryIO, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
@@ -109,56 +118,12 @@ def _check_int32_range(arr: np.ndarray) -> None:
         )
 
 
-def _pack_int32(values: Sequence[int]) -> bytes:
-    arr = np.asarray(values, dtype=np.int64)
-    _check_int32_range(arr)
-    return arr.astype("<i4").tobytes()
-
-
-def _pack_float64(values: Sequence[float]) -> bytes:
-    return np.asarray(values, dtype="<f8").tobytes()
-
-
 def _check_utf8_blob(blob_len: int) -> None:
     if blob_len > MAX_UTF8_BLOB:
         raise ScbfError(
             f"utf8 column blob is {blob_len} bytes; u32 offsets cap it at 4 GiB "
             "— split the data into more files/partitions"
         )
-
-
-def _pack_utf8(values: Sequence[str]) -> Tuple[bytes, bytes]:
-    """(offsets raw, blob raw): (count+1) little-endian u32 prefix sums over
-    the concatenated UTF-8 blob — the same layout as Arrow StringArray
-    buffers."""
-    encoded = [v.encode("utf-8") for v in values]
-    lengths = np.fromiter((len(b) for b in encoded), dtype=np.uint64, count=len(encoded))
-    offsets = np.zeros(len(encoded) + 1, dtype=np.uint64)
-    np.cumsum(lengths, out=offsets[1:])
-    _check_utf8_blob(int(offsets[-1]))
-    return offsets.astype("<u4").tobytes(), b"".join(encoded)
-
-
-def encode_int32_block(values: Sequence[int], level: int = DEFAULT_ZLIB_LEVEL) -> Tuple[bytes, int]:
-    """Pack a no-null int32 column to (compressed block, uncompressed size)."""
-    raw = _pack_int32(values)
-    return zlib.compress(raw, level), len(raw)
-
-
-def encode_float64_block(values: Sequence[float], level: int = DEFAULT_ZLIB_LEVEL) -> Tuple[bytes, int]:
-    raw = _pack_float64(values)
-    return zlib.compress(raw, level), len(raw)
-
-
-def encode_utf8_blocks(
-    values: Sequence[str], level: int = DEFAULT_ZLIB_LEVEL
-) -> Tuple[bytes, int, bytes, int]:
-    """Pack a no-null string column.
-
-    Returns (comp_offsets, uncomp_offsets_len, comp_blob, uncomp_blob_len).
-    """
-    off_raw, blob = _pack_utf8(values)
-    return zlib.compress(off_raw, level), len(off_raw), zlib.compress(blob, level), len(blob)
 
 
 def _compress_blocks(raws: Sequence[bytes], level: int, workers: int) -> List[bytes]:
@@ -175,40 +140,6 @@ def _compress_blocks(raws: Sequence[bytes], level: int, workers: int) -> List[by
     n = workers if workers > 0 else min(len(raws), os.cpu_count() or 4)
     with ThreadPoolExecutor(max_workers=n) as ex:
         return list(ex.map(lambda r: zlib.compress(r, level), raws))
-
-
-def write_table(
-    out: BinaryIO,
-    names: Sequence[str],
-    type_codes: Sequence[int],
-    columns: Sequence[Sequence[Any]],
-    level: int = DEFAULT_ZLIB_LEVEL,
-    workers: int = 1,
-) -> None:
-    """Write one SCBF v1 file in a single forward pass.
-
-    All compressed blocks are built in memory first (they must be, to know
-    sizes), then every offset is computed before a single byte hits ``out`` —
-    no placeholder/seek-back patching, so ``out`` need not be seekable.
-    """
-    if not (len(names) == len(type_codes) == len(columns)):
-        raise ScbfError("names/types/columns length mismatch")
-    n_rows = len(columns[0]) if columns else 0
-    for c in columns:
-        if len(c) != n_rows:
-            raise ScbfError("ragged columns: all columns must have the same row count")
-
-    raw_blocks: List[Tuple[bytes, ...]] = []  # per column: (raw,) or (off_raw, blob)
-    for tc, col in zip(type_codes, columns):
-        if tc == TYPE_INT32:
-            raw_blocks.append((_pack_int32(col),))
-        elif tc == TYPE_FLOAT64:
-            raw_blocks.append((_pack_float64(col),))
-        elif tc == TYPE_UTF8:
-            raw_blocks.append(_pack_utf8(col))
-        else:
-            raise ScbfError(f"unknown type code {tc}")
-    write_table_raw(out, names, type_codes, raw_blocks, n_rows, level, workers)
 
 
 def write_table_raw(
@@ -277,17 +208,6 @@ def write_table_raw(
     for blk in blocks:
         for b in blk:
             out.write(b)
-
-
-def write_table_path(
-    path: str,
-    names: Sequence[str],
-    type_codes: Sequence[int],
-    columns: Sequence[Sequence[Any]],
-    level: int = DEFAULT_ZLIB_LEVEL,
-) -> None:
-    with open(path, "wb") as f:
-        write_table(f, names, type_codes, columns, level)
 
 
 # ---------------------------------------------------------------------------
@@ -487,13 +407,48 @@ def write_arrow_table(
     ``workers=0`` parallelizes per-block zlib across threads for
     single-process writes; keep the default 1 inside Spark executors, which
     already run one writer task per core."""
+    _write_arrow(path, table, level, workers)
+
+
+def write_table_path(
+    path: str,
+    names: Sequence[str],
+    type_codes: Sequence[int],
+    columns: Sequence[Sequence[Any]],
+    level: int = DEFAULT_ZLIB_LEVEL,
+) -> None:
+    """Write Python value lists as one SCBF v1 file, column ``i`` named
+    ``names[i]`` with type code ``type_codes[i]`` — the reference's list API
+    (reference writer.py), used by ``cli csv_to_custom --local``. The lists
+    become Arrow arrays and go through the same encoder as
+    ``write_arrow_table``; int32 columns are built as int64 so an
+    out-of-range value raises ``ScbfError`` from the int32 range check."""
     import pyarrow as pa
 
-    names: List[str] = []
+    if not (len(names) == len(type_codes) == len(columns)):
+        raise ScbfError("names/types/columns length mismatch")
+    n_rows = len(columns[0]) if columns else 0
+    if any(len(c) != n_rows for c in columns):
+        raise ScbfError("ragged columns: all columns must have the same row count")
+    arrow_types = {TYPE_INT32: pa.int64(), TYPE_FLOAT64: pa.float64(), TYPE_UTF8: pa.large_string()}
+    arrays = []
+    for tc, col in zip(type_codes, columns):
+        if tc not in arrow_types:
+            raise ScbfError(f"unknown type code {tc}")
+        arrays.append(pa.array(col, type=arrow_types[tc]))
+    _write_arrow(path, pa.Table.from_arrays(arrays, names=list(names)), level)
+
+
+def _write_arrow(path: str, table, level: int, workers: int = 1) -> None:
+    """The one v1 encoder behind both write entry points. Columns are walked
+    by position, so duplicate names (which the reader resolves last-wins)
+    still write."""
+    import pyarrow as pa
+
     codes: List[int] = []
     raw_blocks: List[Tuple[bytes, ...]] = []
-    for fld in table.schema:
-        col = table.column(fld.name)
+    for i, fld in enumerate(table.schema):
+        col = table.column(i)
         if col.null_count:
             raise ScbfError(
                 f"column {fld.name!r} contains nulls; SCBF v1 cannot represent them "
@@ -516,6 +471,5 @@ def write_arrow_table(
                 f"column {fld.name!r} has type {t}, not representable in SCBF v1 "
                 "(int32/float64/utf8 only)"
             )
-        names.append(fld.name)
     with open(path, "wb") as f:
-        write_table_raw(f, names, codes, raw_blocks, table.num_rows, level, workers)
+        write_table_raw(f, table.column_names, codes, raw_blocks, table.num_rows, level, workers)

@@ -53,6 +53,8 @@ from .codec import _opened
 MAGIC_V2 = b"SCBFv2\x00\x00"
 
 V2_TYPES = ("int32", "int64", "float64", "bool", "utf8")
+#: the column types ``bloom_columns`` may name
+BLOOM_TYPES = ("int32", "int64", "utf8")
 _NP_DTYPES = {"int32": "<i4", "int64": "<i8", "float64": "<f8", "bool": "u1"}
 
 DEFAULT_ZLIB_LEVEL = 6
@@ -341,7 +343,7 @@ def _encode_columns(bw: "_BlockWriter", table, bloom_set: set) -> List[dict]:
         if dvs is not None:
             cm["dvs"] = dvs
         if fld.name in bloom_set:
-            if type_name not in ("int32", "int64", "utf8"):
+            if type_name not in BLOOM_TYPES:
                 raise ScbfV2Error(
                     f"bloom filter on column {fld.name!r}: only int/string "
                     f"columns are supported (got {type_name})"
@@ -479,26 +481,17 @@ def read_arrow_table(
     path,
     columns: Optional[Sequence[str]] = None,
     verify_crc: bool = True,
-    filters: Optional[Sequence[Any]] = None,
     group_indices: Optional[Sequence[int]] = None,
     meta: Optional[dict] = None,
 ):
     """Pruned Arrow read of a v2 file. Validity bitmaps and string buffers go
     to Arrow as raw buffers (the on-disk layout IS Arrow's layout).
 
-    For row-grouped files, ``filters`` (pyspark.sql.datasource Filter
-    dataclasses) additionally skip whole groups whose stats/blooms prove no
-    match — those groups' data blocks are never read. The result is then a
-    SUPERSET of the matching rows (surviving groups come back whole); the
-    engine re-applies the row filter, exactly as with Parquet row-group
-    pruning. Ungrouped files ignore ``filters`` (file-level pruning is the
-    caller's job there, via ``file_may_match``).
-
     ``group_indices`` restricts the read to those groups of a grouped file —
     the SPLIT primitive: the DataSource plans one input partition per group
     so executors scan a single large compacted file in parallel (Parquet's
-    row-group split model). Composes with ``filters`` (intersection). An
-    ungrouped file is the single group 0.
+    row-group split model). An ungrouped file is the single group 0. Pruning
+    groups under pushed filters is ``SCBFReader.to_arrow(filters=...)``'s job.
 
     ``path`` may be an open binary file, and ``meta`` its already-parsed
     footer (``read_meta``), so a caller holding both reads no footer again."""
@@ -521,7 +514,7 @@ def read_arrow_table(
                 f"group_indices {list(group_indices)!r} on an ungrouped file "
                 "(only [0] is valid)"
             )
-        groups, filters = [meta], None
+        groups = [meta]
     want = range(len(groups)) if group_indices is None else group_indices
     with _opened(path) as f:
         tables = [
@@ -529,7 +522,6 @@ def read_arrow_table(
                 f, codec, groups[i]["columns"], groups[i]["rows"], selected, verify_crc, nullable
             )
             for i in want
-            if not filters or _stats_may_match(groups[i]["columns"], groups[i]["rows"], filters)
         ]
     if not tables:
         by_name = {c["name"]: c for c in meta["columns"]}

@@ -90,9 +90,10 @@ class SCBFReader:
     def read_columns(self, columns: Sequence[str]) -> Dict[str, list]:
         if self.version == 1:
             return {k: list(v) for k, v in codec.read_columns(self._f, columns).items()}
-        t = self.to_arrow(list(columns))
         # duplicate request names collapse dict-style, like the reference
-        return {n: t.column(n).to_pylist() for n in t.column_names}
+        names = list(dict.fromkeys(columns))
+        t = self.to_arrow(names)
+        return {n: t.column(n).to_pylist() for n in names}
 
     # -- engine extensions --------------------------------------------------
     @property
@@ -136,13 +137,7 @@ class SCBFReader:
         return self.to_arrow(columns).to_pandas()
 
     def to_spark(self, spark, columns: Sequence[str] | None = None):
-        from ..sources.scbf_datasource import register
-
-        register(spark)
-        reader = spark.read.format("scbf")
-        if columns:
-            reader = reader.option("columns", ",".join(columns))
-        return reader.load(self.path)
+        return SCBFDataset(self.path).to_spark(spark, columns)
 
 
 class SCBFDataset:

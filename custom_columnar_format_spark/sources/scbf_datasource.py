@@ -73,6 +73,13 @@ SPARK_TYPES = {
     "bool": BooleanType(),
     "utf8": StringType(),
 }
+#: the SCBF type names each format version writes: the codecs' own lists
+_WRITABLE = {1: tuple(codec.TYPE_NAMES.values()), 2: codec_v2.V2_TYPES}
+
+
+def _spark_classes(type_names: Sequence[str]) -> tuple:
+    """The Spark type classes of SCBF type names, for ``isinstance``."""
+    return tuple(type(SPARK_TYPES[t]) for t in type_names)
 
 
 def _under_scratch(root: str, file_path: str) -> bool:
@@ -418,27 +425,26 @@ class ScbfWriter(DataSourceArrowWriter):
             raise ValueError("scbf write requires a path: .save('/path/to/dir')")
         self.level = int(options.get("compression_level", codec.DEFAULT_ZLIB_LEVEL))
         self.version = int(options.get("version", "1"))
+        if self.version not in _WRITABLE:
+            raise ValueError(f"unknown scbf version {self.version} (1 or 2)")
         bloom_opt = options.get("bloom_filters", "")
         self.bloom_columns: List[str] = [c.strip() for c in bloom_opt.split(",") if c.strip()]
-        if self.bloom_columns and self.version != 2:
-            raise ValueError("bloom_filters requires .option('version', '2')")
         self.max_records_per_file = int(options.get("max_records_per_file", "0"))
         if self.max_records_per_file < 0:
             raise ValueError("max_records_per_file must be >= 0 (0 = unlimited)")
         self.rows_per_group = int(options.get("rows_per_group", "0")) or None
-        if self.rows_per_group is not None:
-            if self.version != 2:
-                raise ValueError("rows_per_group requires .option('version', '2')")
-            if self.rows_per_group < 0:
-                raise ValueError("rows_per_group must be >= 0 (0 = one group per file)")
         self.codec = options.get("codec", "zlib")
-        if self.codec != "zlib":
-            if self.version != 2:
-                raise ValueError("codec requires .option('version', '2') (v1 is zlib-only)")
-            if self.codec not in codec_v2.BLOCK_CODECS:
-                raise ValueError(
-                    f"unknown codec {self.codec!r}; have {sorted(codec_v2.BLOCK_CODECS)}"
-                )
+        for opt, used in (
+            ("bloom_filters", self.bloom_columns),
+            ("rows_per_group", self.rows_per_group is not None),
+            ("codec", self.codec != "zlib"),
+        ):
+            if used and self.version != 2:
+                raise ValueError(f"{opt} requires .option('version', '2')")
+        if self.rows_per_group is not None and self.rows_per_group < 0:
+            raise ValueError("rows_per_group must be >= 0 (0 = one group per file)")
+        if self.codec not in codec_v2.BLOCK_CODECS:
+            raise ValueError(f"unknown codec {self.codec!r}; have {sorted(codec_v2.BLOCK_CODECS)}")
         self.overwrite = overwrite
         part_opt = options.get("partition_by", "")
         self.partition_by: List[str] = [c.strip() for c in part_opt.split(",") if c.strip()]
@@ -458,29 +464,19 @@ class ScbfWriter(DataSourceArrowWriter):
         for c in self.bloom_columns:
             if c not in data_by_name:
                 raise ValueError(f"bloom_filters column {c!r} not in data columns")
-            if not isinstance(data_by_name[c].dataType, (IntegerType, LongType, StringType)):
+            if not isinstance(data_by_name[c].dataType, _spark_classes(codec_v2.BLOOM_TYPES)):
                 raise ValueError(
-                    f"bloom_filters column {c!r} must be int/long/string "
+                    f"bloom_filters column {c!r} must be {'/'.join(codec_v2.BLOOM_TYPES)} "
                     f"(got {data_by_name[c].dataType.simpleString()})"
                 )
-        if self.version == 2:
-            ok = (IntegerType, LongType, DoubleType, BooleanType, StringType)
-            for f in data_fields:
-                if not isinstance(f.dataType, ok):
-                    raise ValueError(
-                        f"column {f.name!r}: {f.dataType.simpleString()} is not representable "
-                        "in SCBF v2 (int32/int64/float64/bool/utf8) — cast first"
-                    )
-        elif self.version == 1:
-            for f in data_fields:
-                if not isinstance(f.dataType, (IntegerType, DoubleType, StringType)):
-                    raise ValueError(
-                        f"column {f.name!r}: {f.dataType.simpleString()} is not representable "
-                        "in SCBF v1 (int32/float64/utf8 only) — cast, or write with "
-                        ".option('version', '2')"
-                    )
-        else:
-            raise ValueError(f"unknown scbf version {self.version} (1 or 2)")
+        types = _WRITABLE[self.version]
+        writable = _spark_classes(types)
+        for f in data_fields:
+            if not isinstance(f.dataType, writable):
+                raise ValueError(
+                    f"column {f.name!r}: {f.dataType.simpleString()} is not representable "
+                    f"in SCBF v{self.version} ({'/'.join(types)}) — cast first"
+                )
 
     def _write_one(self, directory: str, table) -> tuple:
         os.makedirs(directory, exist_ok=True)
@@ -676,10 +672,7 @@ class ScbfStreamWriter(DataSourceStreamArrowWriter):
             os.replace(tmp, final)
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            for tmp, _final in (m.files if m else ()):
-                if os.path.exists(tmp):
-                    os.unlink(tmp)
+        self._inner.abort(messages)
 
 
 class ScbfDataSource(DataSource):

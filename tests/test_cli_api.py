@@ -134,7 +134,31 @@ def test_reader_class_api_v2(tmp_path):
     assert names == ["id", "name", "ok"]
     assert rows[1] == [2, None, False] and rows[2] == [None, "c", True]
     assert r.read_columns(["ok"]) == {"ok": [True, False, True, None]}
+    # a repeated name collapses dict-style, in request order (as for v1)
+    assert r.read_columns(["name", "id", "name"]) == {
+        "name": ["a", None, "c", "d"],
+        "id": [1, 2, None, 4],
+    }
     assert r.to_arrow(["id"]).column("id").to_pylist() == [1, 2, None, 4]
+
+
+def test_cli_local_export_reads_v2(tmp_path):
+    """``custom_to_csv --local`` reads v2 files (nulls become empty cells),
+    whole or projected, like ``inspect`` does."""
+    import pyarrow as pa
+
+    from custom_columnar_format_spark.scbf import codec_v2
+
+    p = str(tmp_path / "v2.scbf")
+    t = pa.table({"id": pa.array([1, None, 3], type=pa.int64()), "name": ["a", "b", None]})
+    codec_v2.write_arrow_table(p, t)
+    out_csv = str(tmp_path / "out.csv")
+    assert cli_main(["custom_to_csv", p, out_csv, "--local"]) == 0
+    with open(out_csv) as f:
+        assert list(csv.reader(f)) == [["id", "name"], ["1", "a"], ["", "b"], ["3", ""]]
+    assert cli_main(["custom_to_csv", p, out_csv, "--local", "--cols", "name", "id"]) == 0
+    with open(out_csv) as f:
+        assert list(csv.reader(f)) == [["name", "id"], ["a", "1"], ["b", ""], ["", "3"]]
 
 
 def test_cli_inspect_head_preview(sample_csv, tmp_path, capsys):

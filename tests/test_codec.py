@@ -51,8 +51,49 @@ def test_roundtrip_nan_inf(tmp_path):
 
 
 def test_int32_overflow_rejected(tmp_path):
-    with pytest.raises(Exception):
+    with pytest.raises(codec.ScbfError):
         codec.write_table_path(str(tmp_path / "o.scbf"), ["i"], [codec.TYPE_INT32], [[2**31]])
+
+
+@pytest.mark.parametrize(
+    "names,types,columns",
+    [
+        (["i", "f", "s"], [codec.TYPE_INT32, codec.TYPE_FLOAT64, codec.TYPE_UTF8],
+         [[1, -(2**31), 2**31 - 1], [math.nan, math.inf, -math.inf], ["", "héllo ✓", "x"]]),
+        (["a", "a", "b"], [codec.TYPE_INT32, codec.TYPE_UTF8, codec.TYPE_FLOAT64],
+         [[1, 2], ["x", "y"], [0.5, -0.0]]),
+        (["i", "f", "s"], [codec.TYPE_INT32, codec.TYPE_FLOAT64, codec.TYPE_UTF8], [[], [], []]),
+        ([], [], []),
+    ],
+    ids=["nan_inf", "duplicate_names", "empty_columns", "no_columns"],
+)
+def test_list_api_and_arrow_write_identical_bytes(tmp_path, names, types, columns):
+    """The list API and the Arrow API are one encoder: the same data gives
+    the same file, byte for byte (duplicate names included)."""
+    import pyarrow as pa
+
+    arrow_type = {codec.TYPE_INT32: pa.int32(), codec.TYPE_FLOAT64: pa.float64(),
+                  codec.TYPE_UTF8: pa.string()}
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=arrow_type[t]) for t, c in zip(types, columns)], names=names
+    )
+    lists, arrow = str(tmp_path / "lists.scbf"), str(tmp_path / "arrow.scbf")
+    codec.write_table_path(lists, names, types, columns)
+    codec.write_arrow_table(arrow, table)
+    with open(lists, "rb") as a, open(arrow, "rb") as b:
+        assert a.read() == b.read()
+    last = dict(zip(names, columns))  # the reader resolves a duplicate name last-wins
+    assert repr(codec.read_columns(lists, list(last))) == repr(last)
+
+
+def test_list_api_rejects_bad_shapes(tmp_path):
+    p = str(tmp_path / "bad.scbf")
+    with pytest.raises(codec.ScbfError, match="length mismatch"):
+        codec.write_table_path(p, ["a", "b"], [codec.TYPE_INT32], [[1], [2]])
+    with pytest.raises(codec.ScbfError, match="ragged"):
+        codec.write_table_path(p, ["a", "b"], [codec.TYPE_INT32] * 2, [[1], [2, 3]])
+    with pytest.raises(codec.ScbfError, match="unknown type code"):
+        codec.write_table_path(p, ["a"], [9], [[1]])
 
 
 def test_selective_read_order_and_unknown(tmp_path):

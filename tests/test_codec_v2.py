@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from custom_columnar_format_spark.scbf import codec_v2
+from custom_columnar_format_spark.scbf.reader_api import SCBFReader
 from custom_columnar_format_spark.sources.scbf_datasource import register
 
 
@@ -429,12 +430,13 @@ def test_row_group_skipping_proven_by_corruption(tmp_path):
                     f.seek(ref["offset"])
                     f.write(b"\x00" * ref["comp"])
 
-    got = codec_v2.read_arrow_table(p, filters=[EqualTo(("id",), 5)])
+    with SCBFReader(p) as r:
+        got = r.to_arrow(filters=[EqualTo(("id",), 5)])
+        # all-groups-skipped: empty table, schema intact, no blocks touched
+        none = r.to_arrow(filters=[GreaterThan(("id",), 10**6)])
     assert got.column("id").to_pylist() == list(range(128))
     with pytest.raises(codec_v2.ScbfV2Error):
         codec_v2.read_arrow_table(p)
-    # all-groups-skipped: empty table, schema intact, no blocks touched
-    none = codec_v2.read_arrow_table(p, filters=[GreaterThan(("id",), 10**6)])
     assert none.num_rows == 0 and none.column_names == ["id", "name", "score"]
     # file_may_match consults per-group stats (file matches iff any group may)
     assert codec_v2.file_may_match(meta, [EqualTo(("id",), 5)])
@@ -594,7 +596,8 @@ def test_dvs_prunes_group_minmax_cannot(tmp_path):
         for r in refs:
             f.seek(r.offset)
             f.write(b"\xff" * min(8, r.comp))
-    got = codec_v2.read_arrow_table(p, filters=[EqualTo(("cat",), "beta")])
+    with SCBFReader(p) as h:
+        got = h.to_arrow(filters=[EqualTo(("cat",), "beta")])
     assert got.num_rows == 100 and set(got.column("cat").to_pylist()) == {"beta", "zeta"}
 
 
