@@ -349,7 +349,7 @@ def bench_scbf(spark, tmpdir: str) -> dict[str, float]:
     _codec.write_arrow_table(local, pat)
     times["codec_write_200k"] = round(time.time() - t0, 4)
     t0 = time.time()
-    _codec.write_arrow_table(local, pat, workers=0)  # threaded per-block zlib
+    _codec.write_arrow_table(local, pat)  # serial, like the line above; key kept for BENCH_r*.json
     times["codec_write_200k_mt"] = round(time.time() - t0, 4)
     t0 = time.time()
     _codec.read_arrow_table(local)

@@ -13,9 +13,10 @@ Two properties follow:
 - a hive partition directory's scratch lives NEXT TO the partition, not
   inside the dataset as a fake ``k=v.compact-tmp`` partition component.
 
-``split_scratch`` maps a scratch path back to the dataset directory it was
-staged for (supporting the legacy non-hidden naming too), which is what lets
-``vacuum.vacuum`` refuse to delete a ``*-old`` backup that is the only
+``swap_into_place`` is the backup-and-rename step both operators finish
+with. ``split_scratch`` maps a scratch path back to the dataset directory it
+was staged for (supporting the legacy non-hidden naming too), which is what
+lets ``vacuum.vacuum`` refuse to delete a ``*-old`` backup that is the only
 surviving copy of data whose dataset directory vanished mid-swap, and what
 ``vacuum.recover`` uses to rename that backup back into place.
 """
@@ -23,6 +24,7 @@ surviving copy of data whose dataset directory vanished mid-swap, and what
 from __future__ import annotations
 
 import os
+import shutil
 
 #: suffix order matters nowhere; kept alphabetical by operator
 STAGING_SUFFIXES = (".compact-old", ".compact-tmp", ".merge-old", ".merge-tmp")
@@ -33,6 +35,25 @@ def staging_path(dataset_dir: str, suffix: str) -> str:
     ``/data/root/k=v`` + ``.compact-tmp`` → ``/data/root/.k=v.compact-tmp``."""
     parent, base = os.path.split(os.path.abspath(dataset_dir))
     return os.path.join(parent, "." + base + suffix)
+
+
+def swap_into_place(dataset_dir: str, staging: str, suffix: str) -> None:
+    """Replace ``dataset_dir`` with the fully written ``staging`` directory.
+    The old one is renamed to its ``suffix`` backup (``.compact-old`` /
+    ``.merge-old``, which ``vacuum.recover`` keys on), and only its
+    ``_``-prefixed dataset metadata (snapshot manifests etc.) is carried over
+    before the backup is deleted — snapshots that reference old data files
+    fail loudly at read (operators/snapshot.py's retention contract). The
+    swap is a rewrite's LAST step, so a crash before it leaves the dataset
+    untouched and ``vacuum.recover`` heals a crash inside it."""
+    backup = staging_path(dataset_dir, suffix)
+    shutil.rmtree(backup, ignore_errors=True)  # stale backup from a prior crash
+    os.rename(dataset_dir, backup)
+    os.rename(staging, dataset_dir)
+    for name in os.listdir(backup):
+        if name.startswith("_"):
+            os.rename(os.path.join(backup, name), os.path.join(dataset_dir, name))
+    shutil.rmtree(backup)
 
 
 def split_scratch(path: str) -> tuple[str, str] | None:

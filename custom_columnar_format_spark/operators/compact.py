@@ -23,14 +23,13 @@ from __future__ import annotations
 import glob
 import math
 import os
-import shutil
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..scbf.reader_api import SCBFReader
 from . import vacuum as _vacuum
-from ._staging import is_scratch_component, staging_path
+from ._staging import is_scratch_component, staging_path, swap_into_place
 
 
 def _leaf_dirs(path: str) -> list[str]:
@@ -114,18 +113,7 @@ def compact(
             w = w.option("rows_per_group", str(rows_per_group))
         w.save(staging)
 
-        backup = staging_path(d, ".compact-old")
-        shutil.rmtree(backup, ignore_errors=True)  # stale backup from a prior crash
-        os.rename(d, backup)
-        os.rename(staging, d)
-        # Dataset metadata (``_``-prefixed dirs: snapshot manifests, etc.)
-        # survives the rewrite; old data files do not — snapshots referencing
-        # them fail loudly at read (operators/snapshot.py's documented
-        # retention contract).
-        for name in os.listdir(backup):
-            if name.startswith("_"):
-                os.rename(os.path.join(backup, name), os.path.join(d, name))
-        shutil.rmtree(backup)
+        swap_into_place(d, staging, ".compact-old")
 
         stats["dirs"] += 1
         stats["files_before"] += len(files)

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..scbf import codec_v2
 from ..scbf.reader_api import SCBFReader
 from . import vacuum as _vacuum
-from ._staging import staging_path
+from ._staging import staging_path, swap_into_place
 
 
 def _target_files(path: str) -> list[str]:
@@ -69,20 +69,6 @@ def split_touched_files(
         with SCBFReader(p) as h:
             (touched if h.may_match(probe) else untouched).append(p)
     return touched, untouched
-
-
-def _swap_into_place(target_path: str, staging: str) -> None:
-    """Backup-rename-swap with dataset metadata carry-over (snapshot
-    manifests etc.); the swap is the LAST step so a crash before it leaves
-    the target untouched and vacuum.recover() heals a crash inside it."""
-    backup = staging_path(target_path, ".merge-old")
-    shutil.rmtree(backup, ignore_errors=True)  # stale backup from a prior crash
-    os.rename(target_path, backup)
-    os.rename(staging, target_path)
-    for name in os.listdir(backup):
-        if name.startswith("_"):
-            os.rename(os.path.join(backup, name), os.path.join(target_path, name))
-    shutil.rmtree(backup)
 
 
 def _cow_rewrite(
@@ -188,7 +174,7 @@ def _cow_rewrite(
         codec_v2.write_arrow_table(os.path.join(staging, "part-empty.scbf"), empty)
 
     if out_path is None:
-        _swap_into_place(target_path, staging)
+        swap_into_place(target_path, staging, ".merge-old")
     return rows_written
 
 

@@ -15,6 +15,10 @@ Write entry points:
 - ``write_table_raw(out, ...)``: the layout emitter behind both, for
   already-packed raw blocks and any binary sink.
 
+Reads have no decoder here: ``read_meta`` returns the header and metadata
+table in the v2 footer shape, and ``codec_v2._read_group`` decodes the blocks
+of both versions (``SCBFReader`` is the file handle over both).
+
 Differences from the reference implementation (all deliberate, behavior-compatible):
 
 - **Single forward pass**: block offsets are computed up-front from known
@@ -23,8 +27,8 @@ Differences from the reference implementation (all deliberate, behavior-compatib
   non-seekable sinks (object stores, pipes).
 - **Correct ``str_uncomp``**: the reference clobbers the utf8 ``str_uncomp``
   metadata field with an offset during patching (reference writer.py:208-209);
-  we store the true uncompressed blob length, and on read treat ``*_uncomp``
-  fields as advisory (so reference-written files still decode).
+  we store the true uncompressed blob length, and ``read_meta`` treats the
+  ``*_uncomp`` fields as advisory (so reference-written files still decode).
 - **Vectorized**: numeric packing/unpacking uses NumPy ``tobytes``/
   ``frombuffer`` instead of per-value ``struct`` loops (reference
   reader.py:80,88 / writer.py:84,98).
@@ -40,7 +44,7 @@ import json
 import struct
 import zlib
 from dataclasses import dataclass, field
-from typing import Any, BinaryIO, Dict, List, Optional, Sequence, Tuple
+from typing import Any, BinaryIO, List, Optional, Sequence, Tuple
 
 import numpy as np
 
@@ -95,10 +99,6 @@ class ScbfFileInfo:
     meta_table_offset: int
     columns: List[ColumnMeta] = field(default_factory=list)
 
-    def column_map(self) -> Dict[str, ColumnMeta]:
-        # Last duplicate wins, matching reference reader.py:120 behavior.
-        return {m.name: m for m in self.columns}
-
 
 # ---------------------------------------------------------------------------
 # Encoding
@@ -126,22 +126,6 @@ def _check_utf8_blob(blob_len: int) -> None:
         )
 
 
-def _compress_blocks(raws: Sequence[bytes], level: int, workers: int) -> List[bytes]:
-    """zlib-compress raw blocks, optionally on a thread pool — zlib releases
-    the GIL, so per-column compression parallelizes within one process.
-    ``workers=1`` stays serial (the right choice inside a Spark executor,
-    which already runs one writer task per core); ``workers=0`` sizes the
-    pool to min(blocks, cpus) for single-process/driver-side writes."""
-    if workers == 1 or len(raws) <= 1:
-        return [zlib.compress(r, level) for r in raws]
-    import os
-    from concurrent.futures import ThreadPoolExecutor
-
-    n = workers if workers > 0 else min(len(raws), os.cpu_count() or 4)
-    with ThreadPoolExecutor(max_workers=n) as ex:
-        return list(ex.map(lambda r: zlib.compress(r, level), raws))
-
-
 def write_table_raw(
     out: BinaryIO,
     names: Sequence[str],
@@ -149,27 +133,17 @@ def write_table_raw(
     raw_blocks: Sequence[Tuple[bytes, ...]],
     n_rows: int,
     level: int = DEFAULT_ZLIB_LEVEL,
-    workers: int = 1,
 ) -> None:
     """Write pre-packed raw blocks — (raw,) per numeric column, (offsets raw,
-    blob) per utf8 column — as one SCBF v1 file. Compression optionally fans
-    out across threads (see ``_compress_blocks``)."""
+    blob) per utf8 column — as one SCBF v1 file."""
     schema_json = json.dumps(
         {"columns": [{"name": n, "type": TYPE_NAMES[t]} for n, t in zip(names, type_codes)]}
     ).encode("utf-8")
     name_bytes = [n.encode("utf-8") for n in names]
 
-    # 1) Compress all raw blocks (flattened so utf8's two blocks parallelize
-    #    independently), then regroup per column.
-    flat: List[bytes] = [b for blk in raw_blocks for b in blk]
-    comp_flat = _compress_blocks(flat, level, workers)
-    blocks: List[Tuple[bytes, ...]] = []
-    uncomp_sizes: List[Tuple[int, ...]] = []
-    i = 0
-    for blk in raw_blocks:
-        blocks.append(tuple(comp_flat[i : i + len(blk)]))
-        uncomp_sizes.append(tuple(len(b) for b in blk))
-        i += len(blk)
+    # 1) Compress every raw block.
+    blocks = [tuple(zlib.compress(b, level) for b in blk) for blk in raw_blocks]
+    uncomp_sizes = [tuple(len(b) for b in blk) for blk in raw_blocks]
 
     # 2) Compute layout: header | meta table | data blocks.
     header_len = len(MAGIC) + 4 + len(schema_json) + 4 + 8 + 8
@@ -250,122 +224,40 @@ def read_file_info(f: BinaryIO) -> ScbfFileInfo:
     return ScbfFileInfo(schema, num_columns, total_rows, meta_table_offset, cols)
 
 
-def _read_block(f: BinaryIO, offset: int, comp_size: int) -> bytes:
-    f.seek(offset)
-    return zlib.decompress(f.read(comp_size))
-
-
-def decode_numeric(f: BinaryIO, meta: ColumnMeta) -> np.ndarray:
-    """Decode an int32/float64 column block to a NumPy array (zero-copy view)."""
-    raw = _read_block(f, meta.block_offset, meta.comp_size)
-    dtype = "<i4" if meta.type_code == TYPE_INT32 else "<f8"
-    return np.frombuffer(raw, dtype=dtype, count=meta.count)
-
-
-def decode_utf8_buffers(f: BinaryIO, meta: ColumnMeta) -> Tuple[np.ndarray, bytes]:
-    """Decode a utf8 column to (offsets u32[count+1], blob bytes).
-
-    ``*_uncomp`` metadata is advisory only: reference-written files carry a
-    corrupted ``str_uncomp`` (reference writer.py:208-209 clobber), so sizes
-    come from the actual decompressed payloads.
-    """
-    off_raw = _read_block(f, meta.block_offset, meta.comp_size)
-    blob = _read_block(f, meta.str_offset, meta.str_comp_size)
-    offsets = np.frombuffer(off_raw, dtype="<u4", count=meta.count + 1)
-    return offsets, blob
-
-
-def decode_utf8(f: BinaryIO, meta: ColumnMeta) -> List[str]:
-    offsets, blob = decode_utf8_buffers(f, meta)
-    return [blob[offsets[i]:offsets[i + 1]].decode("utf-8") for i in range(meta.count)]
-
-
-def read_columns(path: str, columns: Sequence[str]) -> Dict[str, Any]:
-    """Selective column read — decompress ONLY the named columns' blocks.
-
-    The format's single query capability (reference reader.py:111-133,
-    SPEC.md:101-108): seeks straight to each requested column's stored byte
-    offsets; unrequested columns are never read. Raises ``KeyError`` on an
-    unknown name, as the reference does. With duplicate column names, the
-    last duplicate wins (reference reader.py:120 dict collapse).
-    """
+def read_meta(path) -> dict:
+    """The v1 header in the v2 footer shape (``codec_v2.read_meta``), so one
+    block decoder (``codec_v2._read_group``) reads both versions. Each column
+    is one zlib block set — ``data``, or ``offsets`` + ``blob`` for utf8 —
+    with no CRC, no stats and no nulls. ``uncomp`` is None: ``*_uncomp``
+    sizes are advisory, because reference-written files carry a clobbered
+    ``str_uncomp`` (reference writer.py:208-209), so block sizes come from
+    the decompressed payloads. ``path`` may be an open binary file."""
     with _opened(path) as f:
         info = read_file_info(f)
-        meta_map = info.column_map()
-        out: Dict[str, Any] = {}
-        for name in columns:
-            if name not in meta_map:
-                raise KeyError(f"Column {name} not found")
-            m = meta_map[name]
-            if m.type_code == TYPE_UTF8:
-                out[name] = decode_utf8(f, m)
-            else:
-                out[name] = decode_numeric(f, m).tolist()
-        return out
 
+    def ref(offset: int, comp: int) -> dict:
+        return {"offset": offset, "comp": comp, "uncomp": None, "crc32": None}
 
-def read_all(path: str) -> Tuple[List[str], List[List[Any]]]:
-    """Full read, pivoted to rows — parity with reference reader.py:135-161."""
-    with _opened(path) as f:
-        info = read_file_info(f)
-        names = [m.name for m in info.columns]
-        cols: List[List[Any]] = []
-        for m in info.columns:
-            if m.type_code == TYPE_UTF8:
-                cols.append(decode_utf8(f, m))
-            else:
-                cols.append(decode_numeric(f, m).tolist())
-        rows = [list(row) for row in zip(*cols)] if cols and info.total_rows else []
-        return names, rows
-
-
-def read_arrow_table(
-    path, columns: Optional[Sequence[str]] = None, info: Optional[ScbfFileInfo] = None
-):
-    """Read an SCBF file into a ``pyarrow.Table``, pruning to ``columns``.
-
-    SCBF's utf8 layout (u32 prefix-sum offsets + blob) is identical to Arrow's
-    StringArray buffers, so string columns are constructed without re-copying
-    per value; numeric columns come from zero-copy ``frombuffer`` views.
-    This is the fast path used by the Spark DataSource. ``path`` may be an
-    open binary file, and ``info`` its already-parsed header.
-    """
-    import pyarrow as pa
-
-    with _opened(path) as f:
-        if info is None:
-            info = read_file_info(f)
-        meta_map = info.column_map()
-        if columns is None:
-            selected = [m.name for m in info.columns]
+    columns = []
+    for m in info.columns:
+        if m.type_code == TYPE_UTF8:
+            blocks = {"offsets": ref(m.block_offset, m.comp_size),
+                      "blob": ref(m.str_offset, m.str_comp_size)}
         else:
-            selected = list(columns)
-        arrays = []
-        fields = []
-        for name in selected:
-            if name not in meta_map:
-                raise KeyError(f"Column {name} not found")
-            m = meta_map[name]
-            if m.type_code == TYPE_UTF8:
-                offsets, blob = decode_utf8_buffers(f, m)
-                arr = pa.StringArray.from_buffers(
-                    m.count,
-                    pa.py_buffer(offsets.astype("<i4").tobytes()),
-                    pa.py_buffer(blob),
-                )
-                fields.append(pa.field(name, pa.string(), nullable=False))
-            else:
-                np_arr = decode_numeric(f, m)
-                arr = pa.array(np_arr, type=pa.int32() if m.type_code == TYPE_INT32 else pa.float64())
-                fields.append(
-                    pa.field(
-                        name,
-                        pa.int32() if m.type_code == TYPE_INT32 else pa.float64(),
-                        nullable=False,
-                    )
-                )
-            arrays.append(arr)
-        return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
+            blocks = {"data": ref(m.block_offset, m.comp_size)}
+        columns.append({"name": m.name, "type": m.type_name, "nullable": False,
+                        "null_count": 0, "dict": False, "blocks": blocks, "stats": None})
+    return {"version": 1, "rows": info.total_rows, "codec": "zlib", "columns": columns}
+
+
+def read_arrow_table(path, columns: Optional[Sequence[str]] = None):
+    """Read an SCBF v1 file into a ``pyarrow.Table``, pruning to ``columns``
+    (all, by position, by default) through the v2 block decoder. ``path``
+    may be an open binary file."""
+    from .codec_v2 import read_arrow_table as read_blocks
+
+    with _opened(path) as f:
+        return read_blocks(f, columns, meta=read_meta(f))
 
 
 def _utf8_raw_from_arrow(col) -> Tuple[bytes, bytes]:
@@ -393,9 +285,7 @@ def _utf8_raw_from_arrow(col) -> Tuple[bytes, bytes]:
     return rebased.tobytes(), blob
 
 
-def write_arrow_table(
-    path: str, table, level: int = DEFAULT_ZLIB_LEVEL, workers: int = 1
-) -> None:
+def write_arrow_table(path: str, table, level: int = DEFAULT_ZLIB_LEVEL) -> None:
     """Write a ``pyarrow.Table`` as one SCBF v1 file.
 
     Maps Arrow types onto the three SCBF physical types; anything else (or any
@@ -403,11 +293,8 @@ def write_arrow_table(
     lists null bitmaps as an unimplemented extension).
 
     Raw blocks are built from Arrow buffers directly (numeric: vectorized
-    cast; utf8: offset rebase + blob slice — no ``to_pylist`` round-trip).
-    ``workers=0`` parallelizes per-block zlib across threads for
-    single-process writes; keep the default 1 inside Spark executors, which
-    already run one writer task per core."""
-    _write_arrow(path, table, level, workers)
+    cast; utf8: offset rebase + blob slice — no ``to_pylist`` round-trip)."""
+    _write_arrow(path, table, level)
 
 
 def write_table_path(
@@ -439,7 +326,7 @@ def write_table_path(
     _write_arrow(path, pa.Table.from_arrays(arrays, names=list(names)), level)
 
 
-def _write_arrow(path: str, table, level: int, workers: int = 1) -> None:
+def _write_arrow(path: str, table, level: int) -> None:
     """The one v1 encoder behind both write entry points. Columns are walked
     by position, so duplicate names (which the reader resolves last-wins)
     still write."""
@@ -472,4 +359,4 @@ def _write_arrow(path: str, table, level: int, workers: int = 1) -> None:
                 "(int32/float64/utf8 only)"
             )
     with open(path, "wb") as f:
-        write_table_raw(f, table.column_names, codes, raw_blocks, table.num_rows, level, workers)
+        write_table_raw(f, table.column_names, codes, raw_blocks, table.num_rows, level)

@@ -464,14 +464,31 @@ def read_meta(path) -> dict:
 
 
 def _get_block(f: BinaryIO, ref: BlockRef, verify: bool = True, codec: str = "zlib") -> bytes:
+    """Read and decompress one block — every SCBF block read, v1 or v2. A v1
+    block (``codec.read_meta``) has no CRC and only an advisory size, so
+    ``crc32`` / ``uncomp`` None skip those checks."""
     f.seek(ref.offset)
     comp = f.read(ref.comp)
-    if verify and (zlib.crc32(comp) & 0xFFFFFFFF) != ref.crc32:
+    if verify and ref.crc32 is not None and (zlib.crc32(comp) & 0xFFFFFFFF) != ref.crc32:
         raise ScbfV2Error(f"crc32 mismatch at offset {ref.offset}: corrupted block")
     raw = BLOCK_CODECS[codec][1](comp)
-    if len(raw) != ref.uncomp:
+    if ref.uncomp is not None and len(raw) != ref.uncomp:
         raise ScbfV2Error("uncompressed size mismatch: corrupted block")
     return raw
+
+
+def _pick(columns_meta: Sequence[dict], selected: Optional[Sequence[str]]) -> List[dict]:
+    """The column entries ``selected`` names, in request order; ``None`` is
+    every column by position, so duplicate names (v1 allows them) each keep
+    their own entry. A named lookup resolves a duplicate last-wins, like the
+    reference reader (reader.py:120)."""
+    if selected is None:
+        return list(columns_meta)
+    by_name = {c["name"]: c for c in columns_meta}
+    missing = [n for n in selected if n not in by_name]
+    if missing:
+        raise KeyError(f"Column {missing[0]} not found")
+    return [by_name[n] for n in selected]
 
 
 _PA_TYPES = {"int32": "int32", "int64": "int64", "float64": "float64", "bool": "bool_", "utf8": "string"}
@@ -484,8 +501,10 @@ def read_arrow_table(
     group_indices: Optional[Sequence[int]] = None,
     meta: Optional[dict] = None,
 ):
-    """Pruned Arrow read of a v2 file. Validity bitmaps and string buffers go
-    to Arrow as raw buffers (the on-disk layout IS Arrow's layout).
+    """Pruned Arrow read of an SCBF file — v2, or v1 given ``meta`` from
+    ``codec.read_meta``. Validity bitmaps and string buffers go to Arrow as
+    raw buffers (the on-disk layout IS Arrow's layout). ``columns`` None
+    reads every column by position.
 
     ``group_indices`` restricts the read to those groups of a grouped file —
     the SPLIT primitive: the DataSource plans one input partition per group
@@ -502,7 +521,7 @@ def read_arrow_table(
     codec = meta.get("codec", "zlib")  # absent in pre-codec files
     if codec not in BLOCK_CODECS:
         raise ScbfV2Error(f"file uses unknown codec {codec!r}; have {sorted(BLOCK_CODECS)}")
-    selected = list(columns) if columns is not None else [c["name"] for c in meta["columns"]]
+    selected = list(columns) if columns is not None else None
     # per-group nullability can differ (one group has nulls, another
     # doesn't); concat needs one schema, so force the file-level flags
     nullable = {c["name"]: bool(c["nullable"]) for c in meta["columns"]}
@@ -524,10 +543,9 @@ def read_arrow_table(
             for i in want
         ]
     if not tables:
-        by_name = {c["name"]: c for c in meta["columns"]}
         empty_fields = [
-            pa.field(n, getattr(pa, _PA_TYPES[by_name[n]["type"]])(), nullable=nullable[n])
-            for n in selected
+            pa.field(c["name"], getattr(pa, _PA_TYPES[c["type"]])(), nullable=nullable[c["name"]])
+            for c in _pick(meta["columns"], selected)
         ]
         return pa.Table.from_arrays(
             [pa.nulls(0, fl.type) for fl in empty_fields], schema=pa.schema(empty_fields)
@@ -540,19 +558,17 @@ def _read_group(
     codec: str,
     columns_meta: List[dict],
     rows: int,
-    selected: Sequence[str],
+    selected: Optional[Sequence[str]],
     verify_crc: bool,
     nullable_override: Optional[Dict[str, bool]] = None,
 ):
-    """Decode one block set (a row group, or a whole ungrouped file)."""
+    """Decode one block set (a row group, a whole ungrouped v2 file, or a v1
+    file); ``selected`` None reads every column."""
     import pyarrow as pa
 
-    by_name = {c["name"]: c for c in columns_meta}
     arrays, fields = [], []
-    for name in selected:
-        if name not in by_name:
-            raise KeyError(f"Column {name} not found")
-        cm = by_name[name]
+    for cm in _pick(columns_meta, selected):
+        name = cm["name"]
         refs = {k: BlockRef.from_json(v) for k, v in cm["blocks"].items()}
         validity_buf = None
         if "validity" in refs:
@@ -657,30 +673,26 @@ def _stats_may_match(columns_meta: Sequence[dict], rows: int, filters: Sequence[
             if col in nulls_by_col and nulls_by_col[col] == 0:
                 return False
             continue
+        # `= v` is `IN (v)`: each point-lookup proof below is written once
+        if isinstance(flt, EqualTo):
+            flt = In(flt.attribute, (flt.value,))
         # Distinct-value-set check first: EXACT membership proof for = / IN
         # on low-NDV string columns — prunes where the Bloom check below can
         # only say "probably present" (its false positives keep the group)
         # and min/max only bounds the range. String probes only: a non-string
         # probe on a utf8 column can't have been pushed from a typed plan.
         dv = dvs_by_col.get(col)
-        if dv is not None:
-            if isinstance(flt, EqualTo) and isinstance(flt.value, str) and flt.value not in dv:
+        if dv is not None and isinstance(flt, In):
+            str_probes = [v for v in flt.value if isinstance(v, str)]
+            if len(str_probes) == len(flt.value) and not (set(str_probes) & dv):
                 return False
-            if isinstance(flt, In):
-                str_probes = [v for v in flt.value if isinstance(v, str)]
-                if len(str_probes) == len(flt.value) and not (set(str_probes) & dv):
-                    return False
         # Bloom check for point lookups: skips files whose key RANGE overlaps
         # but which provably lack the value — the case min/max can't prune.
         bl = bloom_by_col.get(col)
-        if bl is not None:
+        if bl is not None and isinstance(flt, In):
             bloom, tname = bl
             try:
-                if isinstance(flt, EqualTo) and not bloom_contains(bloom, flt.value, tname):
-                    return False
-                if isinstance(flt, In) and not any(
-                    bloom_contains(bloom, v, tname) for v in flt.value
-                ):
+                if not any(bloom_contains(bloom, v, tname) for v in flt.value):
                     return False
             except (TypeError, ValueError):
                 pass  # incomparable probe type → fall through to stats
@@ -689,8 +701,6 @@ def _stats_may_match(columns_meta: Sequence[dict], rows: int, filters: Sequence[
         # "max" may be absent (upper-bound truncation gave up) → unbounded
         mn, mx = st["min"], st.get("max")
         try:
-            if isinstance(flt, EqualTo) and not (mn <= flt.value and (mx is None or flt.value <= mx)):
-                return False
             if isinstance(flt, GreaterThan) and not (mx is None or mx > flt.value):
                 return False
             if isinstance(flt, GreaterThanOrEqual) and not (mx is None or mx >= flt.value):

@@ -19,15 +19,23 @@ from typing import Any, Dict, List, Optional, Sequence, Tuple
 from . import codec, codec_v2
 
 
+def _to_pylist(col) -> list:
+    """An Arrow column's values as Python objects. NumPy's ``tolist`` builds
+    them about 10× faster than Arrow's ``to_pylist``, but would turn the
+    nulls of an int column into NaN, so only null-free columns take it."""
+    return col.to_pylist() if col.null_count else col.to_numpy().tolist()
+
+
 class SCBFReader:
     """The one handle on a single SCBF file, v1 or v2 — the Spark DataSource,
     the MERGE/DELETE and compaction operators and the CLI all read through it.
 
     Opening reads the magic and the footer (v2) or header (v1) once and keeps
-    the file open for block reads; v1 column info is normalized into the v2
-    footer shape (``meta``), so the schema, the row count and the ``groups``
-    view are the same for both versions (v2 files come back with their richer
-    types and nulls as ``None``). Use it as a context manager, or ``close()``.
+    the file open for block reads; a v1 header comes back in the v2 footer
+    shape (``meta``, see ``codec.read_meta``), so the schema, the row count,
+    the ``groups`` view, pruning and the block decoder are the same for both
+    versions (v2 files come back with their richer types and nulls as
+    ``None``). Use it as a context manager, or ``close()``.
 
     >>> with SCBFReader("examples/sample.scbf") as r:
     ...     r.list_columns()
@@ -40,21 +48,12 @@ class SCBFReader:
         try:
             magic = self._f.read(8)
             if magic == codec_v2.MAGIC_V2:
-                self.version = 2
-                self.meta = codec_v2.read_meta(self._f)
+                self.version, read_meta = 2, codec_v2.read_meta
             elif magic == codec.MAGIC:
-                self.version = 1
-                self._info = codec.read_file_info(self._f)
-                self.meta = {
-                    "rows": self._info.total_rows,
-                    "columns": [
-                        {"name": m.name, "type": m.type_name, "nullable": False,
-                         "null_count": 0, "stats": None}
-                        for m in self._info.columns
-                    ],
-                }
+                self.version, read_meta = 1, codec.read_meta
             else:
                 raise codec.ScbfError(f"{path}: not an SCBF file")
+            self.meta = read_meta(self._f)
         except BaseException:
             self._f.close()
             raise
@@ -80,20 +79,16 @@ class SCBFReader:
         return self.meta["rows"]
 
     def read_all(self) -> Tuple[List[str], List[List]]:
-        if self.version == 1:
-            return codec.read_all(self._f)
         t = self.to_arrow()
-        cols = [t.column(n).to_pylist() for n in t.column_names]
+        cols = [_to_pylist(c) for c in t.columns]
         rows = [list(r) for r in zip(*cols)] if cols and t.num_rows else []
         return list(t.column_names), rows
 
     def read_columns(self, columns: Sequence[str]) -> Dict[str, list]:
-        if self.version == 1:
-            return {k: list(v) for k, v in codec.read_columns(self._f, columns).items()}
         # duplicate request names collapse dict-style, like the reference
         names = list(dict.fromkeys(columns))
         t = self.to_arrow(names)
-        return {n: t.column(n).to_pylist() for n in names}
+        return {n: _to_pylist(t.column(n)) for n in names}
 
     # -- engine extensions --------------------------------------------------
     @property
@@ -105,9 +100,10 @@ class SCBFReader:
     def may_match(self, filters: Sequence[Any], group: Optional[int] = None) -> bool:
         """False only when the footer stats prove that no row of the file (or
         of row group ``group``) matches the pushed ``filters``
-        (pyspark.sql.datasource Filters). Always True for v1, which stores no
-        stats. Bloom filters decode lazily, once per (group, column)."""
-        if self.version == 1 or not filters:
+        (pyspark.sql.datasource Filters). A v1 file stores no stats, so only
+        its lack of nulls proves anything (``IsNull`` never matches). Bloom
+        filters decode lazily, once per (group, column)."""
+        if not filters:
             return True
         if group is None:
             return codec_v2.file_may_match(self.meta, filters)
@@ -124,8 +120,6 @@ class SCBFReader:
         """Read ``columns`` (all by default) of row groups ``groups`` (all by
         default) as a ``pyarrow.Table``, skipping every group ``filters``
         prove cannot match. The result is a superset of the matching rows."""
-        if self.version == 1:
-            return codec.read_arrow_table(self._f, columns, info=self._info)
         if filters:
             want = range(len(self.groups)) if groups is None else groups
             groups = [i for i in want if self.may_match(filters, i)]

@@ -6,6 +6,7 @@ import csv
 import os
 
 import pytest
+from pyspark.sql.datasource import IsNotNull, IsNull
 
 from custom_columnar_format_spark.cli import main as cli_main
 from custom_columnar_format_spark.scbf.reader_api import SCBFReader
@@ -66,6 +67,10 @@ def test_reader_class_api(sample_csv, tmp_path):
     assert cols == {"score": [1.5, 2.5, 3.5]}
     pdf = r.to_pandas(["name"])
     assert list(pdf["name"]) == ["alpha", "beta", "gamma"]
+    # v1 stores no nulls, so IS NULL provably matches no row
+    assert r.may_match([IsNull(("id",))]) is False
+    assert r.may_match([IsNotNull(("id",))]) is True
+    assert r.to_arrow(filters=[IsNull(("id",))]).num_rows == 0
 
 
 def test_reader_to_spark(spark, sample_csv, tmp_path):

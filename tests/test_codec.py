@@ -6,12 +6,14 @@ sample file, and two-way byte-compat with the reference implementation
 import importlib.util
 import math
 import os
+import struct
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from custom_columnar_format_spark.scbf import codec
+from custom_columnar_format_spark.scbf.reader_api import SCBFReader
 
 from .conftest import REFERENCE
 
@@ -28,10 +30,15 @@ def _load_ref_module(name):
     return mod
 
 
+def read_columns(path, names):
+    with SCBFReader(path) as r:
+        return r.read_columns(names)
+
+
 def roundtrip(tmp_path, names, types, columns):
     path = str(tmp_path / "t.scbf")
     codec.write_table_path(path, names, types, columns)
-    got = codec.read_columns(path, names)
+    got = read_columns(path, names)
     return {n: list(got[n]) for n in names}
 
 
@@ -83,7 +90,13 @@ def test_list_api_and_arrow_write_identical_bytes(tmp_path, names, types, column
     with open(lists, "rb") as a, open(arrow, "rb") as b:
         assert a.read() == b.read()
     last = dict(zip(names, columns))  # the reader resolves a duplicate name last-wins
-    assert repr(codec.read_columns(lists, list(last))) == repr(last)
+    assert repr(read_columns(lists, list(last))) == repr(last)
+    # a whole-file read keeps every column, duplicates included, by position
+    got = codec.read_arrow_table(lists)
+    assert got.column_names == names and got.schema.types == table.schema.types
+    assert repr([c.to_pylist() for c in got.columns]) == repr(list(columns))
+    with SCBFReader(lists) as r:
+        assert repr(r.read_all()) == repr((names, [list(row) for row in zip(*columns)]))
 
 
 def test_list_api_rejects_bad_shapes(tmp_path):
@@ -101,10 +114,10 @@ def test_selective_read_order_and_unknown(tmp_path):
     codec.write_table_path(
         path, ["a", "b", "c"], [codec.TYPE_INT32] * 3, [[1], [2], [3]]
     )
-    got = codec.read_columns(path, ["c", "a"])
+    got = read_columns(path, ["c", "a"])
     assert list(got.keys()) == ["c", "a"]  # request order preserved (reference reader.py:111-133)
     with pytest.raises(KeyError):
-        codec.read_columns(path, ["nope"])
+        read_columns(path, ["nope"])
 
 
 def test_str_uncomp_field_correct(tmp_path):
@@ -117,11 +130,23 @@ def test_str_uncomp_field_correct(tmp_path):
         info = codec.read_file_info(f)
     (meta,) = info.columns
     assert meta.str_uncomp_size == len("".join(vals).encode("utf-8"))
+    # a reader treats the field as advisory: junk there, as the reference
+    # writer leaves, still decodes
+    name_len = 2 + len(meta.name.encode("utf-8"))
+    at = info.meta_table_offset + name_len + 1 + 8 + 3 * 8
+    with open(path, "r+b") as f:
+        f.seek(at)
+        f.write(struct.pack("<Q", 0xDEADBEEF))
+    with open(path, "rb") as f:
+        assert codec.read_file_info(f).columns[0].str_uncomp_size == 0xDEADBEEF
+    assert codec.read_arrow_table(path).column("s").to_pylist() == vals
+    assert read_columns(path, ["s"]) == {"s": vals}
 
 
 @pytest.mark.skipif(not os.path.exists(REF_SAMPLE), reason="reference sample not present")
 def test_golden_read_reference_sample():
-    names, rows = codec.read_all(REF_SAMPLE)
+    with SCBFReader(REF_SAMPLE) as r:
+        names, rows = r.read_all()
     assert len(rows) == 3 and len(names) == len(rows[0])
 
 
@@ -149,7 +174,7 @@ def test_we_read_reference_file(tmp_path):
     csv_path.write_text("id,score,name\n1,1.5,alpha\n2,2.5,beta\n")
     scbf_path = str(tmp_path / "ref.scbf")
     ref_writer.write_scbf(str(csv_path), scbf_path)
-    got = codec.read_columns(scbf_path, ["name", "id"])
+    got = read_columns(scbf_path, ["name", "id"])
     assert list(got["id"]) == [1, 2]
     assert list(got["name"]) == ["alpha", "beta"]
 
@@ -166,5 +191,5 @@ def test_property_roundtrip(tmp_path_factory, ints, texts):
     codec.write_table_path(
         path, ["i", "s"], [codec.TYPE_INT32, codec.TYPE_UTF8], [ints[:n], texts[:n]]
     )
-    got = codec.read_columns(path, ["i", "s"])
+    got = read_columns(path, ["i", "s"])
     assert list(got["i"]) == ints[:n] and list(got["s"]) == texts[:n]

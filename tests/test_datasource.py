@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from custom_columnar_format_spark.scbf import codec
+from custom_columnar_format_spark.scbf.reader_api import SCBFReader
 from custom_columnar_format_spark.sources.scbf_datasource import register
 
 
@@ -53,7 +54,8 @@ def test_single_file_reference_compat(spark, tmp_path):
     out = str(tmp_path / "single")
     _sample_df(spark, 50).coalesce(1).write.format("scbf").mode("overwrite").save(out)
     (f,) = glob.glob(os.path.join(out, "part-*.scbf"))
-    names, rows = codec.read_all(f)  # plain-codec readable (single-file mode)
+    with SCBFReader(f) as r:
+        names, rows = r.read_all()  # plain-codec readable (single-file mode)
     assert names == ["id", "score", "name"] and len(rows) == 50
 
 
