@@ -21,6 +21,8 @@ Scale design:
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -96,7 +98,9 @@ def connected_components(
     test_cc_local_vs_distributed). The local path takes only NUMERIC node
     ids (Python and Spark order strings differently); above the cap — the
     100 TB regime for from-scratch corpus closures — the distributed loop
-    runs unchanged, and the collect is bounded by the cap."""
+    runs unchanged, and the collect is bounded by the cap. If the loop
+    stops at ``max_iter`` with labels still changing, the components are
+    not closed and a ``RuntimeWarning`` says so."""
     # a NULL endpoint is no edge: drop it before either path (the driver-side
     # union-find cannot order None against ids)
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
@@ -170,6 +174,13 @@ def connected_components(
         labels = new_labels.select("node", F.col("new_label").alias("label"))
         if changed == 0:
             break
+    else:
+        warnings.warn(
+            f"connected_components stopped at max_iter={max_iter} before labels "
+            "converged: some components are split; raise max_iter",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return labels.select("node", F.col("label").alias("component"))
 
 

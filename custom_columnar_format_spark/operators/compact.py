@@ -5,43 +5,34 @@ hundreds of thousands of them, and open/footer costs start to dominate
 scans). Also re-sorts optionally, restoring stats-pruning quality that
 append-order writes lose.
 
-Staged write + swap-last like operators/merge.py: a failed compaction leaves
-the dataset untouched. Scratch lives in **hidden sibling** directories
-(``root/.k=v.compact-tmp``, see operators/_staging.py) so neither a crash
-before the swap nor a concurrent reader during it can ever see staging or
-backup files as data — the recursive file lister skips hidden and
-scratch-suffixed components. The swap itself is two renames; a reader racing
-that exact window can observe a missing directory, so in-place compaction
-assumes no concurrent writer and retry-on-read semantics (same contract as
-merge_into; ``vacuum.recover`` restores the backup if the driver dies between
-the renames). Hive-partitioned datasets compact partition directories
-independently (each directory is its own small-files problem).
+Hive-partitioned datasets compact each leaf directory independently (each
+is its own small-files problem); leaf directories and their files come from
+the dataset log (``sources/dataset_log.py``). Each leaf is rewritten into a
+hidden job directory (``<leaf>/.job-*``) whose parts are moved beside the
+data, and ONE log commit swaps every new file for every old one; the old
+files are unlinked only after it. Readers therefore see the dataset before
+or after the whole compaction, a failed or crashed run changes nothing they
+can see, and ``vacuum`` deletes what it left behind.
 """
 
 from __future__ import annotations
 
-import glob
 import math
 import os
+import shutil
+import uuid
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..scbf.reader_api import SCBFReader
+from ..sources import dataset_log
 from . import vacuum as _vacuum
-from ._staging import is_scratch_component, staging_path, swap_into_place
 
 
-def _leaf_dirs(path: str) -> list[str]:
-    """Directories that directly contain .scbf files (the dataset root, or
-    each hive partition directory). Stale scratch dirs left by a crashed
-    maintenance run are pruned — they hold superseded copies, not data."""
-    out = []
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [x for x in dirs if not is_scratch_component(x)]
-        if any(f.endswith(".scbf") for f in files):
-            out.append(root)
-    return sorted(out)
+def _version(path: str) -> int:
+    with SCBFReader(path) as h:
+        return h.version
 
 
 def compact(
@@ -72,20 +63,20 @@ def compact(
     if sort_by and zorder_by:
         raise ValueError("pass at most one of sort_by / zorder_by")
 
-    # heal any swap a previous driver crashed in the middle of, so the
+    # heal a legacy swap an older driver crashed in the middle of, so the
     # backup's rows are visible again before we rewrite
     _vacuum.recover(path)
 
-    stats = {"dirs": 0, "files_before": 0, "files_after": 0}
-    for d in _leaf_dirs(path):
-        files = sorted(glob.glob(os.path.join(d, "*.scbf")))
-        if not files:
-            continue
-        version = 1
-        for p in files:
-            with SCBFReader(p) as h:
-                version = max(version, h.version)
-        df: DataFrame = spark.read.format("scbf").load(d)
+    base = dataset_log.current_files(path)
+    leaves: dict[str, list[str]] = {}
+    for f in base:
+        leaves.setdefault(os.path.dirname(f), []).append(f)
+    job_name = f".job-{uuid.uuid4().hex[:12]}"
+    added = []
+    for d, files in sorted(leaves.items()):
+        version = max(_version(p) for p in files)
+        rel = ",".join(os.path.basename(p) for p in files)
+        df: DataFrame = spark.read.format("scbf").option("files", rel).load(d)
         if rows_per_file is not None:
             n = df.count()
             n_out = max(1, math.ceil(n / rows_per_file))
@@ -105,17 +96,21 @@ def compact(
         else:
             df = df.coalesce(n_out) if n_out < len(files) else df.repartition(n_out)
 
-        staging = staging_path(d, ".compact-tmp")
         w = df.write.format("scbf").option("version", str(version)).mode("overwrite")
         if rows_per_group:
             if version != 2:
                 raise ValueError("rows_per_group requires a v2 dataset")
             w = w.option("rows_per_group", str(rows_per_group))
-        w.save(staging)
+        w.save(os.path.join(d, job_name))
+        dataset_log.begin(path)  # parts moved in stay invisible until the commit
+        for p in dataset_log.current_files(os.path.join(d, job_name)):
+            added.append(os.path.join(d, os.path.basename(p)))
+            os.rename(p, added[-1])
 
-        swap_into_place(d, staging, ".compact-old")
-
-        stats["dirs"] += 1
-        stats["files_before"] += len(files)
-        stats["files_after"] += len(glob.glob(os.path.join(d, "*.scbf")))
-    return stats
+    if base:
+        dataset_log.commit(path, added, base)
+    for p in base:
+        os.unlink(p)
+    for d in leaves:
+        shutil.rmtree(os.path.join(d, job_name), ignore_errors=True)
+    return {"dirs": len(leaves), "files_before": len(base), "files_after": len(added)}

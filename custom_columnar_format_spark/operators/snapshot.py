@@ -15,16 +15,17 @@ multi-version table format):
   the streaming sink is append-only by construction), so every snapshot of
   an append-only dataset stays readable: ``read_snapshot`` sees exactly the
   manifest's files, concurrent appends after the snapshot are invisible.
-- **Rewrites invalidate older snapshots.** ``compact``/``merge_into``
-  replace files; a manifest naming a replaced file fails loudly at read
-  with the missing paths (the Delta analog: VACUUM beyond retention breaks
-  time travel). A true multi-snapshot store would keep rewritten files
-  until no manifest references them — that is ``expire_snapshots``' job
-  here: drop manifests, then ``vacuum`` reclaims.
-- **Rollback** restores the dataset to a manifest by deleting data files
-  the manifest doesn't name. It refuses if any manifest file is missing
-  (nothing is deleted — all-or-nothing), so a crash mid-rollback leaves a
-  dataset that is a superset of the target and rollback can simply re-run.
+- **Rewrites invalidate older snapshots.** Overwrite, ``compact`` and
+  ``merge_into`` remove files from the dataset log and then unlink them; a
+  manifest naming a removed file fails loudly at read with the missing
+  paths (the Delta analog: VACUUM beyond retention breaks time travel).
+  Making snapshots versions of the dataset log, so that rewritten files
+  are kept while a snapshot names them, is future work.
+- **Rollback** restores the dataset to a manifest in one dataset-log commit
+  (``sources/dataset_log.py``), then unlinks the data files the manifest
+  doesn't name. It refuses if any manifest file is missing (nothing is
+  changed), and a crash after the commit only leaves unnamed files for
+  ``vacuum``.
 
 At 100 TB the manifest is small (file names, not data) and creation is one
 metadata listing — no data I/O, same as Iceberg snapshot creation.
@@ -36,6 +37,8 @@ import json
 import os
 import time
 from typing import Optional
+
+from ..sources import dataset_log
 
 SNAP_DIR = "_snapshots"
 
@@ -149,16 +152,15 @@ def read_snapshot(spark, path: str, snapshot):
 
 
 def rollback(path: str, snapshot) -> dict:
-    """Restore the dataset to a snapshot's exact file set by deleting data
-    files the manifest doesn't name (all manifest files must still exist —
-    verified before anything is deleted). Append-only writers make this the
-    cheap undo for a bad batch. Returns {"kept": n, "deleted": n}."""
+    """Restore the dataset to a snapshot's exact file set: one log commit
+    to the manifest's files (all must still exist — verified before
+    anything changes), then unlink the files it dropped. Append-only writers
+    make this the cheap undo for a bad batch. Returns {"kept": n,
+    "deleted": n}."""
     root = os.path.abspath(path)
     keep = set(snapshot_files(path, snapshot))  # raises if any are missing
-    from ..sources.scbf_datasource import _list_scbf_files
-
-    current = _list_scbf_files(root)
-    extras = [f for f in current if f not in keep]
+    extras = [f for f in dataset_log.current_files(root) if f not in keep]
+    dataset_log.commit(root, keep, extras)
     for f in extras:
         os.unlink(f)
     return {"kept": len(keep), "deleted": len(extras)}

@@ -1,36 +1,37 @@
-"""Vacuum + crash recovery for SCBF dataset scratch artifacts.
+"""Vacuum + crash recovery for SCBF datasets.
 
-``vacuum`` removes orphans: hidden ``.tmp-*.scbf`` files left by tasks that
-died between write and commit, and staging/backup directories left by a
-driver that crashed mid-swap (``operators/merge.py`` / ``operators/
-compact.py``). Scratch dirs use the hidden-sibling naming of
-``operators/_staging.py`` (``root/.k=v.compact-tmp``); the legacy visible
-naming (``root/k=v.compact-tmp``) is still recognised. Because Python's
-``glob`` never matches dot-prefixed components with ``*``/``**``, discovery
-walks the tree with ``os.walk`` and classifies names via
-``_staging.split_scratch`` instead of globbing.
+``vacuum`` deletes every ``*.scbf`` file under the dataset root, hidden job
+directories included, that the current dataset-log version does not name
+(``sources/dataset_log.py``; for a dataset without a log, the files its glob
+listing does not see). Those are what a crash left behind: a dead task's
+hidden ``.tmp-*`` file, a job's parts moved beside the data but never
+committed, or a removed file whose unlink never ran. Nothing the current
+version names is ever a candidate.
 
-Two safety rules:
+It also removes the staging and backup directories of older maintenance
+runs, which swapped directories instead of committing to the log (see
+``operators/_staging.py``; the hidden ``root/.k=v.compact-tmp`` and the
+legacy visible ``root/k=v.compact-tmp`` namings). Python's ``glob`` never
+matches dot-prefixed components, so discovery walks the tree with
+``os.walk`` and classifies names via ``_staging.split_scratch``. A ``*-old``
+BACKUP whose dataset directory is missing is the only surviving copy of that
+data (the driver died between the two swap renames): ``vacuum`` refuses to
+delete it and ``recover`` renames it back into place. ``compact``/``merge``
+call ``recover`` on entry so such a dataset heals on the next maintenance
+run.
 
-- Committed data is never touched: visible ``*.scbf`` files and hive
-  partition directories are not candidates.
-- A ``*-old`` BACKUP whose dataset directory is missing is the only
-  surviving copy of that data (the driver died between the two swap
-  renames). ``vacuum`` refuses to delete it; ``recover`` renames it back
-  into place. ``compact``/``merge`` call ``recover`` on entry so a crashed
-  swap heals on the next maintenance run.
-
-Like Delta's VACUUM, an age threshold guards against deleting scratch that a
-LIVE job is still writing (default 1 hour; pass 0 in tests).
+Like Delta's VACUUM, an age threshold guards against deleting files that a
+LIVE job is still writing or about to commit (default 1 hour; pass 0 in
+tests).
 """
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 import time
 
+from ..sources import dataset_log
 from ._staging import split_scratch
 
 #: sibling link-dirs merge stages its touched-file symlinks in; always
@@ -105,28 +106,32 @@ def recover(path: str) -> list[str]:
 
 
 def vacuum(path: str, older_than_seconds: float = 3600.0) -> dict:
-    """Delete orphaned tmp files and scratch dirs for the dataset at
-    ``path`` older than the threshold. Backups that are the only copy of a
-    vanished dataset dir are NEVER deleted (see ``recover``). Returns
-    counts: {"tmp_files": n, "staging_dirs": n}."""
+    """Delete the unnamed files and legacy scratch dirs of the dataset at
+    ``path`` that are older than the threshold. Backups that are the only
+    copy of a vanished dataset dir are NEVER deleted (see ``recover``).
+    Returns counts: {"tmp_files": n, "staging_dirs": n}."""
     now = time.time()
     stats = {"tmp_files": 0, "staging_dirs": 0}
 
-    for p in glob.glob(os.path.join(path, "**", ".tmp-*.scbf"), recursive=True):
+    def expired(p: str) -> bool:
         try:
-            if now - os.path.getmtime(p) >= older_than_seconds:
+            return now - os.path.getmtime(p) >= older_than_seconds
+        except FileNotFoundError:
+            return False  # removed concurrently
+
+    named = {os.path.abspath(f) for f in dataset_log.current_files(path)}
+    for walk_root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if _scratch_of(d) is None]  # legacy rules below
+        for name in files:
+            p = os.path.abspath(os.path.join(walk_root, name))
+            if name.endswith(".scbf") and p not in named and expired(p):
                 os.remove(p)
                 stats["tmp_files"] += 1
-        except FileNotFoundError:
-            pass
 
     for scratch, ds, is_backup in _scratch_dirs(path):
         if is_backup and not os.path.exists(ds):
             continue  # only surviving copy — recover() restores it
-        try:
-            if now - os.path.getmtime(scratch) >= older_than_seconds:
-                shutil.rmtree(scratch)
-                stats["staging_dirs"] += 1
-        except FileNotFoundError:
-            pass
+        if expired(scratch):
+            shutil.rmtree(scratch)
+            stats["staging_dirs"] += 1
     return stats

@@ -29,9 +29,11 @@ Design (Spark-first, NOT a translation of the reference's single-file engine):
 - **Arrow exchange** — ``read()`` yields ``pyarrow.RecordBatch`` (SCBF's utf8
   layout is Arrow's StringArray layout, so strings transfer without per-value
   copying); the writer is a ``DataSourceArrowWriter``.
-- **Commit protocol** — writers emit to hidden ``.tmp-<uuid>.scbf`` names and
-  ``commit()`` renames them, so failed/speculative tasks never leave partial
-  files visible.
+- **Commit protocol** — tasks write hidden ``.tmp-<uuid>.scbf`` files, and the
+  job's ``commit()`` renames them to ``part-*`` names and then publishes one
+  version of the dataset log (``sources/dataset_log.py``). A reader lists
+  the files of the latest version, so a failed or speculative task, or a
+  job that dies before its commit, never makes a file visible.
 """
 
 from __future__ import annotations
@@ -64,6 +66,7 @@ from pyspark.sql.types import (
 
 from ..scbf import codec, codec_v2
 from ..scbf.reader_api import SCBFReader
+from . import dataset_log
 
 #: Spark type per SCBF column type name (v1's three types share v2's names)
 SPARK_TYPES = {
@@ -82,28 +85,14 @@ def _spark_classes(type_names: Sequence[str]) -> tuple:
     return tuple(type(SPARK_TYPES[t]) for t in type_names)
 
 
-def _under_scratch(root: str, file_path: str) -> bool:
-    """True when any directory component of ``file_path`` below ``root`` is a
-    maintenance scratch dir (hidden, or suffixed ``*.merge-tmp``/``-old`` /
-    ``*.compact-tmp``/``-old``). New scratch is dot-prefixed (invisible to
-    glob already); this also shields against legacy visible staging dirs, so
-    a crashed or concurrent compaction can never be ingested as data rows."""
-    from ..operators._staging import is_scratch_component
-
-    rel = os.path.relpath(os.path.abspath(file_path), os.path.abspath(root))
-    comps = rel.split(os.sep)[:-1]  # directory components only
-    return any(is_scratch_component(c) for c in comps)
-
-
 def _list_scbf_files(
     path: str, snapshot: Optional[str] = None, files: Optional[str] = None
 ) -> List[str]:
-    """Resolve a load path to concrete SCBF files: a single file, a directory
-    of ``*.scbf`` (searched recursively, so hive-partitioned ``k=v`` subdirs
-    are included), or a glob pattern. Maintenance scratch directories
-    (``.k=v.compact-tmp`` siblings and legacy in-tree staging) are never
-    listed — see ``operators/_staging.py``. With ``snapshot``, the listing
-    comes from the pinned manifest instead (time travel — see
+    """Resolve a load path to concrete SCBF files: a single file, a dataset
+    directory (the latest version of its log; without a log, every ``*.scbf``
+    below it, so hive-partitioned ``k=v`` subdirs are included — see
+    ``sources/dataset_log.py``), or a glob pattern. With ``snapshot``, the
+    listing comes from the pinned manifest instead (time travel — see
     ``operators/snapshot.py``)."""
     if snapshot is not None and files is not None:
         # both pin the file set; silently preferring one would read a set the
@@ -140,11 +129,7 @@ def _list_scbf_files(
     if os.path.isfile(path):
         return [path]
     if os.path.isdir(path):
-        files = sorted(
-            f
-            for f in _glob.glob(os.path.join(path, "**", "*.scbf"), recursive=True)
-            if not _under_scratch(path, f)
-        )
+        files = dataset_log.current_files(path)
         if not files:
             raise FileNotFoundError(f"no *.scbf files under directory {path}")
         return files
@@ -167,15 +152,7 @@ def _partition_spec(root: str, file_path: str) -> "OrderedDict[str, str]":
     rel = os.path.relpath(os.path.dirname(os.path.abspath(file_path)), os.path.abspath(root))
     if rel == ".":
         return spec
-    from ..operators._staging import is_scratch_component
-
     for comp in rel.split(os.sep):
-        if is_scratch_component(comp):
-            # maintenance scratch (".k=v.compact-tmp" etc.) is never a
-            # partition component; the file lister excludes these paths, and
-            # skipping here keeps a directly-loaded scratch file from
-            # corrupting partition values (e.g. int key -> string)
-            continue
         if "=" not in comp:
             raise codec.ScbfError(
                 f"{file_path}: directory component {comp!r} under dataset root is not "
@@ -186,15 +163,15 @@ def _partition_spec(root: str, file_path: str) -> "OrderedDict[str, str]":
     return spec
 
 
-def _dataset_layout(path: str, snapshot: Optional[str] = None, files_opt: Optional[str] = None):
-    """(files, partition keys, per-key python type, per-file typed values).
+def _dataset_layout(path: str, files: Sequence[str]):
+    """(partition keys, per-key python type, per-file typed values) of the
+    dataset at ``path``, for ``files`` as one listing of it returned.
 
     Partition keys must be identical (same names, same order) for every file.
     A key is typed int when every file's value parses as an int, else str —
     the same inference Spark applies to parquet partition directories."""
-    files = _list_scbf_files(path, snapshot, files_opt)
     raw_specs = [_partition_spec(path, f) for f in files]
-    keys = list(raw_specs[0].keys())
+    keys = list(raw_specs[0].keys()) if raw_specs else []
     for f, s in zip(files, raw_specs):
         if list(s.keys()) != keys:
             raise codec.ScbfError(
@@ -216,7 +193,7 @@ def _dataset_layout(path: str, snapshot: Optional[str] = None, files_opt: Option
         {k: key_types[k](s[k]) for k in keys}
         for s in raw_specs
     ]
-    return files, keys, key_types, dict(zip(files, typed))
+    return keys, key_types, dict(zip(files, typed))
 
 
 def _dir_stats(values: dict) -> list:
@@ -291,7 +268,8 @@ class ScbfReader(DataSourceReader):
         # Use a fresh spark.read per differently-filtered query, or disable
         # skipping with .option("file_skipping", "false").
         filters = self._filters if self.file_skipping else []
-        files, _keys, _types, specs = _dataset_layout(self.path, self.snapshot, self.files_opt)
+        files = _list_scbf_files(self.path, self.snapshot, self.files_opt)
+        _keys, _types, specs = _dataset_layout(self.path, files)
         # Partition pruning first (cheapest: no file I/O at all).
         candidates = [p for p in files if codec_v2._stats_may_match(_dir_stats(specs[p]), 1, filters)]
 
@@ -414,9 +392,13 @@ class ScbfCommitMessage(WriterCommitMessage):
 
 
 class ScbfWriter(DataSourceArrowWriter):
-    """One SCBF file per Spark partition, written via a tmp-name commit
-    protocol (write hidden, rename on commit) so aborted tasks leave nothing
-    visible. Single-file reference-compat output = ``df.coalesce(1)`` first."""
+    """One SCBF file per Spark partition. Tasks write hidden ``.tmp-*``
+    files; ``commit`` renames them to ``part-*`` names beside the data and
+    publishes them in one dataset-log version, which on overwrite also
+    removes every current file. Files are unlinked only after that version
+    is published, so readers see the old or the new file set, and aborted
+    tasks leave nothing visible. Single-file reference-compat output =
+    ``df.coalesce(1)`` first."""
 
     def __init__(self, schema: StructType, options, overwrite: bool):
         self.schema = schema
@@ -547,18 +529,29 @@ class ScbfWriter(DataSourceArrowWriter):
         return ScbfCommitMessage(files=tuple(files), rows=table.num_rows)
 
     def commit(self, messages):
-        if self.overwrite:
-            for old in _glob.glob(os.path.join(self.path, "**", "part-*.scbf"), recursive=True):
-                os.unlink(old)
-        for m in messages:
-            for tmp, final in (m.files if m else ()):
-                os.replace(tmp, final)
+        self._publish(_task_files(messages), lambda _f: self.overwrite)
+
+    def _publish(self, renames, doomed) -> None:
+        """Rename each (tmp, final) pair, then commit the final names in one
+        log version that also removes every current file ``doomed`` picks,
+        then unlink the removed files."""
+        base = dataset_log.begin(self.path)
+        for tmp, final in renames:
+            os.replace(tmp, final)
+        removed = [f for f in base if doomed(f)]
+        dataset_log.commit(self.path, [final for _tmp, final in renames], removed)
+        for f in removed:
+            os.unlink(f)
 
     def abort(self, messages):
-        for m in messages:
-            for tmp, _final in (m.files if m else ()):
-                if os.path.exists(tmp):
-                    os.unlink(tmp)
+        for tmp, _final in _task_files(messages):
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+
+
+def _task_files(messages) -> list:
+    """Every (tmp, final) pair the job's tasks wrote."""
+    return [pair for m in messages for pair in (m.files if m else ())]
 
 
 class ScbfStreamReader(DataSourceStreamReader):
@@ -599,6 +592,9 @@ class ScbfStreamReader(DataSourceStreamReader):
         return {"count": len(files), "last": os.path.basename(files[-1]) if files else ""}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+        # one listing per microbatch: partition values come from the same
+        # file list as the offsets, so a commit in between cannot strip a
+        # new file of its hive values
         files = self._files()
         lo, hi = start["count"], min(end["count"], len(files))
         if lo and (lo > len(files) or os.path.basename(files[lo - 1]) != start["last"]):
@@ -608,8 +604,8 @@ class ScbfStreamReader(DataSourceStreamReader):
                 "were removed or a new file sorted into the processed prefix "
                 "(streaming reads require append-only, monotonically-named files)"
             )
-        _f, _keys, _types, specs = _dataset_layout(self.path) if files else ([], [], {}, {})
-        parts = [ScbfFilePartition(p, specs.get(p)) for p in files[lo:hi]]
+        _keys, _types, specs = _dataset_layout(self.path, files)
+        parts = [ScbfFilePartition(p, specs[p]) for p in files[lo:hi]]
         return parts or [ScbfFilePartition("")]
 
     def read(self, partition: ScbfFilePartition):
@@ -623,17 +619,17 @@ class ScbfStreamWriter(DataSourceStreamArrowWriter):
     """Structured Streaming sink for SCBF: each microbatch's tasks write
     hidden tmp files (delegating to the batch writer, so compression/version/
     partition_by options all apply), and ``commit(batchId)`` renames them to
-    ``part-b<batchId>-r<runId>-*`` names, in ascending final-name order so a
-    concurrent tailing ``readStream`` only ever observes a sorted prefix of
-    the batch. Spark-level re-commits of the same batch within one query run
-    first delete that (batch, run)'s previously-visible files, making the
-    commit idempotent. The run id scopes the delete: a NEW query writing
-    into the same directory must never clobber a previous run's committed
-    batch 0 (that would be silent data loss). The narrow trade-off: a driver
-    crash *mid-commit* followed by a checkpoint-recovered replay is a new
-    run and can leave the crashed attempt's partial files as duplicates —
-    eliminating that too requires a Parquet-sink-style `_spark_metadata`
-    commit log (future work, noted in README)."""
+    ``part-b<batchId>-r<runId>-*`` names and publishes them in one
+    dataset-log version, so a tailing ``readStream`` sees the whole batch or
+    none of it. A Spark-level re-commit of the same batch within one query
+    run removes that (batch, run)'s earlier files in the same version,
+    making the commit idempotent. The run id scopes the removal: a NEW query
+    writing into the same directory must never clobber a previous run's
+    committed batch 0 (that would be silent data loss). The narrow
+    trade-off: a checkpoint-recovered replay of a batch whose commit was
+    published is a new run and leaves that batch's files as duplicates —
+    eliminating that too requires recording batch ids in the log (future
+    work, noted in README)."""
 
     def __init__(self, schema: StructType, options, overwrite: bool):
         if overwrite:
@@ -656,20 +652,11 @@ class ScbfStreamWriter(DataSourceStreamArrowWriter):
         return os.path.join(d, f"part-b{batch_id:06d}-r{self.run_id}-{base[len('part-'):]}")
 
     def commit(self, messages, batchId: int) -> None:
-        stale = _glob.glob(
-            os.path.join(self.path, "**", f"part-b{batchId:06d}-r{self.run_id}-*.scbf"),
-            recursive=True,
+        prefix = f"part-b{batchId:06d}-r{self.run_id}-"
+        self._inner._publish(
+            [(tmp, self._batch_final(final, batchId)) for tmp, final in _task_files(messages)],
+            lambda f: os.path.basename(f).startswith(prefix),
         )
-        for s in stale:
-            os.unlink(s)
-        renames = sorted(
-            ((self._batch_final(final, batchId), tmp)
-             for m in messages
-             for tmp, final in (m.files if m else ())),
-            key=lambda t: (os.path.basename(t[0]), t[0]),  # reader's sort order
-        )
-        for final, tmp in renames:
-            os.replace(tmp, final)
 
     def abort(self, messages, batchId: int) -> None:
         self._inner.abort(messages)
@@ -708,9 +695,8 @@ class ScbfDataSource(DataSource):
         path = self.options.get("path")
         if path is None:
             raise ValueError("scbf requires a path")
-        files, keys, key_types, _specs = _dataset_layout(
-            path, self.options.get("snapshot"), self.options.get("files")
-        )
+        files = _list_scbf_files(path, self.options.get("snapshot"), self.options.get("files"))
+        keys, key_types, _specs = _dataset_layout(path, files)
         if self.options.get("merge_schemas", "false").lower() == "true":
             # Schema evolution: union of every file's schema, first-seen
             # column order, all nullable (older files back-fill nulls at

@@ -261,3 +261,18 @@ def test_cc_local_vs_distributed(spark):
         ).collect()
     }
     assert inc_local == inc_dist == {(1, 1), (2, 1), (500, 1), (600, 600), (601, 600)}
+
+
+def test_cc_warns_when_loop_stops_unconverged(spark):
+    """The distributed loop capped at max_iter before labels stop changing
+    returns split components, so it must say so; a converged run is silent."""
+    import warnings
+
+    import pytest
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(5)], "id_a: long, id_b: long")
+    with pytest.warns(RuntimeWarning, match="max_iter=1"):
+        clustering.connected_components(df, max_iter=1, local_max_edges=0).collect()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        clustering.connected_components(df, max_iter=20, local_max_edges=0).collect()

@@ -89,8 +89,6 @@ def test_compact_heals_crashed_swap_first(spark, sf_small, tmp_path):
     gets compacted as data."""
     import os
 
-    from custom_columnar_format_spark.operators._staging import staging_path
-
     path = str(tmp_path / "healed")
     o = _orders(spark, sf_small).withColumn("pk", (F.col("o_orderkey") % 2).cast("int"))
     (
@@ -104,12 +102,12 @@ def test_compact_heals_crashed_swap_first(spark, sf_small, tmp_path):
     n = spark.read.format("scbf").load(path).count()
 
     part = os.path.join(path, "pk=1")
-    os.rename(part, staging_path(part, ".compact-old"))  # crash window
+    os.rename(part, os.path.join(path, ".pk=1.compact-old"))  # crash window
 
     stats = compact_op.compact(spark, path, target_files=2)
     assert stats["dirs"] == 2  # both partitions visible again and compacted
     assert spark.read.format("scbf").load(path).count() == n
-    assert not os.path.exists(staging_path(part, ".compact-old"))
+    assert not os.path.exists(os.path.join(path, ".pk=1.compact-old"))
 
 
 def test_compact_zorder_by_enables_2d_skipping(spark, sf_small, tmp_path):

@@ -312,14 +312,12 @@ def test_delete_keys_all_rows_leaves_readable_empty_dataset(spark, sf_small, tmp
 def test_delete_keys_clears_stale_crashed_staging(spark, sf_small, tmp_path):
     """A crashed prior run's staged part files and symlink scratch must be
     cleared on entry — never swapped into the live dataset (silent dup rows)."""
-    from custom_columnar_format_spark.operators._staging import staging_path
-
     target = str(tmp_path / "orders_stale")
     o = _write_target(spark, sf_small, target)
     n0 = o.count()
 
     # simulate the crash: staged parts + stale symlinks left behind
-    staging = staging_path(target, ".merge-tmp")
+    staging = str(tmp_path / ".orders_stale.merge-tmp")
     os.makedirs(staging)
     real = glob.glob(f"{target}/*.scbf")[0]
     import shutil as sh

@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from custom_columnar_format_spark.operators import vacuum
-from custom_columnar_format_spark.operators._staging import staging_path
 
 
 @pytest.fixture(autouse=True)
@@ -26,14 +25,14 @@ def test_vacuum_removes_orphans_keeps_data(spark, sf_small, tmp_path):
     # plant orphans: a dead task's tmp file, a crashed merge's hidden sibling
     # staging dir, legacy visible sibling staging, and hidden partition scratch
     open(os.path.join(path, ".tmp-deadbeef.scbf"), "wb").write(b"partial")
-    os.makedirs(staging_path(path, ".merge-tmp"))
+    os.makedirs(str(tmp_path / ".ds.merge-tmp"))
     os.makedirs(path + ".compact-tmp")  # legacy visible naming
     os.makedirs(os.path.join(path, ".pk=1.compact-tmp"))
 
     stats = vacuum.vacuum(path, older_than_seconds=0)
     assert stats == {"tmp_files": 1, "staging_dirs": 3}
     assert not os.path.exists(os.path.join(path, ".tmp-deadbeef.scbf"))
-    assert not os.path.exists(staging_path(path, ".merge-tmp"))
+    assert not os.path.exists(str(tmp_path / ".ds.merge-tmp"))
     assert not os.path.exists(path + ".compact-tmp")
     assert not os.path.exists(os.path.join(path, ".pk=1.compact-tmp"))
     assert spark.read.format("scbf").load(path).count() == n
@@ -59,7 +58,7 @@ def test_vacuum_never_deletes_only_copy_backup(spark, sf_small, tmp_path):
     ).mode("overwrite").save(path)
     n = spark.read.format("scbf").load(path).count()
 
-    backup = staging_path(path, ".compact-old")
+    backup = str(tmp_path / ".ds3.compact-old")
     os.rename(path, backup)  # simulate the crash window
 
     stats = vacuum.vacuum(path, older_than_seconds=0)
@@ -86,12 +85,12 @@ def test_recover_partition_dir_and_vacuum_completed_backup(spark, sf_small, tmp_
     n = spark.read.format("scbf").load(path).count()
 
     part = os.path.join(path, "pk=1")
-    os.rename(part, staging_path(part, ".compact-old"))
+    os.rename(part, os.path.join(path, ".pk=1.compact-old"))
     assert vacuum.recover(path) == [part]
     assert spark.read.format("scbf").load(path).count() == n
 
     # completed swap: dataset dir present alongside a stale backup → deletable
-    os.makedirs(staging_path(part, ".compact-old"))
+    os.makedirs(os.path.join(path, ".pk=1.compact-old"))
     stats = vacuum.vacuum(path, older_than_seconds=0)
     assert stats["staging_dirs"] == 1
-    assert not os.path.exists(staging_path(part, ".compact-old"))
+    assert not os.path.exists(os.path.join(path, ".pk=1.compact-old"))
