@@ -8,7 +8,10 @@ plus engine extensions the reference lacks. Conversion runs on Spark
 parity: the result is one plain ``.scbf`` file byte-readable by the
 reference's reader. ``--local`` bypasses the JVM entirely and uses the pure
 codec (its export reads v1 and v2 files) — handy for small files and
-air-gapped metadata peeks.
+air-gapped metadata peeks. Its import parses the CSV straight into Arrow
+string columns (no Python row lists), infers and converts them with
+``scbf.inference``'s Arrow-column forms and compresses the blocks on one
+thread per core.
 
 Schema inference follows Spark semantics (all-rows sampling) by default;
 ``--compat-inference`` reproduces the reference's first-non-empty-value rule
@@ -48,19 +51,62 @@ def _finalize_single_file(out_dir: str, target: str) -> None:
     shutil.rmtree(out_dir, ignore_errors=True)
 
 
+def _read_csv_strings(path: str):
+    """(header, columns): the first record's fields verbatim (duplicates
+    allowed, a UTF-8 BOM dropped) and one Arrow string column per field over
+    the remaining records. Every cell stays a string — Arrow's own type
+    inference would read ``"007"`` as 7 — and an empty cell is ``""``, never
+    null. Blank lines are skipped; a record with too few or too many fields,
+    or a file with no record at all, raises ``ScbfError``."""
+    import pyarrow as pa
+    import pyarrow.csv as pacsv
+
+    from .scbf.codec import ScbfError
+
+    # Only the field count is taken from Python's reader; Arrow tokenizes
+    # the header with the data, under positional column keys.
+    with open(path, newline="", encoding="utf-8") as f:
+        first = next(filter(None, _csv.reader(f)), None)
+    if first is None:
+        raise ScbfError(f"{path}: empty CSV file (no header record)")
+    keys = [str(i) for i in range(len(first))]
+    try:
+        table = pacsv.read_csv(
+            path,
+            # one thread: error messages then carry the record number
+            read_options=pacsv.ReadOptions(column_names=keys, use_threads=False),
+            parse_options=pacsv.ParseOptions(newlines_in_values=True),
+            convert_options=pacsv.ConvertOptions(
+                column_types=dict.fromkeys(keys, pa.large_string()),
+                strings_can_be_null=False,
+                quoted_strings_can_be_null=False,
+            ),
+        )
+    except pa.ArrowInvalid as e:  # "Row #N: Expected 3 columns, got 2: <record>"
+        raise ScbfError(f"{path}: {e}") from None
+    return [c[0].as_py() for c in table.columns], [c.slice(1) for c in table.columns]
+
+
 def csv_to_custom(args) -> None:
     if args.local:
+        import pyarrow as pa
+
         from .scbf import codec, inference
 
-        with open(args.csv_path, newline="", encoding="utf-8") as f:
-            rows = list(_csv.reader(f))
-        header, data = rows[0], rows[1:]
-        infer = inference.infer_compat if args.compat_inference else inference.infer_full
-        types = infer(data, len(header))
-        columns = [
-            inference.parse_column([r[i] for r in data], types[i]) for i in range(len(header))
-        ]
-        codec.write_table_path(args.out_path, header, types, columns, level=args.compression_level)
+        header, strings = _read_csv_strings(args.csv_path)
+        infer = (
+            inference.infer_compat_arrow if args.compat_inference else inference.infer_full_arrow
+        )
+        types = infer(strings)
+        table = pa.Table.from_arrays(
+            [inference.parse_arrow(c, t) for c, t in zip(strings, types)], names=header
+        )
+        codec.write_arrow_table(
+            args.out_path,
+            table,
+            level=args.compression_level,
+            workers=len(os.sched_getaffinity(0)),
+        )
         return
 
     from .sources.scbf_datasource import register

@@ -8,10 +8,13 @@ types: int32 (code 1), float64 (code 2), utf8 (code 3, prefix-sum u32 offsets
 
 Write entry points:
 
-- ``write_arrow_table(path, table)``: a ``pyarrow.Table`` (the Spark writer);
+- ``write_arrow_table(path, table)``: a ``pyarrow.Table`` (the Spark writer,
+  and ``cli csv_to_custom --local``, which alone passes ``workers`` to
+  compress the blocks on threads);
 - ``write_table_path(path, names, type_codes, columns)``: Python value lists,
-  the reference's list API (``cli csv_to_custom --local``), turned into Arrow
-  arrays so both go through the one Arrow → raw-block encoder;
+  the reference's list API, kept as the reference and for list callers; the
+  lists become Arrow arrays so both go through the one Arrow → raw-block
+  encoder;
 - ``write_table_raw(out, ...)``: the layout emitter behind both, for
   already-packed raw blocks and any binary sink.
 
@@ -110,12 +113,16 @@ def _meta_record_size(name_bytes: bytes, type_code: int) -> int:
     return base + (6 * 8 if type_code == TYPE_UTF8 else 3 * 8)
 
 
+def _int32_overflow() -> ScbfError:
+    return ScbfError(
+        f"int32 overflow: values outside [{INT32_MIN}, {INT32_MAX}] "
+        "(SCBF v1 has no wider integer type; cast to float64 or use parquet)"
+    )
+
+
 def _check_int32_range(arr: np.ndarray) -> None:
     if arr.size and (arr.min() < INT32_MIN or arr.max() > INT32_MAX):
-        raise ScbfError(
-            f"int32 overflow: values outside [{INT32_MIN}, {INT32_MAX}] "
-            "(SCBF v1 has no wider integer type; cast to float64 or use parquet)"
-        )
+        raise _int32_overflow()
 
 
 def _check_utf8_blob(blob_len: int) -> None:
@@ -126,6 +133,25 @@ def _check_utf8_blob(blob_len: int) -> None:
         )
 
 
+def _compress_blocks(raw_blocks, level: int, workers: Optional[int]):
+    """zlib-compress every raw block, in order. With ``workers`` > 1 the
+    blocks go largest-first to a thread pool of that size: ``zlib.compress``
+    releases the interpreter lock while it deflates, so the threads overlap,
+    and each block's bytes do not depend on which thread compressed it."""
+    flat = [b for blk in raw_blocks for b in blk]
+    if not workers or workers < 2 or len(flat) < 2:
+        return [tuple(zlib.compress(b, level) for b in blk) for blk in raw_blocks]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(min(workers, len(flat))) as pool:
+        done = {
+            i: pool.submit(zlib.compress, flat[i], level)
+            for i in sorted(range(len(flat)), key=lambda i: -len(flat[i]))
+        }
+    out = iter([done[i].result() for i in range(len(flat))])
+    return [tuple(next(out) for _ in blk) for blk in raw_blocks]
+
+
 def write_table_raw(
     out: BinaryIO,
     names: Sequence[str],
@@ -133,16 +159,18 @@ def write_table_raw(
     raw_blocks: Sequence[Tuple[bytes, ...]],
     n_rows: int,
     level: int = DEFAULT_ZLIB_LEVEL,
+    workers: Optional[int] = None,
 ) -> None:
     """Write pre-packed raw blocks — (raw,) per numeric column, (offsets raw,
-    blob) per utf8 column — as one SCBF v1 file."""
+    blob) per utf8 column — as one SCBF v1 file. ``workers`` > 1 compresses
+    the blocks on that many threads (same bytes)."""
     schema_json = json.dumps(
         {"columns": [{"name": n, "type": TYPE_NAMES[t]} for n, t in zip(names, type_codes)]}
     ).encode("utf-8")
     name_bytes = [n.encode("utf-8") for n in names]
 
     # 1) Compress every raw block.
-    blocks = [tuple(zlib.compress(b, level) for b in blk) for blk in raw_blocks]
+    blocks = _compress_blocks(raw_blocks, level, workers)
     uncomp_sizes = [tuple(len(b) for b in blk) for blk in raw_blocks]
 
     # 2) Compute layout: header | meta table | data blocks.
@@ -285,8 +313,12 @@ def _utf8_raw_from_arrow(col) -> Tuple[bytes, bytes]:
     return rebased.tobytes(), blob
 
 
-def write_arrow_table(path: str, table, level: int = DEFAULT_ZLIB_LEVEL) -> None:
-    """Write a ``pyarrow.Table`` as one SCBF v1 file.
+def write_arrow_table(
+    path: str, table, level: int = DEFAULT_ZLIB_LEVEL, workers: Optional[int] = None
+) -> None:
+    """Write a ``pyarrow.Table`` as one SCBF v1 file; ``workers`` > 1
+    compresses its blocks concurrently (single-process callers only: the
+    Spark writer leaves it unset, as its tasks already run in parallel).
 
     Maps Arrow types onto the three SCBF physical types; anything else (or any
     null) raises ``ScbfError`` — SCBF v1 has no null encoding (SPEC.md:118-123
@@ -294,7 +326,7 @@ def write_arrow_table(path: str, table, level: int = DEFAULT_ZLIB_LEVEL) -> None
 
     Raw blocks are built from Arrow buffers directly (numeric: vectorized
     cast; utf8: offset rebase + blob slice — no ``to_pylist`` round-trip)."""
-    _write_arrow(path, table, level)
+    _write_arrow(path, table, level, workers)
 
 
 def write_table_path(
@@ -306,10 +338,10 @@ def write_table_path(
 ) -> None:
     """Write Python value lists as one SCBF v1 file, column ``i`` named
     ``names[i]`` with type code ``type_codes[i]`` — the reference's list API
-    (reference writer.py), used by ``cli csv_to_custom --local``. The lists
-    become Arrow arrays and go through the same encoder as
-    ``write_arrow_table``; int32 columns are built as int64 so an
-    out-of-range value raises ``ScbfError`` from the int32 range check."""
+    (reference writer.py). The lists become Arrow arrays and go through
+    the same encoder as ``write_arrow_table``; int32 columns are built as
+    int64 so an out-of-range value raises ``ScbfError`` from the int32
+    range check."""
     import pyarrow as pa
 
     if not (len(names) == len(type_codes) == len(columns)):
@@ -326,7 +358,7 @@ def write_table_path(
     _write_arrow(path, pa.Table.from_arrays(arrays, names=list(names)), level)
 
 
-def _write_arrow(path: str, table, level: int) -> None:
+def _write_arrow(path: str, table, level: int, workers: Optional[int] = None) -> None:
     """The one v1 encoder behind both write entry points. Columns are walked
     by position, so duplicate names (which the reader resolves last-wins)
     still write."""
@@ -359,4 +391,4 @@ def _write_arrow(path: str, table, level: int) -> None:
                 "(int32/float64/utf8 only)"
             )
     with open(path, "wb") as f:
-        write_table_raw(f, table.column_names, codes, raw_blocks, table.num_rows, level)
+        write_table_raw(f, table.column_names, codes, raw_blocks, table.num_rows, level, workers)

@@ -242,3 +242,62 @@ def test_cli_ivf_maintenance_surface(spark, sf_small, tmp_path, capsys):
     assert got.count() == 5
     survivors = {r["vec_id"] for r in spark.read.parquet(S._resolve_store(store)).collect()}
     assert all(v % 2 != 0 for v in survivors)
+
+
+def _csv_to_local(tmp_path, body: bytes):
+    src = tmp_path / "in.csv"
+    src.write_bytes(body)
+    out = str(tmp_path / "out.scbf")
+    cli_main(["csv_to_custom", str(src), out, "--local"])
+    return out
+
+
+def test_cli_local_short_row_raises(tmp_path):
+    """A record with too few fields names itself (it raised a bare
+    ``IndexError`` before)."""
+    from custom_columnar_format_spark.scbf.codec import ScbfError
+
+    with pytest.raises(ScbfError, match=r"Row #3: Expected 2 columns, got 1: 2"):
+        _csv_to_local(tmp_path, b"id,name\n1,a\n2\n3,c\n")
+
+
+def test_cli_local_long_row_raises(tmp_path):
+    """A record with extra fields raises instead of losing them."""
+    from custom_columnar_format_spark.scbf.codec import ScbfError
+
+    with pytest.raises(ScbfError, match=r"Row #2: Expected 2 columns, got 3: 1,a,lost"):
+        _csv_to_local(tmp_path, b"id,name\n1,a,lost\n2,b\n")
+
+
+def test_cli_local_blank_lines_skipped(tmp_path):
+    out = _csv_to_local(tmp_path, b"id,name\n\n1,a\n\n\n2,b\n\n")
+    r = SCBFReader(out)
+    assert r.schema() == {"id": "int32", "name": "utf8"}
+    assert r.read_all() == (["id", "name"], [[1, "a"], [2, "b"]])
+
+
+def test_cli_local_empty_file_raises(tmp_path):
+    from custom_columnar_format_spark.scbf.codec import ScbfError
+
+    with pytest.raises(ScbfError, match="empty CSV"):
+        _csv_to_local(tmp_path, b"")
+
+
+def test_cli_local_header_only_writes_empty_utf8(tmp_path):
+    """A header with no records writes a 0-row file, every column utf8."""
+    out = _csv_to_local(tmp_path, b"id,score,id\r\n")
+    r = SCBFReader(out)
+    assert r.num_rows == 0
+    assert [c["type"] for c in r.meta["columns"]] == ["utf8"] * 3
+    assert [c["name"] for c in r.meta["columns"]] == ["id", "score", "id"]
+
+
+def test_cli_local_drops_utf8_bom(tmp_path):
+    """An Excel-style CSV starts with a UTF-8 BOM: the first column is
+    ``id``, not ``"\\ufeffid"``, so ``--cols id`` selects it."""
+    out = _csv_to_local(tmp_path, "\ufeffid,name\n1,a\n2,b\n".encode("utf-8"))
+    assert SCBFReader(out).schema() == {"id": "int32", "name": "utf8"}
+    out_csv = str(tmp_path / "ids.csv")
+    assert cli_main(["custom_to_csv", out, out_csv, "--local", "--cols", "id"]) == 0
+    with open(out_csv, encoding="utf-8") as f:
+        assert list(csv.reader(f)) == [["id"], ["1"], ["2"]]
