@@ -21,7 +21,25 @@ for object stores and distributed writers from the start:
 - **Types**: int32, float64, utf8 (v1 set) + int64 and bool (v1's biggest
   wart: Spark bigint had to be range-checked down to int32).
 - **Dictionary encoding**: utf8 columns with repetition ratio ≤ 0.5 store a
-  sorted unique dictionary + u32 indices (auto; per-column flag in metadata).
+  sorted unique dictionary + indices (auto; per-column flag in metadata).
+- **Lightweight encodings** (footer feature ``"enc"``): before the block
+  codec, every int data block and every dictionary-index block of a block
+  set with at least ``ENC_MIN_ROWS`` rows is transformed by rule, per block:
+  a non-decreasing block stores its deltas, any other its offsets from the
+  block minimum (frame of reference), each narrowed to the smallest unsigned
+  width (u1/u2/u4/u8) and byte-shuffled (Blosc's transpose) when wider than
+  one byte; a block that does not narrow is only shuffled. A float64 block
+  is shuffled when a strided sample of ≤1024 values compresses smaller that
+  way at zlib level 1, else stored plain. The transform sits in the block
+  ref (``"enc": {"kind": "delta" | "for" | "shuffle", "width", "base"}``),
+  ``uncomp`` is the size of the stored (encoded) bytes, and the block is
+  filed under the role ``data_enc`` / ``indices_enc`` instead of ``data`` /
+  ``indices``, so a reader that predates encodings fails on the missing
+  role instead of returning the encoded bytes as values. Bool data, utf8
+  offsets and blobs and validity bitmaps are always plain. Block sets below
+  ``ENC_MIN_ROWS`` rows are written entirely in the plain format (no
+  encodings, blake2b Bloom filters), so small files stay readable by every
+  v2 reader.
 - **Stats**: per-column min/max (nulls excluded) + null_count in metadata —
   used by the Spark DataSource for file-level skipping under pushed filters;
   low-NDV utf8 columns (≤ ``DVS_MAX`` distinct short values) additionally
@@ -32,6 +50,19 @@ for object stores and distributed writers from the start:
   their own stats/blooms, so selective reads of compacted multi-hundred-MB
   files skip group I/O the way Parquet row-group pruning does; ungrouped
   files keep the original byte layout exactly.
+- **Bloom filters** (``bloom_columns``), per block set, over the distinct
+  non-null values, with double hashing ``h1 + i·h2``. Two hash ids: the
+  original ``blake2b`` (blake2b-128 of the value's canonical bytes; footer
+  key ``bloom``; every utf8 filter, and int filters of small block sets)
+  and ``mix64`` (splitmix64 finalizer of the int64 value for ``h1``, of
+  ``h1`` for ``h2``, computed in NumPy; footer key ``bloom_mix64``, feature
+  ``"bloom_mix64"``; int filters otherwise). A reader that predates
+  ``mix64`` never looks under ``bloom_mix64``, so it prunes nothing with a
+  filter it would hash wrongly.
+- **Features**: the footer's ``features`` list names every format addition
+  a reader must implement to read the file correctly (``"enc"``,
+  ``"bloom_mix64"``); ``read_meta`` raises ``ScbfV2Error`` on a name it does
+  not know. Files that use none omit the key.
 
 Metadata is a zlib'd JSON document rather than v1's hand-packed binary
 records: footer size is irrelevant next to data blocks, and JSON keeps the
@@ -66,6 +97,15 @@ MAX_STAT_STR = 64
 #: proof where Bloom filters are only probabilistic and min/max only bounds
 #: the range. 32 short strings cost ~the same footer bytes as one Bloom.
 DVS_MAX = 32
+#: block sets (row groups, or ungrouped files) with fewer rows are written in
+#: the plain format: encodings would save a few hundred bytes at most, and
+#: plain files stay readable by readers that predate ``FEATURES``
+ENC_MIN_ROWS = 128
+#: footer ``features`` this reader implements (see the module docstring)
+FEATURES = frozenset({"enc", "bloom_mix64"})
+_WIDTHS = (1, 2, 4, 8)
+#: footer key of a column's Bloom filter, by hash id
+_BLOOM_KEYS = {"blake2b": "bloom", "mix64": "bloom_mix64"}
 
 
 def _c_zlib(raw, level): return zlib.compress(raw, level)
@@ -104,17 +144,23 @@ class BlockRef:
     comp: int
     uncomp: int
     crc32: int
+    #: lightweight encoding of the stored bytes (``_decode``); None = plain
+    enc: Optional[dict] = None
 
     def to_json(self) -> dict:
-        return {"offset": self.offset, "comp": self.comp, "uncomp": self.uncomp, "crc32": self.crc32}
+        d = {"offset": self.offset, "comp": self.comp, "uncomp": self.uncomp, "crc32": self.crc32}
+        if self.enc is not None:
+            d["enc"] = self.enc
+        return d
 
     @staticmethod
     def from_json(d: dict) -> "BlockRef":
-        return BlockRef(d["offset"], d["comp"], d["uncomp"], d["crc32"])
+        return BlockRef(d["offset"], d["comp"], d["uncomp"], d["crc32"], d.get("enc"))
 
 
 class _BlockWriter:
-    """Appends compressed blocks, tracking offsets/crc — one forward pass."""
+    """Appends compressed blocks, tracking offsets/crc — one forward pass —
+    and the footer ``features`` the blocks and filters written so far use."""
 
     def __init__(self, f: BinaryIO, level: int, codec: str = "zlib"):
         if codec not in BLOCK_CODECS:
@@ -123,13 +169,104 @@ class _BlockWriter:
         self.level = level
         self.codec = codec
         self.pos = f.write(MAGIC_V2)
+        self.features: set = set()
 
-    def put(self, raw: bytes) -> BlockRef:
+    def put(self, raw: bytes, enc: Optional[dict] = None) -> BlockRef:
         comp = BLOCK_CODECS[self.codec][0](raw, self.level)
-        ref = BlockRef(self.pos, len(comp), len(raw), zlib.crc32(comp) & 0xFFFFFFFF)
+        ref = BlockRef(self.pos, len(comp), len(raw), zlib.crc32(comp) & 0xFFFFFFFF, enc)
         self.f.write(comp)
         self.pos += len(comp)
+        if enc is not None:
+            self.features.add("enc")
         return ref
+
+    def put_role(self, blocks: Dict[str, BlockRef], role: str, raw: bytes, enc: Optional[dict]) -> None:
+        """File an encoded block under ``<role>_enc``, a plain one under
+        ``role`` (the module docstring's guard against older readers)."""
+        blocks[role if enc is None else role + "_enc"] = self.put(raw, enc)
+
+
+def _shuffle(a: np.ndarray) -> bytes:
+    """Byte-shuffle (Blosc): byte 0 of every value, then byte 1, ... One
+    strided copy per byte plane, about 5× faster than a transpose copy."""
+    b = np.ascontiguousarray(a).view("u1")
+    planes = np.empty((a.itemsize, a.size), dtype="u1")
+    for j in range(a.itemsize):
+        planes[j] = b[j :: a.itemsize]
+    return planes.tobytes()
+
+
+def _encode_ints(v: np.ndarray) -> tuple:
+    """``(stored bytes, enc)`` for a non-empty int block: deltas if the block
+    is non-decreasing, else frame of reference (``v - min``), at the
+    narrowest unsigned width, shuffled when wider than a byte; shuffle alone
+    when that width is the block's own. Differences are taken in the
+    block's width and read unsigned, so they wrap exactly as the decoder's
+    sums do (``INT_MIN`` and ``INT_MAX`` in one block need no wider type)."""
+    unsigned = f"<u{v.itemsize}"
+    if (v[1:] >= v[:-1]).all():
+        kind, base = "delta", int(v[0])
+        stored = np.diff(v, prepend=v[:1]).view(unsigned)
+        span = int(stored.max())
+    else:
+        mn = v.min()
+        kind, base = "for", int(mn)
+        stored = (v - mn).view(unsigned)
+        span = int(v.max()) - base
+    width = next(w for w in _WIDTHS if span < 1 << (8 * w))
+    if width == v.itemsize:
+        kind, base, stored = "shuffle", 0, v
+    else:
+        stored = stored.astype(f"<u{width}")
+    enc = {"kind": kind, "width": width, "base": base}
+    return (_shuffle(stored) if width > 1 else stored.tobytes()), enc
+
+
+def _encode_floats(v: np.ndarray) -> tuple:
+    """``(stored bytes, enc)`` for a float64 block: shuffled when a strided
+    sample of at most 1024 values compresses smaller shuffled than plain at
+    zlib level 1 (a full-block trial at the file's level costs as much as
+    the shuffle saves), else plain (``enc`` None)."""
+    sample = v[:: max(1, v.size // 1024)][:1024]
+    if len(zlib.compress(_shuffle(sample), 1)) < len(zlib.compress(sample.tobytes(), 1)):
+        return _shuffle(v), {"kind": "shuffle", "width": 8, "base": 0}
+    return v.tobytes(), None
+
+
+def _decode(raw: bytes, enc: dict, dtype: np.dtype, rows: int) -> np.ndarray:
+    """Invert ``_encode_ints`` / ``_encode_floats`` straight into ``dtype``:
+    one copy to unshuffle, then a widening cast and ``cumsum`` or ``+ base``
+    in the target width (wrapping like the encoder's differences)."""
+    try:
+        kind, width, base = enc["kind"], enc["width"], enc["base"]
+    except (TypeError, KeyError):
+        raise ScbfV2Error(f"malformed block encoding {enc!r}") from None
+    if (
+        kind not in ("delta", "for", "shuffle")
+        or width not in _WIDTHS
+        or not isinstance(base, int)
+        or width > dtype.itemsize
+        or (kind == "shuffle") != (width == dtype.itemsize)
+        or (kind != "shuffle" and dtype.kind != "i")
+        or len(raw) != rows * width
+    ):
+        raise ScbfV2Error(f"block encoding {enc!r} does not fit {rows} {dtype} values")
+    u = np.frombuffer(raw, dtype="u1")
+    if width > 1:
+        planes = u.reshape(width, rows)
+        u = np.empty(rows * width, dtype="u1")
+        for j in range(width):
+            u[j::width] = planes[j]
+    u = u.view(f"<u{width}")
+    if kind == "shuffle":
+        return u.view(dtype)
+    if not np.iinfo(dtype).min <= base <= np.iinfo(dtype).max:
+        raise ScbfV2Error(f"block encoding base {base} out of range for {dtype}")
+    out = u.astype(dtype)
+    if kind == "delta":
+        np.cumsum(out, out=out)
+    out += dtype.type(base)
+    return out
 
 
 def _trunc_min(s: str) -> str:
@@ -200,30 +337,64 @@ def _bloom_hashes(data: bytes, k: int, m: int) -> List[int]:
     return [(h1 + i * h2) % m for i in range(k)]
 
 
-def _bloom_of(values, type_name: str) -> Optional[dict]:
+def _mix64(x: np.ndarray) -> np.ndarray:
+    """splitmix64's finalizer over a uint64 array (wrapping arithmetic)."""
+    x = x + np.uint64(0x9E3779B97F4A7C15)
+    x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return x ^ (x >> np.uint64(31))
+
+
+def _mix64_positions(values, k: int, m: int) -> np.ndarray:
+    """The ``(len(values), k)`` bit positions of int ``values`` under hash id
+    ``mix64``: ``h1 = mix(v)``, ``h2 = mix(h1) | 1``, and position ``i`` is
+    ``(h1 + i·h2) mod 2^64 mod m``. Like blake2b's canonical bytes, the
+    input is the int64 value, so int32 and int64 columns hash alike."""
+    x = np.asarray(values, dtype=np.int64).view(np.uint64)
+    h1 = _mix64(x)
+    h2 = _mix64(h1) | np.uint64(1)  # odd → full-period stepping
+    return (h1[:, None] + np.arange(k, dtype=np.uint64) * h2[:, None]) % np.uint64(m)
+
+
+def _bloom_of(values, type_name: str, h: Optional[str] = None) -> Optional[dict]:
     """Standard Bloom filter over the column's distinct non-null values:
     m = -n·ln(p)/ln²2 bits (capped), k = m/n·ln2 hash probes. Stored
     base64(zlib(bits)) inside the JSON footer — a sparse filter compresses
-    to near-nothing."""
+    to near-nothing. ``h`` is the hash id (module docstring): ``mix64``
+    (recorded as ``"h"``) by default for int columns, ``blake2b`` (no
+    ``"h"``) for utf8."""
     import base64
     import math
 
-    distinct = set(values)
+    if h is None:
+        h = "blake2b" if type_name == "utf8" else "mix64"
+    distinct = np.unique(np.asarray(values, dtype=np.int64)) if h == "mix64" else set(values)
     n = len(distinct)
     if n == 0:
         return None
     m = min(_BLOOM_MAX_BITS, max(64, int(math.ceil(-n * math.log(_BLOOM_FPP) / (math.log(2) ** 2)))))
     k = max(1, min(16, round(m / n * math.log(2))))
     bits = np.zeros(m, dtype=bool)
-    for v in distinct:
-        for pos in _bloom_hashes(_bloom_value_bytes(v, type_name), k, m):
-            bits[pos] = True
+    if h == "mix64":
+        bits[_mix64_positions(distinct, k, m).ravel()] = True
+    else:
+        for v in distinct:
+            for pos in _bloom_hashes(_bloom_value_bytes(v, type_name), k, m):
+                bits[pos] = True
     packed = np.packbits(bits, bitorder="little").tobytes()
-    return {"m": m, "k": k, "bits": base64.b64encode(zlib.compress(packed, 6)).decode("ascii")}
+    bloom = {"m": m, "k": k, "bits": base64.b64encode(zlib.compress(packed, 6)).decode("ascii")}
+    return bloom if h == "blake2b" else {"h": h, **bloom}
 
 
 def bloom_contains(bloom: dict, value, type_name: str) -> bool:
-    """May-contain test against a stored filter (False = provably absent).
+    """May-contain test against a stored filter (False = provably absent)."""
+    return bloom_may_contain_any(bloom, (value,), type_name)
+
+
+def bloom_may_contain_any(bloom: dict, values: Sequence[Any], type_name: str) -> bool:
+    """May-contain test for an ``IN`` list: False only when the filter proves
+    every one of ``values`` absent. A ``mix64`` filter hashes all of them in
+    one vectorized call.
 
     The decoded bit array is memoized on ``bloom`` itself (key ``_bits``), so
     a footer parsed once decodes each filter at most once however many
@@ -237,16 +408,27 @@ def bloom_contains(bloom: dict, value, type_name: str) -> bool:
             np.frombuffer(zlib.decompress(base64.b64decode(bloom["bits"])), dtype=np.uint8),
             bitorder="little",
         )
-    return all(bits[pos] for pos in _bloom_hashes(_bloom_value_bytes(value, type_name), k, m))
+    h = bloom.get("h", "blake2b")
+    if h == "mix64":
+        return bool(bits[_mix64_positions([int(v) for v in values], k, m)].all(axis=1).any())
+    if h != "blake2b":
+        raise ScbfV2Error(f"unknown Bloom hash id {h!r}")
+    return any(
+        all(bits[pos] for pos in _bloom_hashes(_bloom_value_bytes(v, type_name), k, m))
+        for v in values
+    )
 
 
 def _encode_columns(bw: "_BlockWriter", table, bloom_set: set) -> List[dict]:
     """Encode every column of ``table`` as blocks via ``bw``; returns the
     per-column metadata entries (blocks, stats, optional bloom). One call per
-    row group — or per file for ungrouped files (the original v2 layout)."""
+    row group — or per file for ungrouped files (the original v2 layout).
+    Lightweight encodings and ``mix64`` filters apply from ``ENC_MIN_ROWS``
+    rows on."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    light = table.num_rows >= ENC_MIN_ROWS
     columns_meta: List[dict] = []
     for fld in table.schema:
         col = table.column(fld.name).combine_chunks()
@@ -276,7 +458,13 @@ def _encode_columns(bw: "_BlockWriter", table, bloom_set: set) -> List[dict]:
                 type_name = "int64"
                 fill = 0
             vals = np.asarray(col.fill_null(fill)).astype(_NP_DTYPES[type_name])
-            blocks["data"] = bw.put(vals.tobytes())
+            if not light:
+                raw, enc = vals.tobytes(), None
+            elif type_name == "float64":
+                raw, enc = _encode_floats(vals)
+            else:
+                raw, enc = _encode_ints(vals)
+            bw.put_role(blocks, "data", raw, enc)
             stats = _stats_of(vals, type_name, valid_np)
         elif pa.types.is_string(t) or pa.types.is_large_string(t):
             type_name = "utf8"
@@ -289,15 +477,16 @@ def _encode_columns(bw: "_BlockWriter", table, bloom_set: set) -> List[dict]:
             dict_arr = filled.dictionary_encode()
             uniq = dict_arr.dictionary
             if len(filled) and len(uniq) / len(filled) <= DICT_RATIO:
-                # dictionary encoding: u32 indices + sorted dict offsets +
-                # dict blob (sorted per the format contract; remap the
-                # first-occurrence indices Arrow produces)
+                # dictionary encoding: indices (u32, or an int encoding) +
+                # sorted dict offsets + dict blob (sorted per the format
+                # contract; remap the first-occurrence indices Arrow produces)
                 order = np.asarray(pc.sort_indices(uniq))
-                rank = np.empty(len(uniq), dtype=np.int64)
-                rank[order] = np.arange(len(uniq))
+                rank = np.empty(len(uniq), dtype=np.int32)
+                rank[order] = np.arange(len(uniq), dtype=np.int32)
                 idx = rank[dict_arr.indices.to_numpy(zero_copy_only=False)]
                 d_off_raw, d_blob = _utf8_raw_from_arrow(uniq.take(pa.array(order)))
-                blocks["indices"] = bw.put(idx.astype("<u4").tobytes())
+                raw, enc = _encode_ints(idx) if light else (idx.astype("<u4").tobytes(), None)
+                bw.put_role(blocks, "indices", raw, enc)
                 blocks["dict_offsets"] = bw.put(d_off_raw)
                 blocks["dict_blob"] = bw.put(d_blob)
             else:
@@ -336,7 +525,7 @@ def _encode_columns(bw: "_BlockWriter", table, bloom_set: set) -> List[dict]:
             "type": type_name,
             "nullable": bool(null_count),
             "null_count": int(null_count),
-            "dict": "indices" in blocks,
+            "dict": "indices" in blocks or "indices_enc" in blocks,
             "blocks": {k: v.to_json() for k, v in blocks.items()},
             "stats": stats,
         }
@@ -349,11 +538,15 @@ def _encode_columns(bw: "_BlockWriter", table, bloom_set: set) -> List[dict]:
                     f"columns are supported (got {type_name})"
                 )
             nn = col.drop_null()
-            bloom = _bloom_of(
-                nn.to_pylist() if type_name == "utf8" else np.asarray(nn), type_name
-            )
+            if type_name == "utf8":
+                bloom = _bloom_of(pc.unique(nn).to_pylist(), type_name)
+            else:
+                bloom = _bloom_of(np.asarray(nn), type_name, "mix64" if light else "blake2b")
             if bloom is not None:
-                cm["bloom"] = bloom
+                key = _BLOOM_KEYS[bloom.get("h", "blake2b")]
+                cm[key] = bloom
+                if key != "bloom":
+                    bw.features.add(key)
         columns_meta.append(cm)
     return columns_meta
 
@@ -442,6 +635,8 @@ def write_arrow_table(
                 "columns": _merged_columns_meta(groups),
                 "row_groups": groups,
             }
+        if bw.features:
+            meta["features"] = sorted(bw.features)
         meta_comp = zlib.compress(json.dumps(meta).encode("utf-8"), level)
         f.write(meta_comp)
         f.write(struct.pack("<Q", len(meta_comp)))
@@ -450,7 +645,9 @@ def write_arrow_table(
 
 def read_meta(path) -> dict:
     """Footer metadata of a v2 file (EOF-ranged read, no data blocks touched).
-    ``path`` may be an open binary file, which stays open."""
+    ``path`` may be an open binary file, which stays open. Raises
+    ``ScbfV2Error`` when the footer's ``features`` name one this reader
+    does not implement."""
     with _opened(path) as f:
         f.seek(0)
         if f.read(8) != MAGIC_V2:
@@ -460,7 +657,13 @@ def read_meta(path) -> dict:
         if tail != MAGIC_V2:
             raise ScbfV2Error("bad tail magic: truncated or corrupt SCBF v2 file")
         f.seek(-16 - meta_len, 2)
-        return json.loads(zlib.decompress(f.read(meta_len)).decode("utf-8"))
+        meta = json.loads(zlib.decompress(f.read(meta_len)).decode("utf-8"))
+    unknown = set(meta.get("features", ())) - FEATURES
+    if unknown:
+        raise ScbfV2Error(
+            f"file uses format features {sorted(unknown)} this reader does not implement"
+        )
+    return meta
 
 
 def _get_block(f: BinaryIO, ref: BlockRef, verify: bool = True, codec: str = "zlib") -> bytes:
@@ -475,6 +678,19 @@ def _get_block(f: BinaryIO, ref: BlockRef, verify: bool = True, codec: str = "zl
     if ref.uncomp is not None and len(raw) != ref.uncomp:
         raise ScbfV2Error("uncompressed size mismatch: corrupted block")
     return raw
+
+
+def _values(
+    f: BinaryIO, refs: Dict[str, BlockRef], role: str, dtype: str, rows: int, verify: bool, codec: str
+) -> np.ndarray:
+    """Block ``role`` of one column as ``rows`` values of ``dtype``, decoded
+    from its ``<role>_enc`` form when the file stores that."""
+    ref = refs.get(role + "_enc")
+    if ref is None:
+        return np.frombuffer(_get_block(f, refs[role], verify, codec), dtype=dtype, count=rows)
+    if ref.enc is None:
+        raise ScbfV2Error(f"block {role}_enc has no encoding entry")
+    return _decode(_get_block(f, ref, verify, codec), ref.enc, np.dtype(dtype), rows)
 
 
 def _pick(columns_meta: Sequence[dict], selected: Optional[Sequence[str]]) -> List[dict]:
@@ -577,16 +793,15 @@ def _read_group(
 
         if cm["type"] == "utf8":
             if cm["dict"]:
-                idx = np.frombuffer(_get_block(f, refs["indices"], verify_crc, codec), dtype="<u4", count=rows)
+                # plain indices are u32 below 2**31: the same bytes as int32
+                idx = _values(f, refs, "indices", "<i4", rows, verify_crc, codec)
                 d_offs = _get_block(f, refs["dict_offsets"], verify_crc, codec)
                 d_blob = _get_block(f, refs["dict_blob"], verify_crc, codec)
                 n_dict = len(d_offs) // 4 - 1
                 dict_arr = pa.StringArray.from_buffers(
                     n_dict, pa.py_buffer(d_offs), pa.py_buffer(d_blob)
                 )
-                indices = pa.Array.from_buffers(
-                    pa.int32(), rows, [validity_buf, pa.py_buffer(idx.astype("<i4").tobytes())]
-                )
+                indices = pa.Array.from_buffers(pa.int32(), rows, [validity_buf, pa.py_buffer(idx)])
                 arr = pa.DictionaryArray.from_arrays(indices, dict_arr).cast(pa.string())
             else:
                 offs = _get_block(f, refs["offsets"], verify_crc, codec)
@@ -596,13 +811,12 @@ def _read_group(
                     rows, pa.py_buffer(np_offs.astype("<i4").tobytes()), pa.py_buffer(blob), validity_buf
                 )
         else:
-            raw = _get_block(f, refs["data"], verify_crc, codec)
+            vals = _values(f, refs, "data", _NP_DTYPES[cm["type"]], rows, verify_crc, codec)
             if cm["type"] == "bool":
                 # stored as u1 bytes; Arrow wants bit-packed values
-                vals = np.frombuffer(raw, dtype="u1", count=rows)
                 data_buf = pa.py_buffer(np.packbits(vals.astype(bool), bitorder="little").tobytes())
             else:
-                data_buf = pa.py_buffer(raw)
+                data_buf = pa.py_buffer(vals)
             arr = pa.Array.from_buffers(pa_type, rows, [validity_buf, data_buf])
 
         arrays.append(arr)
@@ -653,8 +867,9 @@ def _stats_may_match(columns_meta: Sequence[dict], rows: int, filters: Sequence[
     for c in columns_meta:
         if c.get("stats"):
             stats_by_col[c["name"]] = c["stats"]
-        if c.get("bloom"):
-            bloom_by_col[c["name"]] = (c["bloom"], c["type"])
+        bloom = c.get("bloom_mix64") or c.get("bloom")
+        if bloom:
+            bloom_by_col[c["name"]] = (bloom, c["type"])
         if c.get("dvs") is not None:
             dvs_by_col[c["name"]] = set(c["dvs"])
         nulls_by_col[c["name"]] = c.get("null_count")
@@ -692,9 +907,9 @@ def _stats_may_match(columns_meta: Sequence[dict], rows: int, filters: Sequence[
         if bl is not None and isinstance(flt, In):
             bloom, tname = bl
             try:
-                if not any(bloom_contains(bloom, v, tname) for v in flt.value):
+                if not bloom_may_contain_any(bloom, flt.value, tname):
                     return False
-            except (TypeError, ValueError):
+            except (TypeError, ValueError, OverflowError):
                 pass  # incomparable probe type → fall through to stats
         if st is None:
             continue

@@ -1,12 +1,15 @@
 """SCBF v2 tests: nulls, dictionary encoding, int64/bool, stats, checksums,
 footer layout, selective-read I/O proof, and Spark filter-pushdown skipping."""
 
+import collections
 import glob
 import os
 
 import numpy as np
 import pyarrow as pa
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from custom_columnar_format_spark.scbf import codec_v2
@@ -497,7 +500,7 @@ def test_row_group_splits_scan_one_file_in_parallel(spark, tmp_path):
         .mode("overwrite")
         .save(out)
     )
-    df = spark.read.format("scbf").option("split_bytes", "1024").load(out)
+    df = spark.read.format("scbf").option("split_bytes", "1").load(out)
     assert df.rdd.getNumPartitions() == 7  # ceil(50000/8192)
     assert df.count() == 50000
     assert df.agg(F.sum("id")).first()[0] == 49999 * 50000 // 2
@@ -516,7 +519,7 @@ def test_row_group_splits_scan_one_file_in_parallel(spark, tmp_path):
                     f.write(b"\x00" * ref["comp"])
     got = (
         spark.read.format("scbf")
-        .option("split_bytes", "1024")
+        .option("split_bytes", "1")
         .load(out)
         .filter(F.col("id") < 8000)
     )
@@ -543,7 +546,7 @@ def test_row_group_splits_with_hive_partitions_and_columnless_count(spark, tmp_p
         .mode("overwrite")
         .save(out)
     )
-    df = spark.read.format("scbf").option("split_bytes", "1024").load(out)
+    df = spark.read.format("scbf").option("split_bytes", "1").load(out)
     assert df.rdd.getNumPartitions() == 10  # 2 dirs x ceil(10000/2048)
     assert df.count() == 20000
     per = {r["pk"]: r["n"] for r in df.groupBy("pk").agg(F.count("*").alias("n")).collect()}
@@ -639,3 +642,463 @@ def test_dvs_in_filter_and_merged_file_level(tmp_path):
     assert codec_v2.file_may_match(meta, [In(("cat",), ("xx", "cc"))])
     # mixed-type probe list must NOT prune (unpushable shape, stay safe)
     assert codec_v2.file_may_match(meta, [In(("cat",), (b"zz", 5))])
+
+
+# ---------------------------------------------------------------------------
+# Lightweight encodings, the mix64 Bloom hash and the features guard
+# ---------------------------------------------------------------------------
+
+INT_BOUNDS = {"int32": (-(2**31), 2**31 - 1), "int64": (-(2**63), 2**63 - 1)}
+#: every codec a round trip must survive; lzma behaves like bz2 here
+ROUNDTRIP_CODECS = ("zlib", "bz2", "none")
+#: block roles a reader from before encodings decodes as plain values
+PLAIN_ROLES = {"data", "indices", "offsets", "blob", "dict_offsets", "dict_blob", "validity"}
+
+
+def _bits(col):
+    """(validity, valid values) of an Arrow column, floats by bit pattern, so
+    NaN payloads and -0.0 must survive exactly."""
+    col = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    nn = col.drop_null()
+    if pa.types.is_floating(col.type):
+        vals = np.asarray(nn, dtype="<f8").view("<u8").tolist()
+    else:
+        vals = nn.to_pylist()
+    return np.asarray(col.is_valid()).tolist(), vals
+
+
+def _roundtrip(tmp_path, table, group_rows=codec_v2.ENC_MIN_ROWS) -> dict:
+    """Write ``table`` under every codec, ungrouped and in groups of
+    ``group_rows`` rows, and check each read returns bit-identical values
+    and validity. Returns the footers, keyed by (codec, grouped)."""
+    metas = {}
+    for codec in ROUNDTRIP_CODECS:
+        for grouped in (False, True):
+            p = str(tmp_path / f"rt_{codec}_{grouped}.scbf")
+            rpg = group_rows if grouped else None
+            codec_v2.write_arrow_table(p, table, codec=codec, rows_per_group=rpg)
+            back = codec_v2.read_arrow_table(p)
+            for name in table.column_names:
+                assert _bits(back.column(name)) == _bits(table.column(name)), (codec, grouped, name)
+            metas[codec, grouped] = codec_v2.read_meta(p)
+    return metas
+
+
+def _picked(meta: dict, name: str) -> list:
+    """Per block set, the (kind, width) of column ``name``'s data or index
+    block, or None when it is plain; checks the role matches."""
+    out = []
+    for g in meta.get("row_groups") or [meta]:
+        cm = next(c for c in g["columns"] if c["name"] == name)
+        ((role, ref),) = [
+            (r, ref) for r, ref in cm["blocks"].items()
+            if r in ("data", "data_enc", "indices", "indices_enc")
+        ]
+        enc = ref.get("enc")
+        assert role.endswith("_enc") == (enc is not None), (role, enc)
+        out.append(None if enc is None else (enc["kind"], enc["width"]))
+    return out
+
+
+def _group_slices(values: list, grouped: bool) -> list:
+    if not grouped or len(values) <= codec_v2.ENC_MIN_ROWS:
+        return [values]
+    n = codec_v2.ENC_MIN_ROWS
+    return [values[i : i + n] for i in range(0, len(values), n)]
+
+
+def _int_rule(vals: list, itemsize: int):
+    """The int rule in Python ints (no wrapping): the expected (kind, width)
+    of a block holding ``vals`` (nulls already filled with 0)."""
+    if len(vals) < codec_v2.ENC_MIN_ROWS:
+        return None
+    if all(a <= b for a, b in zip(vals, vals[1:])):
+        kind, span = "delta", max((b - a for a, b in zip(vals, vals[1:])), default=0)
+    else:
+        kind, span = "for", max(vals) - min(vals)
+    width = next(w for w in (1, 2, 4, 8) if span < 256**w)
+    return ("shuffle", itemsize) if width == itemsize else (kind, width)
+
+
+def _float_rule(vals: list):
+    """The float rule: shuffle iff a strided sample of at most 1024 values
+    compresses smaller shuffled than plain at zlib level 1."""
+    import zlib
+
+    if len(vals) < codec_v2.ENC_MIN_ROWS:
+        return None
+    a = np.asarray(vals, dtype="<f8")
+    sample = np.ascontiguousarray(a[:: max(1, a.size // 1024)][:1024])
+    shuffled = sample.view("u1").reshape(-1, 8).T.tobytes()
+    if len(zlib.compress(shuffled, 1)) < len(zlib.compress(sample.tobytes(), 1)):
+        return ("shuffle", 8)
+    return None
+
+
+@st.composite
+def _int_blocks(draw):
+    type_name = draw(st.sampled_from(sorted(INT_BOUNDS)))
+    lo, hi = INT_BOUNDS[type_name]
+    shape = draw(st.sampled_from(["random", "narrow", "sorted", "reverse", "constant", "extremes"]))
+    n = draw(
+        st.one_of(
+            st.sampled_from([0, 1, codec_v2.ENC_MIN_ROWS - 1, codec_v2.ENC_MIN_ROWS]),
+            st.integers(0, 3 * codec_v2.ENC_MIN_ROWS),
+        )
+    )
+    if shape == "constant":
+        vals = [draw(st.integers(lo, hi))] * n
+    elif shape == "narrow":
+        span = min(hi - lo, draw(st.sampled_from([255, 256, 65535, 65536, 2**32])))
+        base = draw(st.integers(lo, hi - span))
+        vals = draw(st.lists(st.integers(base, base + span), min_size=n, max_size=n))
+    else:
+        vals = draw(st.lists(st.integers(lo, hi), min_size=n, max_size=n))
+    if shape == "extremes" and n >= 2:
+        i, j = draw(st.lists(st.integers(0, n - 1), min_size=2, max_size=2, unique=True))
+        vals[i], vals[j] = hi, lo
+    if shape in ("sorted", "reverse"):
+        vals.sort(reverse=shape == "reverse")
+    nulls = draw(st.lists(st.booleans(), min_size=n, max_size=n)) if draw(st.booleans()) else [False] * n
+    return type_name, [None if z else v for v, z in zip(vals, nulls)]
+
+
+def test_int_encodings_roundtrip_property(tmp_path):
+    """Hypothesis: int32/int64 blocks — random, narrow ranges, sorted,
+    reverse-sorted, constant, INT_MIN and INT_MAX together, 0 and 1 rows,
+    with and without nulls — round-trip bit-identically under every codec,
+    grouped and not, and each block picks the encoding the rule names."""
+
+    @settings(max_examples=60, deadline=None)
+    @given(block=_int_blocks())
+    def check(block):
+        type_name, vals = block
+        t = pa.table({"v": pa.array(vals, type=getattr(pa, type_name)())})
+        metas = _roundtrip(tmp_path, t)
+        filled = [0 if v is None else v for v in vals]
+        itemsize = 4 if type_name == "int32" else 8
+        for (codec, grouped), meta in metas.items():
+            want = [_int_rule(s, itemsize) for s in _group_slices(filled, grouped)]
+            assert _picked(meta, "v") == want, (codec, grouped)
+
+    check()
+
+
+def test_int_encodings_pick_each_kind(tmp_path):
+    """Each named case picks its encoding (a silent fall-back to plain or to
+    shuffle fails), including sorted int32 whose running delta sum wraps
+    past INT_MAX."""
+    lo32 = -(2**31)
+    wrap = [lo32 + 61_000 * i for i in range(70_000)]  # spans ~2**32 in u2 steps
+    cases = {
+        "constant": (pa.int32(), [7] * 300, ("delta", 1)),
+        "sorted": (pa.int64(), list(range(-150, 150)), ("delta", 1)),
+        "reverse": (pa.int32(), list(range(300, 0, -1)), ("for", 2)),
+        "narrow": (pa.int32(), [(i * 37) % 1000 for i in range(300)], ("for", 2)),
+        "extremes": (pa.int32(), [2**31 - 1, -(2**31)] * 150, ("shuffle", 4)),
+        "extremes64": (pa.int64(), [2**63 - 1, -(2**63), 0] * 100, ("shuffle", 8)),
+        "wrap": (pa.int32(), wrap, ("delta", 2)),
+        "one_row": (pa.int32(), [5], None),
+        "empty": (pa.int64(), [], None),
+    }
+    for name, (typ, vals, want) in cases.items():
+        t = pa.table({"v": pa.array(vals, type=typ)})
+        meta = _roundtrip(tmp_path, t)["zlib", False]
+        assert _picked(meta, "v") == [want], name
+        assert ("features" in meta) == (want is not None), name
+
+
+@st.composite
+def _float_blocks(draw):
+    special = st.sampled_from([float("nan"), -0.0, 0.0, float("inf"), float("-inf"), 1.5])
+    shape = draw(st.sampled_from(["any", "special", "integral"]))
+    n = draw(st.one_of(st.sampled_from([0, 1, codec_v2.ENC_MIN_ROWS]), st.integers(0, 600)))
+    if shape == "special":
+        elems = special
+    elif shape == "integral":
+        elems = st.integers(1, 50).map(float)
+    else:
+        elems = st.one_of(st.floats(allow_nan=True, allow_infinity=True), special)
+    vals = draw(st.lists(elems, min_size=n, max_size=n))
+    nulls = draw(st.lists(st.booleans(), min_size=n, max_size=n)) if draw(st.booleans()) else [False] * n
+    return [None if z else v for v, z in zip(vals, nulls)]
+
+
+def test_float_encodings_roundtrip_property(tmp_path):
+    """Hypothesis: float64 blocks with NaN (any payload), -0.0 and ±inf,
+    with and without nulls, round-trip bit-identically, and each block is
+    shuffled exactly when the sample rule says so."""
+
+    @settings(max_examples=40, deadline=None)
+    @given(vals=_float_blocks())
+    def check(vals):
+        t = pa.table({"f": pa.array(vals, type=pa.float64())})
+        metas = _roundtrip(tmp_path, t)
+        filled = [0.0 if v is None else v for v in vals]
+        for (codec, grouped), meta in metas.items():
+            want = [_float_rule(s) for s in _group_slices(filled, grouped)]
+            assert _picked(meta, "f") == want, (codec, grouped)
+
+    check()
+
+
+def test_float_shuffle_chosen_per_block(tmp_path):
+    """Integral quantities shuffle; two-decimal prices stay plain — in one
+    grouped file, so the choice is made per block, not per column."""
+    rng = np.random.default_rng(7)
+    qty = rng.integers(1, 51, 4096).astype(np.float64)
+    price = np.round(rng.uniform(900.0, 105_000.0, 4096), 2)
+    t = pa.table({"f": pa.array(np.concatenate([qty, price]))})
+    p = str(tmp_path / "f.scbf")
+    codec_v2.write_arrow_table(p, t, rows_per_group=4096)
+    assert _picked(codec_v2.read_meta(p), "f") == [("shuffle", 8), None]
+    assert codec_v2.read_arrow_table(p).column("f").to_pylist() == t.column("f").to_pylist()
+
+
+@pytest.mark.parametrize("entries", [255, 256, 257, 65535, 65536, 65537])
+def test_dictionary_index_widths(tmp_path, entries):
+    """Dictionaries of exactly 255/256/257 and 65 535/65 536/65 537 entries
+    (nulls stored as the "" entry; four rows per word, shuffled): indices
+    narrow to the width of the dictionary size and round-trip; sorted
+    indices pick deltas."""
+    rng = np.random.default_rng(entries)
+    words = [f"w{i:06d}" for i in range(entries - 1)]
+    vals = np.array(words * 4 + [None] * 50, dtype=object)[rng.permutation(4 * len(words) + 50)]
+    t = pa.table({"s": pa.array(vals.tolist(), type=pa.string())})
+    # groups of half the rows: each still dictionary-encodes
+    metas = _roundtrip(tmp_path, t, group_rows=t.num_rows // 2 + 1)
+    width = next(w for w in (1, 2, 4) if entries - 1 < 256**w)
+    want = ("shuffle", 4) if width == 4 else ("for", width)
+    for codec in ROUNDTRIP_CODECS:
+        (cm,) = metas[codec, False]["columns"]
+        assert cm["dict"] is True and cm["blocks"]["dict_offsets"]["uncomp"] // 4 - 1 == entries
+        assert _picked(metas[codec, False], "s") == [want]
+    if entries == 256:
+        p = str(tmp_path / "sorted.scbf")
+        codec_v2.write_arrow_table(p, pa.table({"s": pa.array(sorted(words * 4))}))
+        assert _picked(codec_v2.read_meta(p), "s") == [("delta", 1)]
+        assert codec_v2.read_arrow_table(p).column("s").to_pylist() == sorted(words * 4)
+
+
+def _compat_table():
+    """The table ``tests/data/v2_pre_encoding_grouped.scbf`` holds: written by
+    the codec before encodings and the mix64 hash existed (groups of 128
+    rows, Bloom filters on ``id`` and ``name``)."""
+    n = 300
+    return pa.table(
+        {
+            "id": pa.array([None if i % 17 == 0 else i * 7 - 1000 for i in range(n)], type=pa.int64()),
+            "k": pa.array([(i * 37) % 101 - 50 for i in range(n)], type=pa.int32()),
+            "score": pa.array([None if i % 5 == 0 else i / 4 for i in range(n)], type=pa.float64()),
+            "flag": pa.array([None if i % 13 == 0 else i % 2 == 0 for i in range(n)], type=pa.bool_()),
+            "cat": pa.array([None if i % 11 == 0 else ("red", "green", "blue")[i % 3] for i in range(n)]),
+            "name": pa.array([f"name_{i}" for i in range(n)]),
+        }
+    )
+
+
+COMPAT_FILE = os.path.join(os.path.dirname(__file__), "data", "v2_pre_encoding_grouped.scbf")
+
+
+def test_pre_encoding_file_reads_and_prunes(tmp_path):
+    """A grouped file from the codec before encodings (plain blocks, blake2b
+    filters under ``bloom``, no ``features``) reads value-identically and
+    its filters still prune absent ids and names."""
+    from pyspark.sql.datasource import EqualTo, In
+
+    meta = codec_v2.read_meta(COMPAT_FILE)
+    assert "features" not in meta and len(meta["row_groups"]) == 3
+    want = _compat_table()
+    back = codec_v2.read_arrow_table(COMPAT_FILE)
+    for name in want.column_names:
+        assert _bits(back.column(name)) == _bits(want.column(name)), name
+    assert meta["row_groups"][0]["columns"][4]["dict"] is True
+
+    ids = set(want.column("id").to_pylist()) - {None}
+    for g in meta["row_groups"]:
+        cols = {c["name"]: c for c in g["columns"]}
+        assert "h" not in cols["id"]["bloom"] and "bloom_mix64" not in cols["id"]
+        lo, hi = cols["id"]["stats"]["min"], cols["id"]["stats"]["max"]
+        present = [v for v in ids if lo <= v <= hi]
+        absent = [v for v in range(lo, hi) if v not in ids]  # inside min/max
+        assert all(codec_v2._stats_may_match(g["columns"], g["rows"], [EqualTo(("id",), v)]) for v in present)
+        pruned = sum(not codec_v2._stats_may_match(g["columns"], g["rows"], [EqualTo(("id",), v)]) for v in absent)
+        assert pruned >= 0.9 * len(absent)
+        assert not codec_v2._stats_may_match(g["columns"], g["rows"], [In(("name",), ("name_2000",))])
+    with SCBFReader(COMPAT_FILE) as r:
+        got = r.to_arrow(filters=[EqualTo(("id",), 50)])  # row 150, group 1
+    assert got.num_rows == 128 and 50 in got.column("id").to_pylist()
+
+
+def _rewrite_footer(path: str, edit) -> None:
+    import json
+    import struct
+    import zlib
+
+    raw = open(path, "rb").read()
+    (meta_len,) = struct.unpack("<Q", raw[-16:-8])
+    meta = json.loads(zlib.decompress(raw[-16 - meta_len : -16]))
+    edit(meta)
+    comp = zlib.compress(json.dumps(meta).encode("utf-8"))
+    with open(path, "wb") as f:
+        f.write(raw[: -16 - meta_len] + comp + struct.pack("<Q", len(comp)) + codec_v2.MAGIC_V2)
+
+
+def test_unknown_feature_fails_loudly(tmp_path):
+    """A footer naming a feature this reader does not implement raises at
+    footer parse — through read_meta, read_arrow_table and SCBFReader —
+    instead of returning rows it may misread."""
+    p = str(tmp_path / "future.scbf")
+    codec_v2.write_arrow_table(p, pa.table({"v": pa.array(range(500))}))
+    assert codec_v2.read_meta(p)["features"] == ["enc"]
+    _rewrite_footer(p, lambda m: m.update(features=["enc", "zstd_frames"]))
+    with pytest.raises(codec_v2.ScbfV2Error, match="zstd_frames"):
+        codec_v2.read_meta(p)
+    with pytest.raises(codec_v2.ScbfV2Error, match="zstd_frames"):
+        codec_v2.read_arrow_table(p)
+    with pytest.raises(codec_v2.ScbfV2Error, match="zstd_frames"):
+        SCBFReader(p)
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [{"base": 1.5}, {"width": 3}, {"width": 4}, {"kind": "rle"}, {"base": 2**40}, None],
+)
+def test_malformed_block_encoding_fails_loudly(tmp_path, bad):
+    """A corrupt ``enc`` entry in the footer raises ``ScbfV2Error`` instead
+    of decoding the stored bytes some other way."""
+    p = str(tmp_path / "bad_enc.scbf")
+    codec_v2.write_arrow_table(p, pa.table({"v": pa.array(range(0, 900, 3), type=pa.int32())}))
+
+    def corrupt(meta):
+        ref = meta["columns"][0]["blocks"]["data_enc"]
+        ref["enc"] = None if bad is None else {**ref["enc"], **bad}
+
+    _rewrite_footer(p, corrupt)
+    with pytest.raises(codec_v2.ScbfV2Error, match="encoding"):
+        codec_v2.read_arrow_table(p)
+
+
+def test_encoded_blocks_and_mix64_filters_hidden_from_older_readers(tmp_path):
+    """Structural guard: no file stores an encoded block under a role an
+    older reader decodes as plain values, or a mix64 filter under the
+    ``bloom`` key an older reader probes with blake2b; every such use is
+    named in ``features``. Covers every type, nulls, dictionaries, all
+    codecs, grouped and ungrouped, small and large block sets."""
+    rng = np.random.default_rng(3)
+    n = 1000
+    t = pa.table(
+        {
+            "i32": pa.array(rng.integers(-500, 500, n).astype(np.int32)),
+            "i64": pa.array([None if i % 9 == 0 else i for i in range(n)], type=pa.int64()),
+            "f": pa.array(rng.integers(0, 50, n).astype(np.float64)),
+            "b": pa.array(rng.integers(0, 2, n).astype(bool)),
+            "cat": pa.array(np.array(["x", "y", "z"])[rng.integers(0, 3, n)]),
+            "txt": pa.array([f"t{i}" for i in range(n)]),
+        }
+    )
+    seen = collections.Counter()
+    for codec in ROUNDTRIP_CODECS:
+        for rpg in (None, 300, 100):
+            p = str(tmp_path / f"s_{codec}_{rpg}.scbf")
+            codec_v2.write_arrow_table(p, t, codec=codec, rows_per_group=rpg, bloom_columns=["i32", "i64", "txt"])
+            meta = codec_v2.read_meta(p)
+            features = set(meta.get("features", ()))
+            for g in [meta] + meta.get("row_groups", []):
+                for cm in g["columns"]:
+                    for role, ref in cm["blocks"].items():
+                        if "enc" in ref:
+                            assert role in ("data_enc", "indices_enc") and "enc" in features
+                            seen["enc"] += 1
+                        else:
+                            assert role in PLAIN_ROLES, role
+                    if "bloom" in cm:
+                        assert "h" not in cm["bloom"]  # blake2b
+                        seen["blake2b"] += 1
+                    if "bloom_mix64" in cm:
+                        assert cm["bloom_mix64"]["h"] == "mix64" and "bloom_mix64" in features
+                        seen["mix64"] += 1
+    assert seen["enc"] and seen["blake2b"] and seen["mix64"]  # not vacuous
+
+
+def _splitmix_positions(v: int, k: int, m: int) -> list:
+    """The mix64 bit positions in plain Python ints — the file contract."""
+    mask = (1 << 64) - 1
+
+    def mix(z):
+        z = (z + 0x9E3779B97F4A7C15) & mask
+        z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & mask
+        z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & mask
+        return z ^ (z >> 31)
+
+    h1 = mix(v & mask)
+    h2 = mix(h1) | 1
+    return [((h1 + i * h2) & mask) % m for i in range(k)]
+
+
+def test_mix64_positions_match_python_reference():
+    vals = [0, 1, -1, 2**31 - 1, -(2**31), 2**63 - 1, -(2**63), 123456789]
+    got = codec_v2._mix64_positions(vals, 7, 9587)
+    assert got.tolist() == [_splitmix_positions(v, 7, 9587) for v in vals]
+
+
+def test_mix64_bloom_no_false_negatives_property():
+    """Hypothesis: every int32/int64 value a mix64 filter was built from —
+    negatives and the int64 extremes included — may be contained, probed
+    one at a time and as one IN list."""
+    lo, hi = INT_BOUNDS["int64"]
+
+    @settings(max_examples=60, deadline=None)
+    @given(
+        ints=st.sets(st.one_of(st.integers(lo, hi), st.sampled_from([lo, hi, -1, 0])), min_size=1, max_size=400),
+        type_name=st.sampled_from(["int32", "int64"]),
+    )
+    def check(ints, type_name):
+        if type_name == "int32":
+            ints = {max(-(2**31), min(2**31 - 1, v)) for v in ints}
+        bl = codec_v2._bloom_of(np.asarray(sorted(ints), dtype=np.int64), type_name)
+        assert bl["h"] == "mix64"
+        assert all(codec_v2.bloom_contains(bl, v, type_name) for v in ints)
+        assert codec_v2.bloom_may_contain_any(bl, list(ints), type_name)
+
+    check()
+
+
+def test_mix64_bloom_false_positive_rate():
+    """At the 1% target, absent probes test positive at most about 2%."""
+    rng = np.random.default_rng(11)
+    vals = np.unique(rng.integers(-(2**40), 2**40, 20_000))
+    bl = codec_v2._bloom_of(vals, "int64")
+    probes = rng.integers(2**41, 2**42, 100_000)  # disjoint from vals
+    pos = codec_v2._mix64_positions(probes, bl["k"], bl["m"])
+    codec_v2.bloom_contains(bl, int(vals[0]), "int64")  # decodes the bits
+    fp = bl["_bits"][pos].all(axis=1).mean()
+    assert fp <= 0.02, fp
+
+
+def test_vectorized_in_probe_prunes_like_per_value_probes(tmp_path):
+    """Hypothesis: for any IN list, a group's mix64 filter keeps the group
+    exactly when some per-value ``bloom_contains`` says may-contain, and
+    ``_stats_may_match`` prunes exactly those groups (min/max disabled by
+    probing inside every group's range)."""
+    from pyspark.sql.datasource import In
+
+    rng = np.random.default_rng(5)
+    ids = rng.permutation(np.arange(0, 40_000, 5))[:4096].astype(np.int32)
+    ids[:4] = [0, 39_999, 0, 39_999]  # every group spans the whole id range
+    ids[2048:2052] = [0, 39_999, 0, 39_999]
+    p = str(tmp_path / "in.scbf")
+    codec_v2.write_arrow_table(p, pa.table({"id": pa.array(ids)}), rows_per_group=2048, bloom_columns=["id"])
+    groups = codec_v2.read_meta(p)["row_groups"]
+    assert all("bloom_mix64" in g["columns"][0] for g in groups)
+
+    @settings(max_examples=60, deadline=None)
+    @given(probe=st.lists(st.integers(1, 39_998), min_size=0, max_size=12))
+    def check(probe):
+        for g in groups:
+            bl = g["columns"][0]["bloom_mix64"]
+            per_value = any(codec_v2.bloom_contains(bl, v, "int32") for v in probe)
+            assert codec_v2.bloom_may_contain_any(bl, probe, "int32") == per_value
+            assert codec_v2._stats_may_match(g["columns"], g["rows"], [In(("id",), tuple(probe))]) == per_value
+
+    check()
