@@ -174,6 +174,35 @@ def custom_to_csv(args) -> None:
             spark.stop()
 
 
+def _column_compression(groups, j: int):
+    """(stored bytes, raw bytes, encoding kinds) of column ``j`` summed over
+    ``groups`` (footer block sets), from the footer alone. Raw bytes are the
+    values before any encoding and compression (None for v1, whose block
+    sizes are advisory); the kinds are ``dictionary``, the lightweight
+    encodings (``delta``, ``for``, ``shuffle``, ``dec``) or ``plain``."""
+    import numpy as np
+
+    from .scbf.codec_v2 import _NP_DTYPES
+
+    stored, raw, kinds = 0, 0, set()
+    for g in groups:
+        cm = g["columns"][j]
+        if cm.get("dict"):
+            kinds.add("dictionary")
+        for role, ref in cm["blocks"].items():
+            stored += ref["comp"]
+            enc = ref.get("enc")
+            if enc is None:
+                raw = None if raw is None or ref["uncomp"] is None else raw + ref["uncomp"]
+                if role in ("data", "indices"):
+                    kinds.add("plain")
+                continue
+            kinds.update({enc["kind"], enc.get("int", enc["kind"])})
+            itemsize = 4 if role == "indices_enc" else np.dtype(_NP_DTYPES[cm["type"]]).itemsize
+            raw = None if raw is None else raw + g["rows"] * itemsize
+    return stored, raw, sorted(kinds) or ["plain"]
+
+
 def inspect(args) -> None:
     """Engine extension: print schema/rows/compression of an SCBF file
     without touching data blocks (header + metadata only). ``--head N``
@@ -185,8 +214,15 @@ def inspect(args) -> None:
 
     with SCBFReader(args.file_path) as r:
         print(f"rows: {r.num_rows}")
-        for name, tp in r.schema().items():
-            print(f"  {name}: {tp}")
+        stored_total = raw_total = 0
+        for j, cm in enumerate(r.meta["columns"]):
+            stored, raw, kinds = _column_compression(r.groups, j)
+            stored_total += stored
+            raw_total = None if raw is None else raw_total + raw
+            raw_s = "" if raw is None else f" raw={raw}"
+            print(f"  {cm['name']}: {cm['type']}  stored={stored}{raw_s} enc={','.join(kinds)}")
+        raw_s = "" if raw_total is None else f" raw={raw_total}"
+        print(f"blocks: stored={stored_total}{raw_s} codec={r.meta.get('codec', 'zlib')}")
         if args.head:
             if args.cols:
                 data = r.read_columns(args.cols)
@@ -313,7 +349,7 @@ def main(argv=None) -> int:
     s2c.add_argument("--local", action="store_true", help="pure-Python codec, no Spark")
     s2c.set_defaults(fn=custom_to_csv)
 
-    ins = sub.add_parser("inspect", help="print schema and row count (metadata-only read)")
+    ins = sub.add_parser("inspect", help="print schema, row count and per-column compression (metadata-only read)")
     ins.add_argument("file_path")
     ins.add_argument("--head", type=int, default=0, metavar="N",
                      help="also preview the first N rows (codec path, no Spark)")

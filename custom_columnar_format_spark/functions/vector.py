@@ -58,13 +58,51 @@ def lit_vector(values) -> Column:
 # output of ``vector_sql``.
 
 
+def _name_parts(name: str) -> list:
+    """The parts of a column name as ``F.col`` reads it (Spark's
+    ``UnresolvedAttribute.parseAttributeName``): dots separate nested
+    fields, a backticked part is one part whatever it holds, and a doubled
+    backtick inside one is a literal backtick. Raises ``ValueError`` where
+    Spark raises a syntax error."""
+    parts, cur, quoted, i = [], [], False, 0
+    while i < len(name):
+        ch = name[i]
+        if quoted:
+            if ch != "`":
+                cur.append(ch)
+            elif name[i + 1 : i + 2] == "`":
+                cur.append("`")
+                i += 1
+            else:
+                quoted = False
+                if name[i + 1 : i + 2] not in ("", "."):
+                    raise ValueError(f"syntax error in attribute name: {name!r}")
+        elif ch == "`":
+            if cur:
+                raise ValueError(f"syntax error in attribute name: {name!r}")
+            quoted = True
+        elif ch == ".":
+            if i == 0 or name[i - 1] == "." or i == len(name) - 1:
+                raise ValueError(f"syntax error in attribute name: {name!r}")
+            parts.append("".join(cur))
+            cur = []
+        else:
+            cur.append(ch)
+        i += 1
+    if quoted:
+        raise ValueError(f"syntax error in attribute name: {name!r}")
+    parts.append("".join(cur))
+    return parts
+
+
 def ident_sql(name: str) -> str:
-    """Backtick-quote a column NAME for interpolation into the SQL-string
-    fast paths (ADVICE r11: a name like ``a-b`` or one with spaces would
-    silently parse as an expression — subtraction — through a bare f-string,
-    where the old ``F.col`` path handled it). Backticks inside the name are
-    doubled per Spark's identifier escaping."""
-    return "`" + name.replace("`", "``") + "`"
+    """A column NAME as the SQL fragment ``F.col(name)`` resolves, for
+    interpolation into the SQL-string fast paths: each dot-separated part
+    backtick-quoted (backticks inside doubled, per Spark's identifier
+    escaping), so ``features.emb`` still reaches the nested field while
+    ``a-b`` or a name with spaces cannot parse as an expression
+    (subtraction) the way it would through a bare f-string (ADVICE r11)."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in _name_parts(name))
 
 
 def _double_sql(v: float) -> str:

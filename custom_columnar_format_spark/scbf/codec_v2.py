@@ -29,10 +29,15 @@ for object stores and distributed writers from the start:
   block minimum (frame of reference), each narrowed to the smallest unsigned
   width (u1/u2/u4/u8) and byte-shuffled (Blosc's transpose) when wider than
   one byte; a block that does not narrow is only shuffled. A float64 block
-  is shuffled when a strided sample of ≤1024 values compresses smaller that
-  way at zlib level 1, else stored plain. The transform sits in the block
-  ref (``"enc": {"kind": "delta" | "for" | "shuffle", "width", "base"}``),
-  ``uncomp`` is the size of the stored (encoded) bytes, and the block is
+  whose values are all short decimals (feature ``"dec"``: ``k / 10**exp``
+  bit for bit, ``exp ≤ DEC_MAX_EXP``, ``|k| < 2**53``; the pseudodecimals
+  of BtrBlocks and ALP) stores the integers ``k`` through that int rule
+  when it narrows them; any other float64 block is shuffled when a strided
+  sample of ≤1024 values compresses smaller that way at zlib level 1, else
+  stored plain. The transform sits in the block ref (``"enc": {"kind":
+  "delta" | "for" | "shuffle", "width", "base"}``, or ``{"kind": "dec",
+  "exp", "int": "delta" | "for", "width", "base"}``), ``uncomp`` is the
+  size of the stored (encoded) bytes, and the block is
   filed under the role ``data_enc`` / ``indices_enc`` instead of ``data`` /
   ``indices``, so a reader that predates encodings fails on the missing
   role instead of returning the encoded bytes as values. Bool data, utf8
@@ -60,7 +65,7 @@ for object stores and distributed writers from the start:
   ``mix64`` never looks under ``bloom_mix64``, so it prunes nothing with a
   filter it would hash wrongly.
 - **Features**: the footer's ``features`` list names every format addition
-  a reader must implement to read the file correctly (``"enc"``,
+  a reader must implement to read the file correctly (``"enc"``, ``"dec"``,
   ``"bloom_mix64"``); ``read_meta`` raises ``ScbfV2Error`` on a name it does
   not know. Files that use none omit the key.
 
@@ -102,8 +107,14 @@ DVS_MAX = 32
 #: plain files stay readable by readers that predate ``FEATURES``
 ENC_MIN_ROWS = 128
 #: footer ``features`` this reader implements (see the module docstring)
-FEATURES = frozenset({"enc", "bloom_mix64"})
+FEATURES = frozenset({"enc", "dec", "bloom_mix64"})
 _WIDTHS = (1, 2, 4, 8)
+#: the largest decimal exponent ``_encode_floats`` tries (ALP's range for
+#: doubles that came from short decimal text)
+DEC_MAX_EXP = 8
+#: scaled decimals must stay below this in magnitude, so every one of them
+#: and every ``float + base`` sum the decoder forms is an exact double
+_DEC_LIMIT = 2**53
 #: footer key of a column's Bloom filter, by hash id
 _BLOOM_KEYS = {"blake2b": "bloom", "mix64": "bloom_mix64"}
 
@@ -178,6 +189,8 @@ class _BlockWriter:
         self.pos += len(comp)
         if enc is not None:
             self.features.add("enc")
+            if enc["kind"] == "dec":
+                self.features.add("dec")
         return ref
 
     def put_role(self, blocks: Dict[str, BlockRef], role: str, raw: bytes, enc: Optional[dict]) -> None:
@@ -222,11 +235,54 @@ def _encode_ints(v: np.ndarray) -> tuple:
     return (_shuffle(stored) if width > 1 else stored.tobytes()), enc
 
 
+def _unscale(x: np.ndarray, exp: int) -> np.ndarray:
+    """Scaled decimals (integral float64, in place) back to their values:
+    one correctly rounded division by the exact constant ``10**exp``. The
+    encoder checks its blocks with this very function, and the decoder
+    calls it, so what the encoder proved is what the decoder returns."""
+    if exp:
+        x /= float(10**exp)
+    return x
+
+
+def _encode_decimal(v: np.ndarray) -> Optional[tuple]:
+    """``(stored bytes, enc)`` when every value of ``v`` is ``k / 10**e``
+    for integers ``|k| < 2**53`` and ``e ≤ DEC_MAX_EXP``, bit for bit, and
+    ``_encode_ints`` narrows the ``k``; else None. ``e`` is the smallest
+    exponent that holds for a strided sample of at most 1024 values; the
+    whole block is then checked through the decoder's own path (int64,
+    back to float64, ``_unscale``), so ``-0.0``, NaN, ±inf and values that
+    are not short decimals fail the check."""
+    def scaled(x: np.ndarray, exp: int) -> Optional[np.ndarray]:
+        with np.errstate(over="ignore", invalid="ignore"):
+            k = np.rint(x * float(10**exp))
+        if not (np.abs(k) < _DEC_LIMIT).all():  # also false for NaN and ±inf
+            return None
+        ints = k.astype("<i8")
+        same = _unscale(ints.astype("<f8"), exp).view("<i8") == x.view("<i8")
+        return ints if same.all() else None
+
+    sample = np.ascontiguousarray(v[:: max(1, v.size // 1024)][:1024])
+    exp = next((e for e in range(DEC_MAX_EXP + 1) if scaled(sample, e) is not None), None)
+    ints = None if exp is None else scaled(v, exp)
+    if ints is None:
+        return None
+    raw, enc = _encode_ints(ints)
+    if enc["width"] == 8:
+        return None
+    return raw, {"kind": "dec", "exp": exp, "int": enc["kind"], "width": enc["width"], "base": enc["base"]}
+
+
 def _encode_floats(v: np.ndarray) -> tuple:
-    """``(stored bytes, enc)`` for a float64 block: shuffled when a strided
-    sample of at most 1024 values compresses smaller shuffled than plain at
-    zlib level 1 (a full-block trial at the file's level costs as much as
-    the shuffle saves), else plain (``enc`` None)."""
+    """``(stored bytes, enc)`` for a float64 block. A block of short
+    decimals is stored as its scaled integers through the int rule
+    (``_encode_decimal``, kind ``dec``). Any other block is shuffled when a
+    strided sample of at most 1024 values compresses smaller shuffled than
+    plain at zlib level 1 (a full-block trial at the file's level costs as
+    much as the shuffle saves), else stored plain (``enc`` None)."""
+    dec = _encode_decimal(v)
+    if dec is not None:
+        return dec
     sample = v[:: max(1, v.size // 1024)][:1024]
     if len(zlib.compress(_shuffle(sample), 1)) < len(zlib.compress(sample.tobytes(), 1)):
         return _shuffle(v), {"kind": "shuffle", "width": 8, "base": 0}
@@ -236,18 +292,36 @@ def _encode_floats(v: np.ndarray) -> tuple:
 def _decode(raw: bytes, enc: dict, dtype: np.dtype, rows: int) -> np.ndarray:
     """Invert ``_encode_ints`` / ``_encode_floats`` straight into ``dtype``:
     one copy to unshuffle, then a widening cast and ``cumsum`` or ``+ base``
-    in the target width (wrapping like the encoder's differences)."""
+    in the target width (wrapping like the encoder's differences). A ``dec``
+    block's integers are rebuilt the same way — frame of reference straight
+    in float64, deltas summed in int64 and converted once — and divided by
+    ``10**exp`` (``_unscale``)."""
     try:
         kind, width, base = enc["kind"], enc["width"], enc["base"]
+        exp = None
+        if kind == "dec":
+            exp, kind = enc["exp"], enc["int"]
     except (TypeError, KeyError):
         raise ScbfV2Error(f"malformed block encoding {enc!r}") from None
+    int_dtype = dtype
+    if exp is not None:
+        if (
+            dtype != np.dtype("<f8")
+            or not isinstance(exp, int)
+            or not 0 <= exp <= DEC_MAX_EXP
+            or kind not in ("delta", "for")
+            or not isinstance(base, int)
+            or not -_DEC_LIMIT <= base <= _DEC_LIMIT
+        ):
+            raise ScbfV2Error(f"decimal block encoding {enc!r} does not fit {rows} {dtype} values")
+        int_dtype = np.dtype("<i8")
     if (
         kind not in ("delta", "for", "shuffle")
         or width not in _WIDTHS
         or not isinstance(base, int)
-        or width > dtype.itemsize
-        or (kind == "shuffle") != (width == dtype.itemsize)
-        or (kind != "shuffle" and dtype.kind != "i")
+        or width > int_dtype.itemsize
+        or (kind == "shuffle") != (width == int_dtype.itemsize)
+        or (kind != "shuffle" and int_dtype.kind != "i")
         or len(raw) != rows * width
     ):
         raise ScbfV2Error(f"block encoding {enc!r} does not fit {rows} {dtype} values")
@@ -260,13 +334,17 @@ def _decode(raw: bytes, enc: dict, dtype: np.dtype, rows: int) -> np.ndarray:
     u = u.view(f"<u{width}")
     if kind == "shuffle":
         return u.view(dtype)
-    if not np.iinfo(dtype).min <= base <= np.iinfo(dtype).max:
+    if not np.iinfo(int_dtype).min <= base <= np.iinfo(int_dtype).max:
         raise ScbfV2Error(f"block encoding base {base} out of range for {dtype}")
-    out = u.astype(dtype)
+    if exp is not None and kind == "for":
+        out = u.astype("<f8")
+        out += base
+        return _unscale(out, exp)
+    out = u.astype(int_dtype)
     if kind == "delta":
         np.cumsum(out, out=out)
-    out += dtype.type(base)
-    return out
+    out += int_dtype.type(base)
+    return out if exp is None else _unscale(out.astype("<f8"), exp)
 
 
 def _trunc_min(s: str) -> str:
@@ -769,6 +847,29 @@ def read_arrow_table(
     return pa.concat_tables(tables)
 
 
+def _utf8_offsets(raw: bytes, n: int, blob_len: int, name: str):
+    """The Arrow offsets buffer of ``n`` strings from a stored u32 offsets
+    block, checked in one pass first: Arrow trusts offsets, and a
+    decreasing pair aborts the process on access, one past the blob reads
+    out of bounds and one at 2**31 or above reads as negative (v1's u32
+    layout allows it). Raises ``ScbfV2Error`` naming the column."""
+    import pyarrow as pa
+
+    offs = np.frombuffer(raw, dtype="<u4", count=n + 1) if 0 <= n and 4 * (n + 1) <= len(raw) else None
+    if (
+        offs is None
+        or offs[0] != 0
+        or offs[-1] != blob_len
+        or offs[-1] > 2**31 - 1
+        or not (offs[1:] >= offs[:-1]).all()
+    ):
+        raise ScbfV2Error(
+            f"column {name!r}: corrupt utf8 offsets (need {n + 1} non-decreasing offsets "
+            f"from 0 to the blob length {blob_len}, below 2**31)"
+        )
+    return pa.py_buffer(offs)
+
+
 def _read_group(
     f: BinaryIO,
     codec: str,
@@ -799,16 +900,15 @@ def _read_group(
                 d_blob = _get_block(f, refs["dict_blob"], verify_crc, codec)
                 n_dict = len(d_offs) // 4 - 1
                 dict_arr = pa.StringArray.from_buffers(
-                    n_dict, pa.py_buffer(d_offs), pa.py_buffer(d_blob)
+                    n_dict, _utf8_offsets(d_offs, n_dict, len(d_blob), name), pa.py_buffer(d_blob)
                 )
                 indices = pa.Array.from_buffers(pa.int32(), rows, [validity_buf, pa.py_buffer(idx)])
                 arr = pa.DictionaryArray.from_arrays(indices, dict_arr).cast(pa.string())
             else:
                 offs = _get_block(f, refs["offsets"], verify_crc, codec)
                 blob = _get_block(f, refs["blob"], verify_crc, codec)
-                np_offs = np.frombuffer(offs, dtype="<u4", count=rows + 1)
                 arr = pa.StringArray.from_buffers(
-                    rows, pa.py_buffer(np_offs.astype("<i4").tobytes()), pa.py_buffer(blob), validity_buf
+                    rows, _utf8_offsets(offs, rows, len(blob), name), pa.py_buffer(blob), validity_buf
                 )
         else:
             vals = _values(f, refs, "data", _NP_DTYPES[cm["type"]], rows, verify_crc, codec)

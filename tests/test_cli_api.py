@@ -194,6 +194,72 @@ def test_cli_inspect_head_preview(sample_csv, tmp_path, capsys):
     assert "rows: 3" in out and "First" not in out
 
 
+def _inspect_lines(path, capsys) -> dict:
+    """``inspect``'s per-column lines as {name: {key: value}}, plus the
+    ``blocks`` summary line under the key ``None``."""
+    assert cli_main(["inspect", path]) == 0
+    out = {}
+    for line in capsys.readouterr().out.splitlines():
+        if "stored=" in line:
+            key = None if line.startswith("blocks:") else line.split(":")[0].strip()
+            out[key] = dict(tok.split("=", 1) for tok in line.split() if "=" in tok)
+    return out
+
+
+def test_cli_inspect_reports_compression(tmp_path, capsys, monkeypatch):
+    """``inspect`` prints, per column, the stored bytes, the raw bytes (v2)
+    and the encodings, summed over row groups, from the footer alone: a v1
+    file, a plain v2 file and a grouped v2 file with decimal blocks."""
+    import numpy as np
+    import pyarrow as pa
+
+    from custom_columnar_format_spark.scbf import codec, codec_v2
+
+    n = 1000
+    rng = np.random.default_rng(4)
+    t = pa.table(
+        {
+            "id": pa.array(np.arange(n, dtype=np.int32)),
+            "price": pa.array(np.round(rng.uniform(1, 1000, n), 2)),
+            "noise": pa.array(rng.standard_normal(n)),
+            "cat": pa.array([("a", "b", None)[i % 3] for i in range(n)]),
+        }
+    )
+    v1, plain, grouped = (str(tmp_path / f) for f in ("v1.scbf", "plain.scbf", "grouped.scbf"))
+    codec.write_arrow_table(v1, t.select(["id", "price", "noise"]))
+    codec_v2.write_arrow_table(plain, t.slice(0, 100))
+    codec_v2.write_arrow_table(grouped, t, rows_per_group=300)  # groups of 300, 300, 300, 100
+
+    def no_blocks(*a, **k):
+        raise AssertionError("inspect read a data block")
+
+    monkeypatch.setattr(codec_v2, "_get_block", no_blocks)
+    for path in (v1, plain, grouped):
+        lines = _inspect_lines(path, capsys)
+        with SCBFReader(path) as r:
+            for j, cm in enumerate(r.meta["columns"]):
+                refs = [ref for g in r.groups for ref in g["columns"][j]["blocks"].values()]
+                assert int(lines[cm["name"]]["stored"]) == sum(ref["comp"] for ref in refs), (path, cm)
+            total = sum(int(lines[c["name"]]["stored"]) for c in r.meta["columns"])
+            assert int(lines[None]["stored"]) == total
+        if path == v1:
+            assert all("raw" not in f for f in lines.values())
+            assert all(f["enc"] == "plain" for k, f in lines.items() if k is not None)
+    lines = _inspect_lines(plain, capsys)
+    assert lines["id"] == {"stored": lines["id"]["stored"], "raw": "400", "enc": "plain"}
+    assert lines["cat"]["enc"] == "dictionary,plain"
+
+    lines = _inspect_lines(grouped, capsys)
+    # raw: the values before encoding (4 + 8 bytes a row), whatever is stored
+    assert lines["id"]["raw"] == str(4 * n) and lines["price"]["raw"] == str(8 * n)
+    assert lines["id"]["enc"] == "delta,plain"  # the 100-row group is plain
+    assert lines["price"]["enc"] == "dec,for,plain"
+    assert lines["noise"]["enc"] == "plain,shuffle"
+    assert lines["cat"]["enc"] == "dictionary,for,plain"
+    assert int(lines["price"]["stored"]) < 0.7 * 8 * n
+    assert int(lines[None]["raw"]) == sum(int(f["raw"]) for k, f in lines.items() if k is not None)
+
+
 def test_cli_ivf_maintenance_surface(spark, sf_small, tmp_path, capsys):
     """The IVF store ops surface end-to-end from the CLI: info (flat) →
     init-generational → info (pointer) → compact (generation flip) →

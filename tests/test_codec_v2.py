@@ -3,7 +3,9 @@ footer layout, selective-read I/O proof, and Spark filter-pushdown skipping."""
 
 import collections
 import glob
+import math
 import os
+import struct
 
 import numpy as np
 import pyarrow as pa
@@ -686,7 +688,8 @@ def _roundtrip(tmp_path, table, group_rows=codec_v2.ENC_MIN_ROWS) -> dict:
 
 def _picked(meta: dict, name: str) -> list:
     """Per block set, the (kind, width) of column ``name``'s data or index
-    block, or None when it is plain; checks the role matches."""
+    block — ("dec", exp, int kind, width) for a decimal float block — or
+    None when it is plain; checks the role matches."""
     out = []
     for g in meta.get("row_groups") or [meta]:
         cm = next(c for c in g["columns"] if c["name"] == name)
@@ -696,7 +699,10 @@ def _picked(meta: dict, name: str) -> list:
         ]
         enc = ref.get("enc")
         assert role.endswith("_enc") == (enc is not None), (role, enc)
-        out.append(None if enc is None else (enc["kind"], enc["width"]))
+        if enc is not None and enc["kind"] == "dec":
+            out.append(("dec", enc["exp"], enc["int"], enc["width"]))
+        else:
+            out.append(None if enc is None else (enc["kind"], enc["width"]))
     return out
 
 
@@ -720,13 +726,45 @@ def _int_rule(vals: list, itemsize: int):
     return ("shuffle", itemsize) if width == itemsize else (kind, width)
 
 
+def _dec_rule(vals: list):
+    """The decimal rule in Python floats and ints: ("dec", exp, int kind,
+    width) when the smallest exponent that holds for the strided sample
+    holds bit for bit for every value (through an int, so -0.0 fails) with
+    scaled magnitudes below 2**53, and the int rule narrows the scaled
+    values; else None."""
+
+    def scaled(xs, exp):
+        ks = []
+        for x in xs:
+            y = x * 10**exp
+            if not math.isfinite(y) or abs(round(y)) >= 2**53:
+                return None
+            k = round(y)
+            if struct.pack("<d", k / 10**exp) != struct.pack("<d", x):
+                return None
+            ks.append(k)
+        return ks
+
+    sample = vals[:: max(1, len(vals) // 1024)][:1024]
+    exp = next((e for e in range(codec_v2.DEC_MAX_EXP + 1) if scaled(sample, e) is not None), None)
+    ks = None if exp is None else scaled(vals, exp)
+    if ks is None:
+        return None
+    kind, width = _int_rule(ks, 8)
+    return None if width == 8 else ("dec", exp, kind, width)
+
+
 def _float_rule(vals: list):
-    """The float rule: shuffle iff a strided sample of at most 1024 values
-    compresses smaller shuffled than plain at zlib level 1."""
+    """The float rule: the decimal rule, else shuffle iff a strided sample
+    of at most 1024 values compresses smaller shuffled than plain at zlib
+    level 1."""
     import zlib
 
     if len(vals) < codec_v2.ENC_MIN_ROWS:
         return None
+    dec = _dec_rule(vals)
+    if dec is not None:
+        return dec
     a = np.asarray(vals, dtype="<f8")
     sample = np.ascontiguousarray(a[:: max(1, a.size // 1024)][:1024])
     shuffled = sample.view("u1").reshape(-1, 8).T.tobytes()
@@ -808,28 +846,49 @@ def test_int_encodings_pick_each_kind(tmp_path):
         assert ("features" in meta) == (want is not None), name
 
 
+def _nan(payload: int, negative: bool) -> float:
+    return struct.unpack("<d", struct.pack("<Q", (negative << 63) | 0x7FF0_0000_0000_0000 | payload))[0]
+
+
 @st.composite
 def _float_blocks(draw):
-    special = st.sampled_from([float("nan"), -0.0, 0.0, float("inf"), float("-inf"), 1.5])
-    shape = draw(st.sampled_from(["any", "special", "integral"]))
+    nans = st.builds(_nan, st.integers(1, 2**52 - 1), st.booleans())
+    special = st.one_of(
+        st.sampled_from([float("nan"), -0.0, 0.0, float("inf"), float("-inf"), 1.5, 5e-324, -2.2e-308]),
+        nans,
+    )
+    shape = draw(st.sampled_from(["any", "special", "integral", "decimal", "near_limit", "mixed", "sorted"]))
     n = draw(st.one_of(st.sampled_from([0, 1, codec_v2.ENC_MIN_ROWS]), st.integers(0, 600)))
+    exp = draw(st.integers(0, codec_v2.DEC_MAX_EXP))
     if shape == "special":
         elems = special
     elif shape == "integral":
         elems = st.integers(1, 50).map(float)
+    elif shape in ("decimal", "mixed", "sorted"):
+        span = draw(st.sampled_from([100, 2**16, 2**31, 2**40, 2**53 - 1]))
+        elems = st.integers(-span, span).map(lambda k: k / 10**exp)
+    elif shape == "near_limit":  # magnitudes near 2**53 / 10**exp
+        elems = st.integers(2**53 - 300, 2**53 + 300).map(lambda k: k / 10**exp)
     else:
-        elems = st.one_of(st.floats(allow_nan=True, allow_infinity=True), special)
+        elems = st.one_of(st.floats(allow_nan=True, allow_infinity=True, allow_subnormal=True), special)
     vals = draw(st.lists(elems, min_size=n, max_size=n))
+    if shape == "sorted":
+        vals.sort()
+    if shape == "mixed" and n:  # one value that is not a short decimal
+        vals[draw(st.integers(0, n - 1))] = draw(st.one_of(special, st.floats(allow_nan=False)))
     nulls = draw(st.lists(st.booleans(), min_size=n, max_size=n)) if draw(st.booleans()) else [False] * n
     return [None if z else v for v, z in zip(vals, nulls)]
 
 
 def test_float_encodings_roundtrip_property(tmp_path):
-    """Hypothesis: float64 blocks with NaN (any payload), -0.0 and ±inf,
-    with and without nulls, round-trip bit-identically, and each block is
-    shuffled exactly when the sample rule says so."""
+    """Hypothesis: float64 blocks — decimals with 0 to 8 places, magnitudes
+    near 2**53 / 10**exp, sorted decimals, decimals with one value that is
+    not, NaN (any payload), -0.0, ±inf, subnormals, with and without nulls
+    — round-trip bit-identically under every codec, grouped and not, and
+    each block picks the encoding the Python rules name: (dec, exp, int
+    kind, width), shuffle or plain."""
 
-    @settings(max_examples=40, deadline=None)
+    @settings(max_examples=80, deadline=None)
     @given(vals=_float_blocks())
     def check(vals):
         t = pa.table({"f": pa.array(vals, type=pa.float64())})
@@ -838,21 +897,69 @@ def test_float_encodings_roundtrip_property(tmp_path):
         for (codec, grouped), meta in metas.items():
             want = [_float_rule(s) for s in _group_slices(filled, grouped)]
             assert _picked(meta, "f") == want, (codec, grouped)
+            assert ("dec" in meta.get("features", ())) == any(w and w[0] == "dec" for w in want)
 
     check()
 
 
 def test_float_shuffle_chosen_per_block(tmp_path):
-    """Integral quantities shuffle; two-decimal prices stay plain — in one
-    grouped file, so the choice is made per block, not per column."""
+    """Among floats that are not short decimals, a narrow exponent range
+    (unrounded prices) shuffles and thirds stay plain — in one grouped
+    file, so the choice is made per block, not per column."""
     rng = np.random.default_rng(7)
-    qty = rng.integers(1, 51, 4096).astype(np.float64)
-    price = np.round(rng.uniform(900.0, 105_000.0, 4096), 2)
-    t = pa.table({"f": pa.array(np.concatenate([qty, price]))})
+    price = rng.uniform(900.0, 105_000.0, 4096)
+    thirds = rng.integers(1, 51, 4096) / 3
+    t = pa.table({"f": pa.array(np.concatenate([price, thirds]))})
     p = str(tmp_path / "f.scbf")
     codec_v2.write_arrow_table(p, t, rows_per_group=4096)
     assert _picked(codec_v2.read_meta(p), "f") == [("shuffle", 8), None]
     assert codec_v2.read_arrow_table(p).column("f").to_pylist() == t.column("f").to_pylist()
+
+
+def test_decimal_floats_pick_dec_per_block(tmp_path):
+    """Each named block picks its encoding: short decimals become scaled
+    integers through the int rule (frame of reference or deltas, at the
+    narrowest width), and every block that is not exactly such a decimal —
+    -0.0, NaN, inf, a magnitude at 2**53, a ninth decimal place, a value
+    off the sample's stride, a span that needs 8 bytes — falls back to the
+    shuffle-or-plain rule, unnoticed by the values read back."""
+    rng = np.random.default_rng(1)
+    n = 4096
+    qty = rng.integers(1, 51, n).astype(np.float64)
+    off_stride = np.round(rng.uniform(0, 100, n), 2)
+    off_stride[5] = 1 / 3  # the sample takes every 4th value
+    cases = {
+        "qty": (qty, ("dec", 0, "for", 1)),
+        "price": (np.round(rng.uniform(900.0, 105_000.0, n), 2), ("dec", 2, "for", 4)),
+        "discount": (rng.integers(0, 11, n) / 100, ("dec", 2, "for", 1)),
+        "sorted": (np.sort(np.round(rng.uniform(0, 10, n), 3)), ("dec", 3, "delta", 1)),
+        "eighth": (rng.integers(-500, 500, n) / 10**8, ("dec", 8, "for", 2)),
+        # None: not a decimal block, so shuffled or plain as the sample says
+        "ninth": (rng.integers(1, 500, n) / 10**9, None),
+        "neg_zero": (np.where(np.arange(n) == 8, -0.0, qty), None),
+        "nan": (np.where(np.arange(n) == 8, np.nan, qty), None),
+        "inf": (np.where(np.arange(n) == 8, np.inf, qty), None),
+        "below_limit": (2.0**53 - 2 * qty, ("dec", 0, "for", 1)),
+        "limit": (2.0**53 + 2 * qty, None),
+        "off_stride": (off_stride, None),
+        "wide_span": (np.where(np.arange(n) % 2 == 0, 0.0, 2.0**40 + qty), None),
+    }
+    for name, (vals, want) in cases.items():
+        rule = _float_rule(vals.tolist())
+        if want is None:
+            assert rule is None or rule[0] == "shuffle", name
+            want = rule
+        assert rule == want, name  # the Python rule agrees
+        t = pa.table({"f": pa.array(vals)})
+        meta = _roundtrip(tmp_path, t, group_rows=n)["zlib", False]
+        assert _picked(meta, "f") == [want], name
+        assert ("dec" in meta.get("features", ())) == (want is not None and want[0] == "dec"), name
+    # one grouped file: the first and third blocks are decimals, the middle one is not
+    mixed = np.concatenate([qty, rng.standard_normal(n), cases["price"][0]])
+    p = str(tmp_path / "mixed.scbf")
+    codec_v2.write_arrow_table(p, pa.table({"f": pa.array(mixed)}), rows_per_group=n)
+    assert _picked(codec_v2.read_meta(p), "f") == [("dec", 0, "for", 1), ("shuffle", 8), ("dec", 2, "for", 4)]
+    assert _bits(codec_v2.read_arrow_table(p).column("f")) == _bits(pa.array(mixed))
 
 
 @pytest.mark.parametrize("entries", [255, 256, 257, 65535, 65536, 65537])
@@ -930,6 +1037,76 @@ def test_pre_encoding_file_reads_and_prunes(tmp_path):
     assert got.num_rows == 128 and 50 in got.column("id").to_pylist()
 
 
+def _lcg(i: int) -> int:
+    return (i * 6364136223846793005 + 1442695040888963407) % 2**64 >> 20
+
+
+def _enc_compat_table():
+    """The table ``tests/data/v2_enc_grouped.scbf`` holds: written by the
+    codec with int encodings and mix64 filters but before decimal floats
+    (``rows_per_group=256``, Bloom filters on ``id`` and ``name``)."""
+    n = 768
+    return pa.table(
+        {
+            "id": pa.array([1000 + 3 * i for i in range(n)], type=pa.int64()),
+            "k": pa.array([None if i % 19 == 0 else (i * 37) % 1000 - 500 for i in range(n)], type=pa.int32()),
+            "wide": pa.array([(i * 0x9E3779B97F4A7C15) % 2**64 - 2**63 for i in range(n)], type=pa.int64()),
+            "qty": pa.array([None if i % 11 == 0 else float(i * 7 % 50 + 1) for i in range(n)], type=pa.float64()),
+            "price": pa.array(
+                [None if i % 29 == 0 else round(900 + (_lcg(i) % 10_410_000) / 100, 2) for i in range(n)],
+                type=pa.float64(),
+            ),
+            "noise": pa.array([math.sin(i) * 1000 for i in range(n)], type=pa.float64()),
+            "flag": pa.array([None if i % 13 == 0 else i % 3 == 0 for i in range(n)], type=pa.bool_()),
+            "cat": pa.array([None if i % 7 == 0 else ("red", "green", "blue", "teal")[i % 4] for i in range(n)]),
+            "name": pa.array([f"name_{i}" for i in range(n)]),
+        }
+    )
+
+
+ENC_COMPAT_FILE = os.path.join(os.path.dirname(__file__), "data", "v2_enc_grouped.scbf")
+
+
+def test_enc_file_reads_and_prunes():
+    """A grouped file from the codec before decimal floats — delta, frame of
+    reference and shuffled int blocks, shuffled and plain float blocks,
+    narrow dictionary indices, nulls, mix64 and blake2b filters — reads
+    value-identically, and its filters and stats prune as they did."""
+    from pyspark.sql.datasource import EqualTo, GreaterThan, In
+
+    meta = codec_v2.read_meta(ENC_COMPAT_FILE)
+    assert meta["features"] == ["bloom_mix64", "enc"] and len(meta["row_groups"]) == 3
+    for g in meta["row_groups"]:
+        assert g["rows"] == 256
+        assert [_picked(g, c)[0] for c in ("id", "k", "wide", "qty", "price", "noise", "cat")] == [
+            ("delta", 1), ("for", 2), ("shuffle", 8), ("shuffle", 8), None, ("shuffle", 8), ("for", 1),
+        ]
+    want = _enc_compat_table()
+    back = codec_v2.read_arrow_table(ENC_COMPAT_FILE)
+    for name in want.column_names:
+        assert _bits(back.column(name)) == _bits(want.column(name)), name
+
+    ids = set(want.column("id").to_pylist())
+    for g in meta["row_groups"]:
+        cols = {c["name"]: c for c in g["columns"]}
+        assert cols["id"]["bloom_mix64"]["h"] == "mix64" and "h" not in cols["name"]["bloom"]
+        lo, hi = cols["id"]["stats"]["min"], cols["id"]["stats"]["max"]
+        present = [v for v in ids if lo <= v <= hi]
+        absent = [v for v in range(lo, hi) if v not in ids]  # inside min/max
+
+        def keeps(flt):
+            return codec_v2._stats_may_match(g["columns"], g["rows"], [flt])
+
+        assert all(keeps(EqualTo(("id",), v)) for v in present)
+        assert sum(not keeps(EqualTo(("id",), v)) for v in absent) >= 0.9 * len(absent)
+        assert not keeps(In(("name",), ("name_5000",)))
+        assert not keeps(GreaterThan(("qty",), 50.0))
+    with SCBFReader(ENC_COMPAT_FILE) as r:
+        got = r.to_arrow(filters=[EqualTo(("id",), 1000 + 3 * 300)])  # row 300, group 1
+        assert got.num_rows == 256 and 1900 in got.column("id").to_pylist()
+        assert r.to_arrow(filters=[GreaterThan(("price",), 200_000.0)]).num_rows == 0
+
+
 def _rewrite_footer(path: str, edit) -> None:
     import json
     import struct
@@ -979,6 +1156,167 @@ def test_malformed_block_encoding_fails_loudly(tmp_path, bad):
         codec_v2.read_arrow_table(p)
 
 
+def _dec_file(tmp_path) -> str:
+    p = str(tmp_path / "dec.scbf")
+    prices = np.round(np.random.default_rng(2).uniform(0, 1000, 600), 2)
+    codec_v2.write_arrow_table(p, pa.table({"f": pa.array(prices)}))
+    assert _picked(codec_v2.read_meta(p), "f") == [("dec", 2, "for", 4)]
+    return p
+
+
+def test_reader_without_dec_feature_fails_loudly(tmp_path, monkeypatch):
+    """A file with decimal float blocks names ``dec`` in its features, so a
+    reader that does not implement them raises at footer parse."""
+    p = _dec_file(tmp_path)
+    assert codec_v2.read_meta(p)["features"] == ["dec", "enc"]
+    monkeypatch.setattr(codec_v2, "FEATURES", codec_v2.FEATURES - {"dec"})
+    with pytest.raises(codec_v2.ScbfV2Error, match="dec"):
+        codec_v2.read_meta(p)
+    with pytest.raises(codec_v2.ScbfV2Error, match="dec"):
+        SCBFReader(p)
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        {"exp": -1}, {"exp": 9}, {"exp": 1.5}, {"exp": None}, {"int": "shuffle"}, {"int": "dec"},
+        {"int": None}, {"width": 8}, {"width": 2}, {"base": 2**53 + 1}, {"base": -(2**53) - 1},
+        {"base": 0.5}, {"kind": "for"},
+    ],
+)
+def test_malformed_decimal_encoding_fails_loudly(tmp_path, bad):
+    """A corrupt ``dec`` entry — exponent out of range or not an int, an
+    int kind other than delta or frame of reference, a width that is 8 or
+    does not match the bytes, a base beyond ±2**53, or the entry read as
+    an int encoding of a float block — raises ``ScbfV2Error``."""
+    p = _dec_file(tmp_path)
+
+    def corrupt(meta):
+        enc = meta["columns"][0]["blocks"]["data_enc"]["enc"]
+        enc.update(bad)
+        for k in [k for k, v in bad.items() if v is None]:
+            del enc[k]
+
+    _rewrite_footer(p, corrupt)
+    with pytest.raises(codec_v2.ScbfV2Error, match="encoding"):
+        codec_v2.read_arrow_table(p)
+
+
+def test_decimal_block_on_int_column_fails_loudly(tmp_path):
+    """A ``dec`` entry on an int column's block raises instead of decoding."""
+    p = str(tmp_path / "i.scbf")
+    codec_v2.write_arrow_table(p, pa.table({"v": pa.array(range(0, 900, 3), type=pa.int64())}))
+    _rewrite_footer(
+        p, lambda m: m["columns"][0]["blocks"]["data_enc"]["enc"].update(kind="dec", exp=0, int="delta")
+    )
+    with pytest.raises(codec_v2.ScbfV2Error, match="encoding"):
+        codec_v2.read_arrow_table(p)
+
+
+def test_small_block_sets_keep_the_plain_format(tmp_path):
+    """Block sets under ``ENC_MIN_ROWS`` rows are written in the plain
+    format: a 100-row file and a file of 100-row groups, decimal floats
+    included, match pinned hashes of their block bytes (``codec="none"``)
+    and of their footer JSON, so the format of small files cannot drift."""
+    import hashlib
+    import json
+    import zlib
+
+    n = 300
+    t = pa.table(
+        {
+            "i": pa.array([None if i % 7 == 0 else i * 3 for i in range(n)], type=pa.int64()),
+            "f": pa.array([None if i % 5 == 0 else i / 4 for i in range(n)], type=pa.float64()),
+            "s": pa.array([("a", "bb", None)[i % 3] for i in range(n)]),
+        }
+    )
+    pins = {  # (blocks, footer) sha256, as the codec before decimal floats wrote them
+        None: (
+            "d95d27475106a9a8bc993a1b87bd4cca0dd869804cd13ef8c7f9d53d79e2861e",
+            "d8a62e828fcce2b06de95f3e19a11a4e76e4b340c45197674ac85f2c5c304075",
+        ),
+        100: (
+            "1195658574b22ad63d5446cf9a61c8bad7023982b98901443d5af998c0e1d65e",
+            "a5a67f0bd6ec21aee2971d3ef24adf6ae34dac9b874a8c0d1118dcc6da705e44",
+        ),
+    }
+    for rpg, pin in pins.items():
+        p = str(tmp_path / f"small_{rpg}.scbf")
+        small = t.slice(0, 100) if rpg is None else t
+        codec_v2.write_arrow_table(p, small, codec="none", rows_per_group=rpg, bloom_columns=["i"])
+        raw = open(p, "rb").read()
+        (meta_len,) = struct.unpack("<Q", raw[-16:-8])
+        meta = json.loads(zlib.decompress(raw[-16 - meta_len : -16]))
+        assert "features" not in meta
+        got = (
+            hashlib.sha256(raw[: -16 - meta_len]).hexdigest(),
+            hashlib.sha256(json.dumps(meta, sort_keys=True).encode()).hexdigest(),
+        )
+        assert got == pin, rpg
+
+
+_READ_IN_CHILD = """
+import sys
+from custom_columnar_format_spark.scbf import codec, codec_v2
+read = codec.read_arrow_table if sys.argv[2] == "v1" else codec_v2.read_arrow_table
+try:
+    print(read(sys.argv[1]).column(0).to_pylist())
+except codec_v2.ScbfV2Error as e:
+    print("ScbfV2Error:", e)
+"""
+
+
+def _read_in_child(path: str, version: str) -> str:
+    """Read ``path``'s first column in a fresh interpreter: Arrow trusts
+    offsets, so a decoder that lets corrupt ones through can abort the
+    process, which must fail this test rather than end the test session."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root + os.pathsep + os.environ.get("PYTHONPATH", "")}
+    proc = subprocess.run(
+        [sys.executable, "-c", _READ_IN_CHILD, path, version], capture_output=True, text=True, env=env, timeout=120
+    )
+    assert proc.returncode == 0, (proc.returncode, proc.stderr[-2000:])
+    return proc.stdout
+
+
+@pytest.mark.parametrize("offsets", [[0, 5, 3], [0, 3, 100_000], [0, 2**31, 2**31], [1, 3, 5], [0, 2]])
+def test_corrupt_utf8_offsets_fail_loudly(tmp_path, offsets):
+    """Crafted v1 utf8 offsets — decreasing, past the blob, at or above
+    2**31, not starting at 0, too few — raise ``ScbfV2Error`` naming the
+    column instead of aborting the interpreter or raising from Arrow."""
+    from custom_columnar_format_spark.scbf import codec
+
+    p = str(tmp_path / "bad_offsets.scbf")
+    with open(p, "wb") as f:
+        raw = (np.array(offsets, dtype="<u4").tobytes(), b"hello")
+        codec.write_table_raw(f, ["s"], [codec.TYPE_UTF8], [raw], 2)
+    out = _read_in_child(p, "v1")
+    assert "ScbfV2Error" in out and "'s'" in out, out
+
+
+@pytest.mark.parametrize("role", ["offsets", "dict_offsets"])
+def test_corrupt_v2_utf8_offsets_fail_loudly(tmp_path, role):
+    """The same check covers v2's plain and dictionary offsets (a block
+    rewritten in place, its CRC updated so only the offsets are wrong)."""
+    import zlib
+
+    p = str(tmp_path / f"bad_{role}.scbf")
+    vals = ["ab", "cde", "f", "ab"] * 2 if role == "dict_offsets" else ["ab", "cde", "f", "gh"]
+    codec_v2.write_arrow_table(p, pa.table({"s": pa.array(vals)}), codec="none")
+    ref = codec_v2.read_meta(p)["columns"][0]["blocks"][role]
+    offs = np.frombuffer(open(p, "rb").read()[ref["offset"] : ref["offset"] + ref["comp"]], dtype="<u4").copy()
+    offs[1], offs[2] = offs[2], offs[1]  # a decreasing pair
+    with open(p, "r+b") as f:
+        f.seek(ref["offset"])
+        f.write(offs.tobytes())
+    _rewrite_footer(p, lambda m: m["columns"][0]["blocks"][role].update(crc32=zlib.crc32(offs.tobytes())))
+    out = _read_in_child(p, "v2")
+    assert "ScbfV2Error" in out and "'s'" in out, out
+
+
 def test_encoded_blocks_and_mix64_filters_hidden_from_older_readers(tmp_path):
     """Structural guard: no file stores an encoded block under a role an
     older reader decodes as plain values, or a mix64 filter under the
@@ -1010,6 +1348,9 @@ def test_encoded_blocks_and_mix64_filters_hidden_from_older_readers(tmp_path):
                         if "enc" in ref:
                             assert role in ("data_enc", "indices_enc") and "enc" in features
                             seen["enc"] += 1
+                            if ref["enc"]["kind"] == "dec":
+                                assert cm["type"] == "float64" and "dec" in features
+                                seen["dec"] += 1
                         else:
                             assert role in PLAIN_ROLES, role
                     if "bloom" in cm:
@@ -1018,7 +1359,7 @@ def test_encoded_blocks_and_mix64_filters_hidden_from_older_readers(tmp_path):
                     if "bloom_mix64" in cm:
                         assert cm["bloom_mix64"]["h"] == "mix64" and "bloom_mix64" in features
                         seen["mix64"] += 1
-    assert seen["enc"] and seen["blake2b"] and seen["mix64"]  # not vacuous
+    assert seen["enc"] and seen["dec"] and seen["blake2b"] and seen["mix64"]  # not vacuous
 
 
 def _splitmix_positions(v: int, k: int, m: int) -> list:

@@ -170,3 +170,37 @@ def test_ident_sql_quotes_hostile_names(spark):
         similarity.signature_col("my-vec", planes),
         similarity.signature_col(F.col("my-vec"), planes),
     )
+
+
+def test_ident_sql_parses_names_like_f_col():
+    """``ident_sql`` splits a name where ``F.col`` does: dots separate
+    nested fields, a backticked part stays one part (a doubled backtick is
+    a literal one), and malformed names raise like Spark's parser."""
+    assert V.ident_sql("emb") == "`emb`"
+    assert V.ident_sql("features.emb") == "`features`.`emb`"
+    assert V.ident_sql("my-vec") == "`my-vec`"
+    assert V.ident_sql("my vec.x") == "`my vec`.`x`"
+    assert V.ident_sql("`a.b`.c") == "`a.b`.`c`"
+    assert V.ident_sql("`x``y`") == "`x``y`"
+    for bad in ("a.", ".a", "a..b", "a`b", "`a`b", "`a"):
+        with pytest.raises(ValueError):
+            V.ident_sql(bad)
+
+
+def test_qualified_names_reach_nested_fields(spark):
+    """A qualified name on the SQL-string fast paths resolves the nested
+    field, as ``F.col`` does: ``signature_col`` on a struct's array field
+    and ``minhash_signature`` on a struct's shingle array, plus a
+    backticked top-level name holding a dot."""
+    rows = [(i, ([float(i), 1.0, -0.5, 2.0 - i],), [f"s{i}", "t", f"u{i % 3}"]) for i in range(6)]
+    df = spark.createDataFrame(
+        rows, "id: long, features: struct<emb: array<double>>, `a.b`: array<string>"
+    ).select("id", "features", "`a.b`", F.struct(F.col("`a.b`").alias("sh")).alias("doc"))
+    planes = similarity._hyperplanes(4, 3, seed=5)
+    _assert_cols_equal(
+        df,
+        similarity.signature_col("features.emb", planes),
+        similarity.signature_col(F.col("features.emb"), planes),
+    )
+    _assert_cols_equal(df, dedup.minhash_signature("doc.sh"), dedup.minhash_signature(F.col("doc.sh")))
+    _assert_cols_equal(df, dedup.minhash_signature("`a.b`"), dedup.minhash_signature(F.col("`a.b`")))
