@@ -801,9 +801,10 @@ def read_arrow_table(
     reads every column by position.
 
     ``group_indices`` restricts the read to those groups of a grouped file —
-    the SPLIT primitive: the DataSource plans one input partition per group
-    so executors scan a single large compacted file in parallel (Parquet's
-    row-group split model). An ungrouped file is the single group 0. Pruning
+    the SPLIT primitive: the DataSource plans one unit per group of a file
+    bigger than its share of a scan, so executors scan a single large
+    compacted file in parallel (Parquet's row-group split model). An
+    ungrouped file is the single group 0. Pruning
     groups under pushed filters is ``SCBFReader.to_arrow(filters=...)``'s job.
 
     ``path`` may be an open binary file, and ``meta`` its already-parsed
@@ -899,6 +900,10 @@ def _read_group(
                 d_offs = _get_block(f, refs["dict_offsets"], verify_crc, codec)
                 d_blob = _get_block(f, refs["dict_blob"], verify_crc, codec)
                 n_dict = len(d_offs) // 4 - 1
+                # one pass over every slot (nulls hold a valid index too):
+                # read as u32, a negative index is also >= n_dict
+                if rows and int(idx.view("<u4").max()) >= n_dict:
+                    raise ScbfV2Error(f"column {name!r}: dictionary index outside [0, {n_dict})")
                 dict_arr = pa.StringArray.from_buffers(
                     n_dict, _utf8_offsets(d_offs, n_dict, len(d_blob), name), pa.py_buffer(d_blob)
                 )

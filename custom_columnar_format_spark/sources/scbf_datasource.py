@@ -10,9 +10,11 @@ Registers format ``"scbf"`` so the full DataFrame API works against SCBF data:
 Design (Spark-first, NOT a translation of the reference's single-file engine):
 
 - **Dataset = directory of SCBF files** (or one file for reference compat).
-  A 100 TB dataset is many files; each file is one input partition (a
-  grouped file of at least ``split_bytes`` is one per row group), so a
-  1000-executor cluster reads them fully in parallel. The reference's
+  A 100 TB dataset is many files. A scan packs them, in listing order, into
+  about ``defaultParallelism`` input partitions of equal stored bytes (a
+  grouped file bigger than its share contributes one unit per row group),
+  so every core gets one task in one wave — Spark's ``FilePartition``
+  packing for Parquet splits. The reference's
   single-file, absolute-offset layout (reference SPEC.md:18-26) cannot be
   appended to concurrently, so parallel writes emit one ``part-*.scbf`` per
   Spark partition — the same files-per-partition strategy Parquet uses.
@@ -38,7 +40,9 @@ Design (Spark-first, NOT a translation of the reference's single-file engine):
 
 from __future__ import annotations
 
+import bisect
 import glob as _glob
+import itertools
 import os
 import re
 import uuid
@@ -213,16 +217,114 @@ def _file_fields(path: str) -> List[StructField]:
         return [StructField(c["name"], SPARK_TYPES[c["type"]], True) for c in h.meta["columns"]]
 
 
-class ScbfFilePartition(InputPartition):
-    def __init__(self, file_path: str, part_values: dict | None = None, groups: list | None = None):
-        self.file_path = file_path
-        self.part_values = part_values or {}
-        self.groups = groups  # row-group indices this split covers (None = whole file)
+#: Spark's ``spark.sql.files.maxPartitionBytes`` default: a scan plans at
+#: least one partition per this many stored bytes, whatever its parallelism
+MAX_PARTITION_BYTES = 128 * 1024 * 1024
+
+
+class ScbfPartition(InputPartition):
+    """One read task: a contiguous run of planned units in listing order, as
+    ``(file path, row-group indices or None for the whole file, hive
+    values)`` entries. Adjacent units of one file share an entry, so the task
+    opens and parses each file once."""
+
+    def __init__(self, entries: list):
+        self.entries = entries
+
+    @property
+    def file_path(self) -> str:
+        """The first entry's file; ``""`` for the empty schema carrier."""
+        return self.entries[0][0] if self.entries else ""
+
+
+def _group_bytes(group: dict) -> int:
+    """Stored bytes of one row group's blocks, from the footer."""
+    return sum(ref["comp"] for c in group["columns"] for ref in c["blocks"].values())
+
+
+def _cuts(sizes: Sequence[int], n: int) -> List[int]:
+    """End indices of ``n`` non-empty contiguous runs of ``sizes`` whose
+    sums are about equal: each cut is the unit boundary nearest to its share
+    of the total (moved only where a run would be empty), so no run is off
+    its share by more than the largest unit."""
+    prefix = [0, *itertools.accumulate(sizes)]
+    ends, lo = [], 1
+    for k in range(1, n):
+        target = prefix[-1] * k / n
+        j = bisect.bisect_left(prefix, target)
+        if j > 0 and target - prefix[j - 1] <= prefix[j] - target:
+            j -= 1
+        j = max(lo, min(j, len(sizes) - (n - k)))
+        ends.append(j)
+        lo = j + 1
+    return ends + [len(sizes)]
+
+
+def _plan(files: Sequence[str], specs: dict, filters, parallelism: int) -> List[ScbfPartition]:
+    """Pack ``files`` (in listing order) into about ``parallelism`` read
+    tasks of about equal stored bytes, dropping what ``filters`` prove
+    cannot match.
+
+    A unit is a whole file, or one surviving row group of a grouped file
+    bigger than its share of the bytes (so one big file still scans in
+    parallel). Only those files, and every file of a filtered plan, read a
+    footer here; an unfiltered scan of small files costs one ``stat()`` per
+    file. Units are cut into ``min(units, max(parallelism, bytes / 128
+    MiB))`` contiguous runs, so row order and clustering stay those of the
+    listing."""
+    # Directory pruning first (cheapest: no file I/O at all).
+    candidates = [p for p in files if codec_v2._stats_may_match(_dir_stats(specs[p]), 1, filters)]
+    sizes = {p: os.path.getsize(p) for p in candidates}
+    share = sum(sizes.values()) / parallelism
+
+    def units_of(p: str) -> list:
+        big = sizes[p] > share
+        if not (filters or big):
+            return [(p, None, sizes[p])]
+        with SCBFReader(p) as h:
+            if big and len(h.groups) > 1:
+                return [
+                    (p, i, _group_bytes(g))
+                    for i, g in enumerate(h.groups)
+                    if h.may_match(filters, i)
+                ]
+            return [(p, None, sizes[p])] if h.may_match(filters) else []
+
+    # Footer reads are I/O-bound and independent — fetch them with a thread
+    # pool, the way Parquet parallelizes driver-side footer reads. Serial, a
+    # filtered plan over 100k files is tens of seconds of planning; threaded
+    # it's bounded by storage round-trips / 16.
+    if len(candidates) > 1:
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=min(16, len(candidates))) as pool:
+            units = [u for us in pool.map(units_of, candidates) for u in us]
+    else:
+        units = [u for p in candidates for u in units_of(p)]
+    if not units:
+        # An all-pruned scan still needs one (empty) partition so the
+        # negotiated schema flows through.
+        return [ScbfPartition([])]
+    nbytes = [b for _p, _g, b in units]
+    n = min(len(units), max(parallelism, -(-sum(nbytes) // MAX_PARTITION_BYTES)))
+    parts, start = [], 0
+    for end in _cuts(nbytes, n):
+        entries: list = []
+        for p, g, _b in units[start:end]:
+            if entries and entries[-1][0] == p:
+                entries[-1][1].append(g)
+            else:
+                entries.append((p, None if g is None else [g], specs[p]))
+        parts.append(ScbfPartition(entries))
+        start = end
+    return parts
 
 
 class ScbfReader(DataSourceReader):
-    """Pruned Arrow-batch reads, one input partition per SCBF file — or one
-    per row group for a grouped file of at least ``split_bytes``.
+    """Pruned Arrow-batch reads over byte-balanced input partitions: the
+    planned files (and the row groups of a file bigger than its share) are
+    packed into about ``parallelism`` contiguous runs (``_plan``), so a scan
+    runs one wave of tasks and keeps the listing's row order.
 
     **Filter-pushdown skipping**: ``pushFilters`` records Spark's pushed
     predicates, and ``partitions()`` drops every hive directory, file and
@@ -232,7 +334,7 @@ class ScbfReader(DataSourceReader):
     filters are returned to Spark (we skip whole files and groups, Spark
     still filters rows), so semantics never depend on the stats."""
 
-    def __init__(self, schema: StructType, options):
+    def __init__(self, schema: StructType, options, parallelism: int):
         self.schema = schema
         self.path = options.get("path")
         if self.path is None:
@@ -244,10 +346,7 @@ class ScbfReader(DataSourceReader):
         self.columns: List[str] = [f.name for f in schema.fields]
         self.verify_crc = options.get("verify_crc", "true").lower() != "false"
         self.file_skipping = options.get("file_skipping", "true").lower() != "false"
-        # files at least this big are split into one input partition per row
-        # group (when grouped); below it, one partition per file and no
-        # planning-time footer read on unfiltered scans
-        self.split_bytes = int(options.get("split_bytes", str(32 * 1024 * 1024)))
+        self.parallelism = parallelism
         self.snapshot = options.get("snapshot")
         self.files_opt = options.get("files")
         self._filters: List = []
@@ -267,52 +366,15 @@ class ScbfReader(DataSourceReader):
         # tests/test_datasource.py::test_stale_scan_reuse_upstream_behavior).
         # Use a fresh spark.read per differently-filtered query, or disable
         # skipping with .option("file_skipping", "false").
-        filters = self._filters if self.file_skipping else []
         files = _list_scbf_files(self.path, self.snapshot, self.files_opt)
         _keys, _types, specs = _dataset_layout(self.path, files)
-        # Partition pruning first (cheapest: no file I/O at all).
-        candidates = [p for p in files if codec_v2._stats_may_match(_dir_stats(specs[p]), 1, filters)]
+        return _plan(files, specs, self._filters if self.file_skipping else [], self.parallelism)
 
-        def _split(p: str) -> list:
-            # Row-group SPLITTING: a big grouped file becomes one input
-            # partition per surviving group, so a single file scans in
-            # parallel across executors (Parquet's split model). Gated on
-            # file size so planning a many-small-files dataset stays one
-            # stat() per file with no footer reads when unfiltered.
-            big = os.path.getsize(p) >= self.split_bytes
-            if not (filters or big):
-                return [ScbfFilePartition(p, specs[p])]
-            with SCBFReader(p) as h:
-                if big and len(h.groups) > 1:
-                    return [
-                        ScbfFilePartition(p, specs[p], groups=[i])
-                        for i in range(len(h.groups))
-                        if h.may_match(filters, i)
-                    ]
-                return [ScbfFilePartition(p, specs[p])] if h.may_match(filters) else []
-
-        # Footer reads (one ranged read per file needing stats pruning or
-        # split planning) are I/O-bound and independent — fetch them with a
-        # thread pool, the way Parquet parallelizes driver-side footer reads.
-        # Serial, a filtered plan over 100k files is tens of seconds of
-        # planning; threaded it's bounded by storage round-trips / 16.
-        if len(candidates) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(16, len(candidates))) as pool:
-                per_file = list(pool.map(_split, candidates))
-        else:
-            per_file = [_split(p) for p in candidates]
-        parts = [part for ps in per_file for part in ps]
-        # An all-files-skipped scan still needs one (empty) partition so the
-        # negotiated schema flows through.
-        return parts or [ScbfFilePartition("")]
-
-    def read(self, partition: ScbfFilePartition):
+    def read(self, partition: ScbfPartition):
         # Same filters that pruned whole files also prune row GROUPS inside
         # each surviving file (SCBFReader.to_arrow skips groups whose
         # stats/blooms prove no match — Parquet row-group pruning).
-        yield from _read_file_partition(
+        yield from _read_partition(
             partition,
             self.schema,
             self.verify_crc,
@@ -338,49 +400,52 @@ def _merged_schema(files: Sequence[str]) -> StructType:
     return StructType(list(fields.values()))
 
 
-def _read_file_partition(
-    partition: ScbfFilePartition, schema: StructType, verify_crc: bool, filters=()
-):
-    """Decode one SCBF file partition to Arrow batches, attaching directory-
+def _read_partition(partition: ScbfPartition, schema: StructType, verify_crc: bool, filters=()):
+    """Decode a partition's units in order to Arrow batches, one unit at a
+    time (a task never holds a table spanning units), attaching directory-
     encoded partition columns as constants and back-filling typed nulls for
-    columns the file predates (schema evolution under merge_schemas). Shared
+    columns a file predates (schema evolution under merge_schemas). Shared
     by the batch and streaming readers."""
+    for path, groups, part_values in partition.entries:
+        with SCBFReader(path) as h:
+            for unit in [None] if groups is None else [[g] for g in groups]:
+                table = _unit_table(h, unit, part_values, schema, verify_crc, filters)
+                yield from table.to_batches(max_chunksize=1 << 16)
+
+
+def _unit_table(h: SCBFReader, groups, part_values: dict, schema: StructType, verify_crc: bool, filters):
+    """One unit (row groups ``groups`` of ``h``, None = the whole file) in
+    the negotiated column order."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
-    if not partition.file_path:
-        return
     columns = schema.fieldNames()
-    part_values = partition.part_values
-    with SCBFReader(partition.file_path) as h:
-        avail = set(h.list_columns())
-        present = [c for c in columns if c in avail and c not in part_values]
-        if present:
-            table = h.to_arrow(present, partition.groups, filters, verify_crc)
-            n = table.num_rows
+    avail = set(h.list_columns())
+    present = [c for c in columns if c in avail and c not in part_values]
+    if present:
+        table = h.to_arrow(present, groups, filters, verify_crc)
+        n = table.num_rows
+    else:
+        # No data blocks needed (partition-only / all-evolved projection):
+        # just the unit's row count from the footer already in hand.
+        n = sum(h.groups[i]["rows"] for i in (range(len(h.groups)) if groups is None else groups))
+    if present == columns:
+        return table
+    # Assemble in negotiated column order: file data, constant partition
+    # values, and typed nulls for evolved columns this file predates.
+    arrays = []
+    for f in schema.fields:
+        c = f.name
+        if c in part_values:
+            v = part_values[c]
+            typ = pa.int64() if isinstance(v, int) else pa.string()
+            # constant column without an n-element Python list round-trip
+            arrays.append(pa.repeat(pa.scalar(v, type=typ), n))
+        elif c in avail:
+            arrays.append(table.column(c))
         else:
-            # No data blocks needed (partition-only / all-evolved projection):
-            # just the split's row count from the footer already in hand.
-            groups = range(len(h.groups)) if partition.groups is None else partition.groups
-            n = sum(h.groups[i]["rows"] for i in groups)
-    if present != columns:
-        # Assemble in negotiated column order: file data, constant partition
-        # values, and typed nulls for evolved columns this file predates.
-        arrays = []
-        for f in schema.fields:
-            c = f.name
-            if c in part_values:
-                v = part_values[c]
-                typ = pa.int64() if isinstance(v, int) else pa.string()
-                # constant column without an n-element Python list round-trip
-                arrays.append(pa.repeat(pa.scalar(v, type=typ), n))
-            elif c in avail:
-                arrays.append(table.column(c))
-            else:
-                arrays.append(pa.nulls(n, to_arrow_type(f.dataType)))
-        table = pa.table(dict(zip(columns, arrays)))
-    for batch in table.to_batches(max_chunksize=1 << 16):
-        yield batch
+            arrays.append(pa.nulls(n, to_arrow_type(f.dataType)))
+    return pa.table(dict(zip(columns, arrays)))
 
 
 @dataclass
@@ -565,17 +630,18 @@ class ScbfStreamReader(DataSourceStreamReader):
     whereas full-path order would interleave later batches into
     earlier-sorting directories. New files must sort after every processed
     file; a violation is detected via ``last`` and fails loudly rather than
-    misreading. One input partition per new file, so a microbatch's files
-    decode fully in parallel. The dataset must contain at least one file
-    when the stream starts (schema comes from it)."""
+    misreading. A microbatch's new files are packed into read tasks the way
+    a batch scan packs them (``_plan``). The dataset must contain at least
+    one file when the stream starts (schema comes from it)."""
 
-    def __init__(self, schema: StructType, options):
+    def __init__(self, schema: StructType, options, parallelism: int):
         self.path = options.get("path")
         if self.path is None:
             raise ValueError("scbf readStream requires a path: .load('/path/to/data')")
         self.schema = schema
         self.columns: List[str] = [f.name for f in schema.fields]
         self.verify_crc = options.get("verify_crc", "true").lower() != "false"
+        self.parallelism = parallelism
 
     def _files(self) -> List[str]:
         try:
@@ -605,11 +671,10 @@ class ScbfStreamReader(DataSourceStreamReader):
                 "(streaming reads require append-only, monotonically-named files)"
             )
         _keys, _types, specs = _dataset_layout(self.path, files)
-        parts = [ScbfFilePartition(p, specs[p]) for p in files[lo:hi]]
-        return parts or [ScbfFilePartition("")]
+        return _plan(files[lo:hi], specs, [], self.parallelism)
 
-    def read(self, partition: ScbfFilePartition):
-        yield from _read_file_partition(partition, self.schema, self.verify_crc)
+    def read(self, partition: ScbfPartition):
+        yield from _read_partition(partition, self.schema, self.verify_crc)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are positional; nothing to clean up
@@ -672,8 +737,10 @@ class ScbfDataSource(DataSource):
     ``snapshot``), ``merge_schemas`` (default false: true reads the union of
     every file's schema, back-filling nulls for columns a file predates),
     ``file_skipping`` (default true: false ignores pushed filters, so no
-    directory, file or row group is skipped), ``split_bytes`` (default 32 MiB:
-    grouped files at least this big plan one input partition per row group).
+    directory, file or row group is skipped). A scan plans about
+    ``parallelism`` byte-balanced input partitions: the session's
+    ``defaultParallelism`` when ``register`` registered the source, else the
+    cores this process may run on.
     Write options: ``compression_level`` (zlib 0-9, default 6), ``version``
     (1 or 2), ``partition_by`` (comma-separated columns → hive ``k=v``
     directory layout; readers reconstruct the columns from the path and
@@ -686,6 +753,8 @@ class ScbfDataSource(DataSource):
     ``max_records_per_file`` (split each task's output into bounded-size
     files — the parquet-writer knob; 0/unset = one file per partition).
     """
+
+    parallelism = len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count() or 1
 
     @classmethod
     def name(cls) -> str:
@@ -729,7 +798,7 @@ class ScbfDataSource(DataSource):
         return StructType([by_name[c.strip()] for c in cols_opt.split(",")])
 
     def reader(self, schema: StructType) -> ScbfReader:
-        return ScbfReader(schema, self.options)
+        return ScbfReader(schema, self.options, self.parallelism)
 
     def writer(self, schema: StructType, overwrite: bool) -> ScbfWriter:
         return ScbfWriter(schema, self.options, overwrite)
@@ -738,11 +807,14 @@ class ScbfDataSource(DataSource):
         return ScbfStreamWriter(schema, self.options, overwrite)
 
     def streamReader(self, schema: StructType) -> ScbfStreamReader:
-        return ScbfStreamReader(schema, self.options)
+        return ScbfStreamReader(schema, self.options, self.parallelism)
 
 
 def register(spark) -> None:
-    """Idempotently register the scbf format on a SparkSession."""
+    """Idempotently register the scbf format on a SparkSession, sized to its
+    ``defaultParallelism``. The registered class is a subclass built here,
+    so it is pickled by value and carries that number to the planner and
+    the tasks."""
     from ..shipping import ensure_worker_imports
 
     ensure_worker_imports(spark)
@@ -751,4 +823,8 @@ def register(spark) -> None:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     except Exception:
         pass  # static conf in some deployments; reader then sees no filters
-    spark.dataSource.register(ScbfDataSource)
+
+    class SessionScbfDataSource(ScbfDataSource):
+        parallelism = spark.sparkContext.defaultParallelism
+
+    spark.dataSource.register(SessionScbfDataSource)

@@ -485,11 +485,12 @@ def test_spark_row_group_pruning_end_to_end(spark, tmp_path):
 
 
 def test_row_group_splits_scan_one_file_in_parallel(spark, tmp_path):
-    """Row groups are SPLIT points: above the split_bytes threshold a single
-    grouped file plans one input partition per group (intra-file read
-    parallelism — the Parquet split model), values identical to the unsplit
-    read; pushed filters drop non-matching groups at planning time, proven
-    by corrupting their bytes."""
+    """Row groups are SPLIT points: a grouped file bigger than its share of
+    the scan's bytes plans one unit per group, packed into
+    ``defaultParallelism`` input partitions (intra-file read parallelism —
+    the Parquet split model), values identical to the unsplit read; pushed
+    filters drop non-matching groups at planning time, proven by corrupting
+    their bytes."""
     out = str(tmp_path / "split")
     (
         spark.range(50000)
@@ -502,12 +503,11 @@ def test_row_group_splits_scan_one_file_in_parallel(spark, tmp_path):
         .mode("overwrite")
         .save(out)
     )
-    df = spark.read.format("scbf").option("split_bytes", "1").load(out)
-    assert df.rdd.getNumPartitions() == 7  # ceil(50000/8192)
+    df = spark.read.format("scbf").load(out)
+    # ceil(50000/8192) = 7 group units packed into local[4]'s parallelism
+    assert df.rdd.getNumPartitions() == 4
     assert df.count() == 50000
     assert df.agg(F.sum("id")).first()[0] == 49999 * 50000 // 2
-    # below the threshold: whole file = one partition, no footer read at plan
-    assert spark.read.format("scbf").load(out).rdd.getNumPartitions() == 1
 
     # corrupt every group except the first; a planned filter must produce
     # only the surviving group's split and never touch corrupted bytes
@@ -519,12 +519,7 @@ def test_row_group_splits_scan_one_file_in_parallel(spark, tmp_path):
                 for ref in cm["blocks"].values():
                     f.seek(ref["offset"])
                     f.write(b"\x00" * ref["comp"])
-    got = (
-        spark.read.format("scbf")
-        .option("split_bytes", "1")
-        .load(out)
-        .filter(F.col("id") < 8000)
-    )
+    got = spark.read.format("scbf").load(out).filter(F.col("id") < 8000)
     assert got.rdd.getNumPartitions() == 1  # one surviving group-split
     assert got.count() == 8000
 
@@ -548,8 +543,9 @@ def test_row_group_splits_with_hive_partitions_and_columnless_count(spark, tmp_p
         .mode("overwrite")
         .save(out)
     )
-    df = spark.read.format("scbf").option("split_bytes", "1").load(out)
-    assert df.rdd.getNumPartitions() == 10  # 2 dirs x ceil(10000/2048)
+    df = spark.read.format("scbf").load(out)
+    # 2 dirs x ceil(10000/2048) = 10 group units packed into local[4]'s parallelism
+    assert df.rdd.getNumPartitions() == 4
     assert df.count() == 20000
     per = {r["pk"]: r["n"] for r in df.groupBy("pk").agg(F.count("*").alias("n")).collect()}
     assert per == {0: 10000, 1: 10000}
@@ -1443,3 +1439,42 @@ def test_vectorized_in_probe_prunes_like_per_value_probes(tmp_path):
             assert codec_v2._stats_may_match(g["columns"], g["rows"], [In(("id",), tuple(probe))]) == per_value
 
     check()
+
+
+@pytest.mark.parametrize("bad", [7, -3])
+@pytest.mark.parametrize("rows", [8, 200], ids=["indices", "indices_enc"])
+def test_dictionary_index_out_of_range_fails_loudly(tmp_path, rows, bad):
+    """A dictionary index outside ``[0, n_dict)`` — in a plain ``indices``
+    block or a frame-of-reference ``indices_enc`` block, its CRC fixed so
+    only the index is wrong — raises ``ScbfV2Error`` naming the column
+    instead of Arrow's bare index error. The null slot holds a valid index
+    and passes the same check."""
+    import zlib
+
+    p = str(tmp_path / "bad_index.scbf")
+    vals = (["ab", "cd", None, "cd"] * rows)[:rows]
+    codec_v2.write_arrow_table(p, pa.table({"s": pa.array(vals)}), codec="none")
+    assert codec_v2.read_arrow_table(p).column("s").to_pylist() == vals
+    blocks = codec_v2.read_meta(p)["columns"][0]["blocks"]
+    role = "indices_enc" if rows >= codec_v2.ENC_MIN_ROWS else "indices"
+    ref = blocks[role]
+    if role == "indices_enc":
+        assert ref["enc"]["kind"] == "for" and ref["enc"]["width"] == 1
+    raw = bytearray(open(p, "rb").read()[ref["offset"] : ref["offset"] + ref["comp"]])
+    if role == "indices":
+        raw[4:8] = np.int32(bad).tobytes()  # row 1
+    elif bad >= 0:
+        raw[1] = bad
+    with open(p, "r+b") as f:
+        f.seek(ref["offset"])
+        f.write(bytes(raw))
+
+    def edit(m):
+        b = m["columns"][0]["blocks"][role]
+        b["crc32"] = zlib.crc32(bytes(raw))
+        if role == "indices_enc" and bad < 0:
+            b["enc"]["base"] = bad  # every index shifts below 0
+
+    _rewrite_footer(p, edit)
+    with pytest.raises(codec_v2.ScbfV2Error, match=r"column 's'.*dictionary index"):
+        codec_v2.read_arrow_table(p)

@@ -305,7 +305,7 @@ def test_stream_reader_lists_files_once_per_microbatch(tmp_path, monkeypatch):
     path = str(tmp_path / "ds")
     _write(path, _table(0, 90, partitioned=True), partition_by="flag")
     schema = sds.ScbfDataSource({"path": path}).schema()
-    reader = sds.ScbfStreamReader(schema, {"path": path})
+    reader = sds.ScbfStreamReader(schema, {"path": path}, 4)
     end = reader.latestOffset()
 
     real = sds._list_scbf_files
@@ -313,5 +313,7 @@ def test_stream_reader_lists_files_once_per_microbatch(tmp_path, monkeypatch):
     monkeypatch.setattr(sds, "_list_scbf_files", lambda *a, **k: calls.append(a) or real(*a, **k))
     parts = reader.partitions(reader.initialOffset(), end)
     assert len(calls) == 1
-    assert len(parts) == 12
-    assert all(p.part_values["flag"] in "ANR" for p in parts)
+    assert len(parts) == 4
+    entries = [e for p in parts for e in p.entries]
+    assert len(entries) == 12
+    assert all(values["flag"] in "ANR" for _path, _groups, values in entries)

@@ -170,6 +170,27 @@ def test_stale_scan_reuse_upstream_behavior(spark, tmp_path):
     assert safe.count() == 60
 
 
+def test_files_pack_into_one_wave_in_listing_order(spark, tmp_path):
+    """Eight files plan ``defaultParallelism`` input partitions (contiguous
+    runs of the listing), and ``collect()`` returns the rows in listing
+    order, each file's rows in stored order — as one task per file did."""
+    import numpy as np
+    import pyarrow as pa
+
+    from custom_columnar_format_spark.scbf import codec_v2
+
+    out = str(tmp_path / "eight")
+    os.makedirs(out)
+    want = []
+    for i in range(8):
+        ids = np.random.default_rng(i).permutation(np.arange(i * 1000, (i + 1) * 1000))
+        codec_v2.write_arrow_table(os.path.join(out, f"part-{i:05d}.scbf"), pa.table({"id": ids}))
+        want += ids.tolist()
+    df = spark.read.format("scbf").load(out)
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism == 4
+    assert [r.id for r in df.collect()] == want
+
+
 def test_append_mode_adds_files(spark, tmp_path):
     out = str(tmp_path / "app")
     mk = lambda lo, hi: spark.range(lo, hi).select(

@@ -76,6 +76,22 @@ def _counting(monkeypatch):
         yield opens, parses
 
 
+def _units(parts) -> list:
+    """(file basename, row group or None) of every planned unit, in order."""
+    return [
+        (os.path.basename(path), g)
+        for p in parts
+        for path, groups, _values in p.entries
+        for g in ([None] if groups is None else groups)
+    ]
+
+
+def _source(options: dict, parallelism: int = 4):
+    ds = sds.ScbfDataSource(options)
+    ds.parallelism = parallelism
+    return ds
+
+
 def test_schema_opens_one_file(layout, monkeypatch):
     _, d = layout
     ds = sds.ScbfDataSource({"path": d})
@@ -88,18 +104,19 @@ def test_schema_opens_one_file(layout, monkeypatch):
 @pytest.mark.parametrize("filtered", [False, True], ids=["unfiltered", "in-filter"])
 def test_read_opens_and_parses_each_file_once(layout, monkeypatch, filtered):
     _, d = layout
-    # split_bytes=1: grouped files plan one partition per row group
-    ds = sds.ScbfDataSource({"path": d, "split_bytes": "1"})
+    # grouped files are bigger than their share of 4 tasks: one unit per
+    # row group, two adjacent units of one file per task
+    ds = _source({"path": d})
     reader = ds.reader(ds.schema())
     if filtered:
         reader.pushFilters([In(("id",), (5, 250, ROWS + 5))])
     parts = reader.partitions()
-    assert all(p.file_path for p in parts)
+    assert all(p.entries for p in parts)
     rows = 0
     for p in parts:
         with _counting(monkeypatch) as (opens, parses):
             rows += sum(b.num_rows for b in reader.read(p))
-        want = {os.path.abspath(p.file_path): 1}
+        want = {os.path.abspath(path): 1 for path, _groups, _values in p.entries}
         assert dict(opens) == want
         assert dict(parses) == want
     assert rows >= (3 if filtered else FILES * ROWS)
@@ -114,7 +131,7 @@ def test_in_planning_decodes_each_bloom_once(layout, monkeypatch):
         decodes["bloom"] += 1
         return unpackbits(*a, **k)
 
-    ds = sds.ScbfDataSource({"path": d, "split_bytes": "1"})
+    ds = _source({"path": d})
     reader = ds.reader(ds.schema())
     # three probes per filter: each group's Bloom on `id` is probed with
     # every value, but must be decoded once
@@ -125,8 +142,8 @@ def test_in_planning_decodes_each_bloom_once(layout, monkeypatch):
     assert decodes["bloom"] <= FILES * groups
     if kind == "v2-grouped":
         # only the groups holding 5, 250 and ROWS + 5 survive
-        assert sorted((os.path.basename(p.file_path), p.groups) for p in parts) == [
-            ("part-00000.scbf", [0]),
-            ("part-00000.scbf", [2]),
-            ("part-00001.scbf", [0]),
+        assert _units(parts) == [
+            ("part-00000.scbf", 0),
+            ("part-00000.scbf", 2),
+            ("part-00001.scbf", 0),
         ]
