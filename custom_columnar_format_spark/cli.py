@@ -3,15 +3,13 @@
     python -m custom_columnar_format_spark.cli csv_to_custom in.csv out.scbf
     python -m custom_columnar_format_spark.cli custom_to_csv f.scbf out.csv [--cols a b]
 
-plus engine extensions the reference lacks. Conversion runs on Spark
-(distributed CSV parse, Catalyst projection) with ``--single-file`` output
-parity: the result is one plain ``.scbf`` file byte-readable by the
-reference's reader. ``--local`` bypasses the JVM entirely and uses the pure
-codec (its export reads v1 and v2 files) — handy for small files and
-air-gapped metadata peeks. Its import parses the CSV straight into Arrow
-string columns (no Python row lists), infers and converts them with
-``scbf.inference``'s Arrow-column forms and compresses the blocks on one
-thread per core.
+plus engine extensions the reference lacks. Both conversions run in this
+process through the codec, with no JVM. The import parses the CSV straight
+into Arrow string columns (no Python row lists), infers and converts them
+with ``scbf.inference``'s Arrow-column forms and compresses the blocks on
+one thread per core; the result is one plain ``.scbf`` file byte-readable
+by the reference's reader. The export reads v1 and v2 files. A dataset
+directory converts through the DataFrame API instead (see the README).
 
 Schema inference follows Spark semantics (all-rows sampling) by default;
 ``--compat-inference`` reproduces the reference's first-non-empty-value rule
@@ -22,9 +20,7 @@ from __future__ import annotations
 
 import argparse
 import csv as _csv
-import glob
 import os
-import shutil
 import sys
 
 
@@ -43,12 +39,6 @@ def _get_spark(cpus: str = "*"):
         .appName("scbf-cli")
         .getOrCreate()
     ), True
-
-
-def _finalize_single_file(out_dir: str, target: str) -> None:
-    (part,) = glob.glob(os.path.join(out_dir, "part-*.scbf"))
-    shutil.move(part, target)
-    shutil.rmtree(out_dir, ignore_errors=True)
 
 
 def _read_csv_strings(path: str):
@@ -88,90 +78,44 @@ def _read_csv_strings(path: str):
 
 
 def csv_to_custom(args) -> None:
-    if args.local:
-        import pyarrow as pa
+    import pyarrow as pa
 
-        from .scbf import codec, inference
+    from .scbf import codec, inference
 
-        header, strings = _read_csv_strings(args.csv_path)
-        infer = (
-            inference.infer_compat_arrow if args.compat_inference else inference.infer_full_arrow
-        )
-        types = infer(strings)
-        table = pa.Table.from_arrays(
-            [inference.parse_arrow(c, t) for c, t in zip(strings, types)], names=header
-        )
-        codec.write_arrow_table(
-            args.out_path,
-            table,
-            level=args.compression_level,
-            workers=len(os.sched_getaffinity(0)),
-        )
-        return
-
-    from .sources.scbf_datasource import register
-
-    spark, owned = _get_spark()
-    try:
-        register(spark)
-        df = spark.read.option("header", True).option("inferSchema", True).csv(args.csv_path)
-        # SCBF v1 carries int32/float64/utf8 — narrow Spark's inferred types.
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import DoubleType, FloatType, IntegerType, LongType
-
-        for f_ in df.schema.fields:
-            if isinstance(f_.dataType, LongType):
-                df = df.withColumn(f_.name, F.col(f_.name).cast("int"))
-            elif isinstance(f_.dataType, (FloatType,)):
-                df = df.withColumn(f_.name, F.col(f_.name).cast("double"))
-            elif not isinstance(f_.dataType, (IntegerType, DoubleType)):
-                df = df.withColumn(f_.name, F.col(f_.name).cast("string"))
-        tmp = args.out_path + ".spark-out"
-        writer = df.coalesce(1) if args.single_file else df
-        writer.write.format("scbf").mode("overwrite").option(
-            "compression_level", str(args.compression_level)
-        ).save(tmp if args.single_file else args.out_path)
-        if args.single_file:
-            _finalize_single_file(tmp, args.out_path)
-    finally:
-        if owned:
-            spark.stop()
+    header, strings = _read_csv_strings(args.csv_path)
+    infer = inference.infer_compat_arrow if args.compat_inference else inference.infer_full_arrow
+    types = infer(strings)
+    table = pa.Table.from_arrays(
+        [inference.parse_arrow(c, t) for c, t in zip(strings, types)], names=header
+    )
+    codec.write_arrow_table(
+        args.out_path,
+        table,
+        level=args.compression_level,
+        workers=len(os.sched_getaffinity(0)),
+    )
 
 
 def custom_to_csv(args) -> None:
-    if args.local:
-        from .scbf.reader_api import SCBFReader
+    from .scbf.codec import ScbfError
+    from .scbf.reader_api import SCBFReader
 
-        with SCBFReader(args.file_path) as r:
-            if args.cols:
-                data = r.read_columns(args.cols)
-                names = list(data)
-                rows = zip(*data.values())
-            else:
-                names, rows = r.read_all()
-        with open(args.out_path, "w", newline="", encoding="utf-8") as f:
-            w = _csv.writer(f)
-            w.writerow(names)
-            w.writerows(rows)
-        return
-
-    from .sources.scbf_datasource import register
-
-    spark, owned = _get_spark()
-    try:
-        register(spark)
-        reader = spark.read.format("scbf")
+    if os.path.isdir(args.file_path):
+        raise ScbfError(
+            f"{args.file_path} is a directory: custom_to_csv converts one .scbf file; "
+            f'read a dataset with spark.read.format("scbf").load(dir)'
+        )
+    with SCBFReader(args.file_path) as r:
         if args.cols:
-            reader = reader.option("columns", ",".join(args.cols))
-        df = reader.load(args.file_path)
-        tmp = args.out_path + ".spark-out"
-        df.coalesce(1).write.option("header", True).mode("overwrite").csv(tmp)
-        (part,) = glob.glob(os.path.join(tmp, "part-*.csv"))
-        shutil.move(part, args.out_path)
-        shutil.rmtree(tmp, ignore_errors=True)
-    finally:
-        if owned:
-            spark.stop()
+            data = r.read_columns(args.cols)
+            names = list(data)
+            rows = zip(*data.values())
+        else:
+            names, rows = r.read_all()
+    with open(args.out_path, "w", newline="", encoding="utf-8") as f:
+        w = _csv.writer(f)
+        w.writerow(names)
+        w.writerows(rows)
 
 
 def _column_compression(groups, j: int):
@@ -334,19 +278,14 @@ def main(argv=None) -> int:
     c2s.add_argument("csv_path")
     c2s.add_argument("out_path")
     c2s.add_argument("--compression-level", type=int, default=6)
-    c2s.add_argument("--single-file", action="store_true", default=True)
-    c2s.add_argument("--dataset", dest="single_file", action="store_false",
-                     help="write a directory of per-partition SCBF files instead of one file")
-    c2s.add_argument("--local", action="store_true", help="pure-Python codec, no Spark")
     c2s.add_argument("--compat-inference", action="store_true",
-                     help="reference-compatible first-non-empty-value type inference (--local only)")
+                     help="reference-compatible first-non-empty-value type inference")
     c2s.set_defaults(fn=csv_to_custom)
 
     s2c = sub.add_parser("custom_to_csv", help="SCBF → CSV, optionally projecting columns")
     s2c.add_argument("file_path")
     s2c.add_argument("out_path")
     s2c.add_argument("--cols", nargs="+", default=None)
-    s2c.add_argument("--local", action="store_true", help="pure-Python codec, no Spark")
     s2c.set_defaults(fn=custom_to_csv)
 
     ins = sub.add_parser("inspect", help="print schema, row count and per-column compression (metadata-only read)")

@@ -72,7 +72,7 @@ def compact(
     for f in base:
         leaves.setdefault(os.path.dirname(f), []).append(f)
     job_name = f".job-{uuid.uuid4().hex[:12]}"
-    added = []
+    moves = []
     for d, files in sorted(leaves.items()):
         version = max(_version(p) for p in files)
         rel = ",".join(os.path.basename(p) for p in files)
@@ -102,15 +102,13 @@ def compact(
                 raise ValueError("rows_per_group requires a v2 dataset")
             w = w.option("rows_per_group", str(rows_per_group))
         w.save(os.path.join(d, job_name))
-        dataset_log.begin(path)  # parts moved in stay invisible until the commit
-        for p in dataset_log.current_files(os.path.join(d, job_name)):
-            added.append(os.path.join(d, os.path.basename(p)))
-            os.rename(p, added[-1])
+        moves += [
+            (p, os.path.join(d, os.path.basename(p)))
+            for p in dataset_log.current_files(os.path.join(d, job_name))
+        ]
 
     if base:
-        dataset_log.commit(path, added, base)
-    for p in base:
-        os.unlink(p)
+        dataset_log.publish(path, moves, base)
     for d in leaves:
         shutil.rmtree(os.path.join(d, job_name), ignore_errors=True)
-    return {"dirs": len(leaves), "files_before": len(base), "files_after": len(added)}
+    return {"dirs": len(leaves), "files_before": len(base), "files_after": len(moves)}

@@ -161,18 +161,12 @@ def _cow_rewrite(
         parts = [os.path.join(job, f"part-{uuid.uuid4().hex[:12]}.scbf")]
         codec_v2.write_arrow_table(parts[0], spark.createDataFrame([], schema).toArrow())
 
-    dataset_log.begin(dest)
-    added = [os.path.join(dest, os.path.basename(p)) for p in parts]
-    for p, final in zip(parts, added):
-        os.rename(p, final)
-    if out_path is not None:
+    if out_path is not None:  # carried over as copies, staged beside the parts
         for p in untouched:
-            added.append(os.path.join(dest, os.path.basename(p)))
-            shutil.copy2(p, added[-1])
-    removed = touched if out_path is None else []
-    dataset_log.commit(dest, added, removed)
-    for p in removed:
-        os.unlink(p)
+            parts.append(os.path.join(job, os.path.basename(p)))
+            shutil.copy2(p, parts[-1])
+    moves = [(p, os.path.join(dest, os.path.basename(p))) for p in parts]
+    dataset_log.publish(dest, moves, touched if out_path is None else ())
     shutil.rmtree(job, ignore_errors=True)
     return stats
 

@@ -160,9 +160,7 @@ def rollback(path: str, snapshot) -> dict:
     root = os.path.abspath(path)
     keep = set(snapshot_files(path, snapshot))  # raises if any are missing
     extras = [f for f in dataset_log.current_files(root) if f not in keep]
-    dataset_log.commit(root, keep, extras)
-    for f in extras:
-        os.unlink(f)
+    dataset_log.publish(root, remove=extras, add=keep)
     return {"kept": len(keep), "deleted": len(extras)}
 
 

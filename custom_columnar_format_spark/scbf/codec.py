@@ -9,8 +9,8 @@ types: int32 (code 1), float64 (code 2), utf8 (code 3, prefix-sum u32 offsets
 Write entry points:
 
 - ``write_arrow_table(path, table)``: a ``pyarrow.Table`` (the Spark writer,
-  and ``cli csv_to_custom --local``, which alone passes ``workers`` to
-  compress the blocks on threads);
+  and ``cli csv_to_custom``, which alone passes ``workers`` to compress the
+  blocks on threads);
 - ``write_table_path(path, names, type_codes, columns)``: Python value lists,
   the reference's list API, kept as the reference and for list callers; the
   lists become Arrow arrays so both go through the one Arrow → raw-block

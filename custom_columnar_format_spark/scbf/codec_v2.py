@@ -372,13 +372,6 @@ def _stats_of(values: np.ndarray, type_name: str, valid: Optional[np.ndarray]) -
     vals = values if valid is None else values[valid]
     if vals.size == 0:
         return None
-    if type_name == "utf8":
-        mn, mx = min(vals), max(vals)
-        mx_t = _trunc_max(str(mx))
-        st = {"min": _trunc_min(str(mn))}
-        if mx_t is not None:
-            st["max"] = mx_t
-        return st
     if type_name == "bool":
         return {"min": bool(vals.min()), "max": bool(vals.max())}
     mn, mx = vals.min(), vals.max()

@@ -12,8 +12,8 @@ Two modes:
   if every value parses as float, else utf8. The CLI's default mode.
 
 The list functions (``infer_full``, ``infer_compat``, ``parse_column``) are
-the reference semantics and the fallback. ``cli csv_to_custom --local``
-runs their Arrow-column forms (``infer_full_arrow``, ``infer_compat_arrow``,
+the reference semantics and the fallback. ``cli csv_to_custom`` runs
+their Arrow-column forms (``infer_full_arrow``, ``infer_compat_arrow``,
 ``parse_arrow``), which return the same type codes, values and errors
 without a Python object per cell:
 

@@ -12,15 +12,15 @@ a stale rewrite fails loudly instead of dropping or resurrecting rows. This
 is the commit log of Delta Lake (VLDB 2020) without checkpoints: each
 version is a full list, so there is nothing to replay.
 
-Every change to a dataset's file set goes through ``commit``. New files are
-moved beside the data first, where no version names them yet, and removed
-files are unlinked only after the commit. A crash at any step therefore
-leaves readers the old or the new file set, never a mix; ``vacuum`` deletes
-what the crash left behind.
+Every change to a dataset's file set goes through ``publish``. New files
+are moved beside the data first, where no version names them yet, and
+removed files are unlinked only after the commit. A crash at any step
+therefore leaves readers the old or the new file set, never a mix;
+``vacuum`` deletes what the crash left behind.
 
 A directory without ``_scbf_log/`` (written by the codecs directly, or
-before the log existed) is listed by a recursive ``*.scbf`` glob. ``begin``
-pins that listing as version 0 before a writer moves any file in.
+before the log existed) is listed by a recursive ``*.scbf`` glob. ``publish``
+pins that listing as version 0 before it moves any file in.
 """
 
 from __future__ import annotations
@@ -70,15 +70,6 @@ def current_files(root: str) -> list[str]:
     return [os.path.join(root, p) for p in _latest(root)[1]]
 
 
-def begin(root: str) -> list[str]:
-    """``current_files``, after pinning a log-less listing as version 0 so
-    that the files a writer moves in stay invisible until its ``commit``."""
-    version, files = _latest(root)
-    if version < 0:
-        commit(root)
-    return [os.path.join(root, p) for p in files]
-
-
 def commit(root: str, add=(), remove=()) -> int:
     """Publish the next version: the current files minus ``remove`` plus
     ``add`` (paths under ``root``). Returns the new version number."""
@@ -106,3 +97,18 @@ def commit(root: str, add=(), remove=()) -> int:
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
+
+
+def publish(root: str, moves=(), remove=(), add=()) -> None:
+    """Change ``root``'s file set in one version: move each ``(src, dst)``
+    of ``moves`` in beside the data, ``commit`` the moved files and ``add``
+    (files already in place) with ``remove`` taken out, then unlink what
+    was removed. A log-less listing is pinned as version 0 first, so that
+    the moved files stay invisible until the commit."""
+    if _latest(root)[0] < 0:
+        commit(root)
+    for src, dst in moves:
+        os.replace(src, dst)
+    commit(root, [dst for _src, dst in moves] + list(add), remove)
+    for f in remove:
+        os.unlink(f)

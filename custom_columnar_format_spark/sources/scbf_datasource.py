@@ -343,7 +343,6 @@ class ScbfReader(DataSourceReader):
         # ``DataSource.schema()`` (Spark enforces arity) — the ``columns``
         # projection option is therefore applied in ``schema()``, and here we
         # simply read whatever columns that schema carries.
-        self.columns: List[str] = [f.name for f in schema.fields]
         self.verify_crc = options.get("verify_crc", "true").lower() != "false"
         self.file_skipping = options.get("file_skipping", "true").lower() != "false"
         self.parallelism = parallelism
@@ -594,19 +593,8 @@ class ScbfWriter(DataSourceArrowWriter):
         return ScbfCommitMessage(files=tuple(files), rows=table.num_rows)
 
     def commit(self, messages):
-        self._publish(_task_files(messages), lambda _f: self.overwrite)
-
-    def _publish(self, renames, doomed) -> None:
-        """Rename each (tmp, final) pair, then commit the final names in one
-        log version that also removes every current file ``doomed`` picks,
-        then unlink the removed files."""
-        base = dataset_log.begin(self.path)
-        for tmp, final in renames:
-            os.replace(tmp, final)
-        removed = [f for f in base if doomed(f)]
-        dataset_log.commit(self.path, [final for _tmp, final in renames], removed)
-        for f in removed:
-            os.unlink(f)
+        doomed = dataset_log.current_files(self.path) if self.overwrite else ()
+        dataset_log.publish(self.path, _task_files(messages), doomed)
 
     def abort(self, messages):
         for tmp, _final in _task_files(messages):
@@ -639,7 +627,6 @@ class ScbfStreamReader(DataSourceStreamReader):
         if self.path is None:
             raise ValueError("scbf readStream requires a path: .load('/path/to/data')")
         self.schema = schema
-        self.columns: List[str] = [f.name for f in schema.fields]
         self.verify_crc = options.get("verify_crc", "true").lower() != "false"
         self.parallelism = parallelism
 
@@ -718,9 +705,10 @@ class ScbfStreamWriter(DataSourceStreamArrowWriter):
 
     def commit(self, messages, batchId: int) -> None:
         prefix = f"part-b{batchId:06d}-r{self.run_id}-"
-        self._inner._publish(
+        dataset_log.publish(
+            self.path,
             [(tmp, self._batch_final(final, batchId)) for tmp, final in _task_files(messages)],
-            lambda f: os.path.basename(f).startswith(prefix),
+            [f for f in dataset_log.current_files(self.path) if os.path.basename(f).startswith(prefix)],
         )
 
     def abort(self, messages, batchId: int) -> None:

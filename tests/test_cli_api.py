@@ -24,8 +24,8 @@ def sample_csv(tmp_path):
 def test_cli_local_roundtrip(sample_csv, tmp_path):
     scbf = str(tmp_path / "out.scbf")
     out_csv = str(tmp_path / "out.csv")
-    assert cli_main(["csv_to_custom", sample_csv, scbf, "--local"]) == 0
-    assert cli_main(["custom_to_csv", scbf, out_csv, "--local"]) == 0
+    assert cli_main(["csv_to_custom", sample_csv, scbf]) == 0
+    assert cli_main(["custom_to_csv", scbf, out_csv]) == 0
     with open(out_csv) as f:
         rows = list(csv.reader(f))
     assert rows[0] == ["id", "score", "name"]
@@ -35,8 +35,8 @@ def test_cli_local_roundtrip(sample_csv, tmp_path):
 def test_cli_selective_columns(sample_csv, tmp_path):
     scbf = str(tmp_path / "out.scbf")
     out_csv = str(tmp_path / "sel.csv")
-    cli_main(["csv_to_custom", sample_csv, scbf, "--local"])
-    cli_main(["custom_to_csv", scbf, out_csv, "--local", "--cols", "name", "id"])
+    cli_main(["csv_to_custom", sample_csv, scbf])
+    cli_main(["custom_to_csv", scbf, out_csv, "--cols", "name", "id"])
     with open(out_csv) as f:
         rows = list(csv.reader(f))
     assert rows[0] == ["name", "id"]  # request order preserved
@@ -50,13 +50,13 @@ def test_cli_compat_inference(tmp_path):
     p = tmp_path / "mix.csv"
     p.write_text("x\n1\n2\n")
     scbf = str(tmp_path / "mix.scbf")
-    cli_main(["csv_to_custom", str(p), scbf, "--local", "--compat-inference"])
+    cli_main(["csv_to_custom", str(p), scbf, "--compat-inference"])
     assert SCBFReader(scbf).schema() == {"x": "int32"}
 
 
 def test_reader_class_api(sample_csv, tmp_path):
     scbf = str(tmp_path / "r.scbf")
-    cli_main(["csv_to_custom", sample_csv, scbf, "--local"])
+    cli_main(["csv_to_custom", sample_csv, scbf])
     r = SCBFReader(scbf)
     assert r.list_columns() == ["id", "score", "name"]
     assert r.num_rows == 3
@@ -75,7 +75,7 @@ def test_reader_class_api(sample_csv, tmp_path):
 
 def test_reader_to_spark(spark, sample_csv, tmp_path):
     scbf = str(tmp_path / "s.scbf")
-    cli_main(["csv_to_custom", sample_csv, scbf, "--local"])
+    cli_main(["csv_to_custom", sample_csv, scbf])
     df = SCBFReader(scbf).to_spark(spark, columns=["id", "score"])
     assert df.schema.fieldNames() == ["id", "score"]
     assert df.count() == 3
@@ -148,7 +148,7 @@ def test_reader_class_api_v2(tmp_path):
 
 
 def test_cli_local_export_reads_v2(tmp_path):
-    """``custom_to_csv --local`` reads v2 files (nulls become empty cells),
+    """``custom_to_csv`` reads v2 files (nulls become empty cells),
     whole or projected, like ``inspect`` does."""
     import pyarrow as pa
 
@@ -158,10 +158,10 @@ def test_cli_local_export_reads_v2(tmp_path):
     t = pa.table({"id": pa.array([1, None, 3], type=pa.int64()), "name": ["a", "b", None]})
     codec_v2.write_arrow_table(p, t)
     out_csv = str(tmp_path / "out.csv")
-    assert cli_main(["custom_to_csv", p, out_csv, "--local"]) == 0
+    assert cli_main(["custom_to_csv", p, out_csv]) == 0
     with open(out_csv) as f:
         assert list(csv.reader(f)) == [["id", "name"], ["1", "a"], ["", "b"], ["3", ""]]
-    assert cli_main(["custom_to_csv", p, out_csv, "--local", "--cols", "name", "id"]) == 0
+    assert cli_main(["custom_to_csv", p, out_csv, "--cols", "name", "id"]) == 0
     with open(out_csv) as f:
         assert list(csv.reader(f)) == [["name", "id"], ["a", "1"], ["b", ""], ["", "3"]]
 
@@ -171,7 +171,7 @@ def test_cli_inspect_head_preview(sample_csv, tmp_path, capsys):
     (reference reader.py:164-198: first-N-rows preview, or per-column
     first-N values with --cols) — pure codec path, no Spark session."""
     scbf = str(tmp_path / "out.scbf")
-    cli_main(["csv_to_custom", sample_csv, scbf, "--local"])
+    cli_main(["csv_to_custom", sample_csv, scbf])
 
     assert cli_main(["inspect", scbf, "--head", "2"]) == 0
     out = capsys.readouterr().out
@@ -314,7 +314,7 @@ def _csv_to_local(tmp_path, body: bytes):
     src = tmp_path / "in.csv"
     src.write_bytes(body)
     out = str(tmp_path / "out.scbf")
-    cli_main(["csv_to_custom", str(src), out, "--local"])
+    cli_main(["csv_to_custom", str(src), out])
     return out
 
 
@@ -364,6 +364,84 @@ def test_cli_local_drops_utf8_bom(tmp_path):
     out = _csv_to_local(tmp_path, "\ufeffid,name\n1,a\n2,b\n".encode("utf-8"))
     assert SCBFReader(out).schema() == {"id": "int32", "name": "utf8"}
     out_csv = str(tmp_path / "ids.csv")
-    assert cli_main(["custom_to_csv", out, out_csv, "--local", "--cols", "id"]) == 0
+    assert cli_main(["custom_to_csv", out, out_csv, "--cols", "id"]) == 0
     with open(out_csv, encoding="utf-8") as f:
         assert list(csv.reader(f)) == [["id"], ["1"], ["2"]]
+
+
+# -- one conversion path: the codec, never a Spark session ----------------------
+
+EMPTY_CELL_CSV = "id,name,score\n1,alice,1.5\n2,,2.5\n3,bob,3.5\n"
+
+
+def test_cli_default_roundtrips_empty_text_cell(tmp_path):
+    """An empty text cell is ``''``, not a null the format cannot store:
+    the default commands convert it and write it back as an empty cell."""
+    src = tmp_path / "in.csv"
+    src.write_text(EMPTY_CELL_CSV)
+    scbf, out_csv = str(tmp_path / "out.scbf"), str(tmp_path / "out.csv")
+    assert cli_main(["csv_to_custom", str(src), scbf]) == 0
+    assert SCBFReader(scbf).read_columns(["name"]) == {"name": ["alice", "", "bob"]}
+    assert cli_main(["custom_to_csv", scbf, out_csv]) == 0
+    with open(out_csv, newline="") as f:
+        assert f.read().replace("\r\n", "\n") == EMPTY_CELL_CSV
+
+
+def test_cli_default_widens_int_beyond_int32(tmp_path):
+    """An integer column with a value past int32 widens to float64 instead
+    of overflowing a cast."""
+    src = tmp_path / "in.csv"
+    src.write_text("id,name\n1,a\n3000000000,b\n")
+    scbf = str(tmp_path / "out.scbf")
+    assert cli_main(["csv_to_custom", str(src), scbf]) == 0
+    r = SCBFReader(scbf)
+    assert r.schema() == {"id": "float64", "name": "utf8"}
+    assert r.read_columns(["id"]) == {"id": [1.0, 3e9]}
+
+
+def test_cli_conversions_never_start_spark(sample_csv, tmp_path, monkeypatch):
+    from custom_columnar_format_spark import cli
+
+    def no_spark(*_a, **_k):
+        raise AssertionError("a conversion asked for a Spark session")
+
+    monkeypatch.setattr(cli, "_get_spark", no_spark)
+    scbf, out_csv = str(tmp_path / "out.scbf"), str(tmp_path / "out.csv")
+    assert cli_main(["csv_to_custom", sample_csv, scbf, "--compat-inference",
+                     "--compression-level", "1"]) == 0
+    assert cli_main(["custom_to_csv", scbf, out_csv, "--cols", "name", "id"]) == 0
+    with open(out_csv) as f:
+        assert list(csv.reader(f))[:2] == [["name", "id"], ["alpha", "1"]]
+    assert cli_main(["csv_to_custom", sample_csv, scbf]) == 0
+    assert cli_main(["custom_to_csv", scbf, out_csv]) == 0
+    with open(out_csv) as f:
+        assert list(csv.reader(f))[1] == ["1", "1.5", "alpha"]
+
+
+def test_cli_conversions_never_import_pyspark(sample_csv, tmp_path):
+    """Both conversions run in a process that never imports pyspark."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        "from custom_columnar_format_spark.cli import main\n"
+        "main(['csv_to_custom', sys.argv[1], sys.argv[2]])\n"
+        "main(['custom_to_csv', sys.argv[2], sys.argv[3], '--cols', 'id'])\n"
+        "print(sorted(m for m in sys.modules if m.split('.')[0] == 'pyspark'))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script, sample_csv, str(tmp_path / "o.scbf"), str(tmp_path / "o.csv")],
+        cwd=repo, capture_output=True, text=True, check=True,
+    ).stdout
+    assert out.strip() == "[]"
+    with open(tmp_path / "o.csv") as f:
+        assert list(csv.reader(f)) == [["id"], ["1"], ["2"], ["3"]]
+
+
+def test_cli_custom_to_csv_directory_names_dataframe_api(tmp_path):
+    from custom_columnar_format_spark.scbf.codec import ScbfError
+
+    with pytest.raises(ScbfError, match=r'spark\.read\.format\("scbf"\)\.load\(dir\)'):
+        cli_main(["custom_to_csv", str(tmp_path), str(tmp_path / "out.csv")])
