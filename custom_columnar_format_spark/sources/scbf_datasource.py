@@ -355,9 +355,10 @@ class ScbfReader(DataSourceReader):
         return filters  # Spark re-applies everything; stats only skip files
 
     def partitions(self) -> Sequence[InputPartition]:
-        # Lifecycle note: every planning cycle runs in a fresh Python worker
-        # with a fresh reader (pushFilters → partitions in one shot), so
-        # self._filters is always this plan's filters. HOWEVER, the JVM's
+        # Lifecycle note: Spark reuses the planner's Python worker process,
+        # but every planning cycle unpickles a fresh reader in it
+        # (pushFilters → partitions in one shot), so self._filters is
+        # always this plan's filters. HOWEVER, the JVM's
         # PythonDataSourceV2 caches the resulting readInfo per relation: a
         # later FILTERLESS query on the same DataFrame object reuses the
         # previous query's pruned partition list (upstream limitation of

@@ -1,4 +1,4 @@
-"""``csv_to_custom --local`` against the list pipeline it replaced.
+"""``csv_to_custom`` against the list pipeline it replaced.
 
 The conversion parses the CSV into Arrow string columns and infers and
 converts them with ``scbf.inference``'s Arrow-column forms. The list
@@ -164,7 +164,7 @@ def test_csv_to_custom_matches_list_pipeline(tmp_path_factory, table, compat):
         want = _sha(tmp / "list.scbf")
     except (ScbfError, OverflowError):
         want = None
-    args = argparse.Namespace(csv_path=src, out_path=str(tmp / "arrow.scbf"), local=True,
+    args = argparse.Namespace(csv_path=src, out_path=str(tmp / "arrow.scbf"),
                               compat_inference=compat, compression_level=6)
     if want is None:
         with pytest.raises(ScbfError):
